@@ -2,7 +2,7 @@ package graft.ml
 
 import graft.ops.Relational
 import graft.sources.Tables
-import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
+import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
 import org.apache.spark.ml.feature.{Imputer, StandardScaler, VectorAssembler}
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
@@ -25,8 +25,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale: every stage is a distributed MLlib estimator — Imputer is a
   * partial+final mean aggregate, StandardScaler/LogisticRegression fit
-  * via treeAggregate over executors. Nothing here collects the data to
-  * the driver, so the same code trains on 999 rows or 10^9.
+  * via treeAggregate over executors, and the split sides that [[train]]
+  * persists stay on the executors (memory, spilling to disk). Nothing
+  * here collects the data to the driver, so the same code trains on 999
+  * rows or 10^9.
   */
 object LoanPipeline {
 
@@ -93,41 +95,46 @@ object LoanPipeline {
             fitPrepOnTrainOnly: Boolean = false): LoanModelBundle = {
     val df = Tables.loan(spark, path).cache()
     try {
-      val bundle =
-        if (!fitPrepOnTrainOnly) {
-          val prep = new Pipeline().setStages(preprocessingStages(withMean)).fit(df)
-          val transformed = prep.transform(df)
-          val Array(train, test) = transformed.randomSplit(Array(0.8, 0.2), seed)
-          val lrModel = logisticRegression().fit(train)
-          finish(prep, lrModel, train, test, df)
-        } else {
-          val Array(trainRaw, testRaw) = df.randomSplit(Array(0.8, 0.2), seed)
-          val prep = new Pipeline().setStages(preprocessingStages(withMean)).fit(trainRaw)
-          val train = prep.transform(trainRaw)
-          val test = prep.transform(testRaw)
-          val lrModel = logisticRegression().fit(train)
-          finish(prep, lrModel, train, test, df)
-        }
-      bundle
+      if (!fitPrepOnTrainOnly) {
+        val prep = new Pipeline().setStages(preprocessingStages(withMean)).fit(df)
+        val Array(train, test) = prep.transform(df).randomSplit(Array(0.8, 0.2), seed)
+        fitAndEvaluate(prep, train, test, df)
+      } else {
+        val Array(trainRaw, testRaw) = df.randomSplit(Array(0.8, 0.2), seed)
+        val prep = new Pipeline().setStages(preprocessingStages(withMean)).fit(trainRaw)
+        fitAndEvaluate(prep, prep.transform(trainRaw), prep.transform(testRaw), df)
+      }
     } finally df.unpersist()
   }
 
-  private def finish(prep: PipelineModel, lrModel: LogisticRegressionModel,
-                     train: DataFrame, test: DataFrame,
-                     fitDf: DataFrame): LoanModelBundle = {
-    // The scored test split is a few hundred rows: single-partition it
-    // so the two evaluators (whose internal sortByKey/aggregate stages
-    // inherit the partition count) don't schedule 32-task stages over
-    // near-empty partitions. Metric values are partitioning-invariant.
-    val scored = lrModel.transform(test).coalesce(1).cache()
-    // Composing the fitted prep + LR into one PipelineModel: stages
-    // that are already Transformers are passed through by Pipeline.fit
-    // (no refit), so this is metadata-only.
-    val full = new Pipeline()
-      .setStages(Array[PipelineStage](prep, lrModel)).fit(fitDf.limit(1))
-    try LoanModelBundle(full, auc(scored), accuracy(scored),
-      train.count(), test.count())
-    finally scored.unpersist()
+  /** LR fit on `train` and evaluation on `test`, the two sides of one
+    * `randomSplit`. */
+  private def fitAndEvaluate(prep: PipelineModel, train: DataFrame, test: DataFrame,
+                             fitDf: DataFrame): LoanModelBundle = {
+    // Each split side is narrowed after the split (so its per-partition
+    // sort and row membership are unchanged) and persisted by the count
+    // that sizes it, since every action on an unpersisted side re-runs
+    // randomSplit's sort over all columns: the train side serves LR's
+    // passes, the scored test side the two evaluators.
+    val needed = Seq(col("scaled_features"), col(Tables.loanLabelCol))
+    val trainSet = train.select(needed: _*).persist()
+    val (trainCount, lrModel) =
+      try (trainSet.count(), logisticRegression().fit(trainSet))
+      finally trainSet.unpersist()
+    val scored = lrModel.transform(test.select(needed: _*)).persist()
+    try {
+      val testCount = scored.count()
+      // The evaluators' sortByKey/aggregate stages inherit the partition
+      // count; one partition of the cached frame concatenates the cached
+      // partitions in split order.
+      val evalInput = scored.coalesce(1)
+      // Composing the fitted prep + LR into one PipelineModel: stages
+      // that are already Transformers are passed through by Pipeline.fit
+      // (no refit), so this is metadata-only.
+      val full = new Pipeline()
+        .setStages(Array[PipelineStage](prep, lrModel)).fit(fitDf.limit(1))
+      LoanModelBundle(full, auc(evalInput), accuracy(evalInput), trainCount, testCount)
+    } finally scored.unpersist()
   }
 
   private val bundleCache =
