@@ -35,7 +35,7 @@ object Bench {
     // turns when executors are memory-tight
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
+    val spark = GraftSession.withSessionConfs(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       // page granularity ∝ memory-per-task — see GraftSession scaladoc

@@ -20,7 +20,7 @@ object Explain {
     // those settings sees what the bench actually executes.
     val executed = sys.env.contains("SPARK_GRAFT_EXPLAIN_EXECUTED")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
+    val spark = GraftSession.withSessionConfs(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -460,7 +460,7 @@ object Faults {
       case Some(list) => list.split(",").map(_.trim).toSeq
       case None => DefaultQueries
     }
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
+    val spark = GraftSession.withSessionConfs(SparkSession.builder()
       // local[N, 4]: local-mode task retries, maxFailures = 4 — the
       // injected first-attempt kill leaves 3 more attempts
       .master(s"local[$cpus, 4]")

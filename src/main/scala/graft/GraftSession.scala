@@ -15,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   *  - 128 MB scan partitions (`files.maxPartitionBytes` default kept
   *    explicit — the knob to raise for wide-row tables);
   *  - UTC session timezone (oracle/cross-engine parity);
+  *  - the join strategy and a codegen cache sized to the engine's
+  *    working set ([[sessionConfs]], shared with every entry point);
   *  - the engine's custom Catalyst functions injected via
   *    [[GraftExtensions]] so `cosine_sim` & co. resolve in SQL.
   */
@@ -47,8 +49,10 @@ object GraftSession {
     java.lang.Long.highestOneBit(clamped)
   }
 
-  /** Join-strategy configuration shared by EVERY engine entry point
-    * (bench/verify/scale-bench/tests) — optimization round 19.
+  /** Configuration shared by EVERY engine entry point
+    * (bench/verify/scale-bench/faults/deep runs/tests, and [[builder]]):
+    * the join strategy (optimization round 19) and the codegen cache
+    * size.
     *
     * Sort-merge was the de-facto strategy for all non-broadcast joins;
     * the q188 final adaptive plan showed each PageRank iteration
@@ -73,20 +77,33 @@ object GraftSession {
     *    keeps sort-merge exactly where it is needed).
     * 64 MB per partition matches the advisory shuffle-partition size
     * AQE already targets, so "build fits a partition" and "partition
-    * is well-sized" are the same budget. */
-  val joinStrategyConfs: Seq[(String, String)] = Seq(
+    * is well-sized" are the same budget.
+    *
+    * Codegen cache. Spark keeps compiled generated classes in one
+    * JVM-wide cache keyed on the generated source, sized by the static
+    * `spark.sql.codegen.cache.maxEntries` (default 100). One q221
+    * curation iteration (init, three `ingestShard`, finalize over
+    * 1,000 docs) needs 203 distinct classes and one loan train+serve
+    * iteration 51, so at 100 entries every curation iteration evicted
+    * its own classes and Janino recompiled 238–272 of them, 2.7–3.4 s
+    * of a 10–11 s iteration on 4 cores. 1000 entries (about 5× the
+    * largest working set) make every repeat call a cache hit: 0
+    * compiles per iteration after the first. The entry is static, so
+    * it sizes the cache only when set before the JVM's first codegen. */
+  val sessionConfs: Seq[(String, String)] = Seq(
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
-      (64L << 20).toString)
+      (64L << 20).toString,
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
-  /** Apply [[joinStrategyConfs]] to a builder. */
-  def withJoinStrategy(b: SparkSession.Builder): SparkSession.Builder =
-    joinStrategyConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  /** Apply [[sessionConfs]] to a builder. */
+  def withSessionConfs(b: SparkSession.Builder): SparkSession.Builder =
+    sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
   def builder(master: String = "local[*]",
               shufflePartitions: Int =
                 Runtime.getRuntime.availableProcessors): SparkSession.Builder =
-    withJoinStrategy(SparkSession.builder()
+    withSessionConfs(SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.adaptive.enabled", "true")

@@ -35,7 +35,7 @@ object KCoreDeepRun {
       s"SPARK_GRAFT_KCORE_TAIL must be <= 56 so the bounded cross-check " +
         s"(rounds = min(64, tail + 8)) can reach the peel depth; got $tail")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
+    val spark = GraftSession.withSessionConfs(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

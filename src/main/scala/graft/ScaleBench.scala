@@ -132,7 +132,7 @@ object ScaleBench {
     }
     val outDir = s"target/tmp/scalebench_x$copies"
 
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
+    val spark = GraftSession.withSessionConfs(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // page granularity ∝ memory-per-task — see GraftSession scaladoc

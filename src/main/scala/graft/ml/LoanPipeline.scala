@@ -69,7 +69,9 @@ object LoanPipeline {
       .setInputCols(Tables.loanImputeCols.toArray)
       .setOutputCols(Tables.loanImputeCols.map(imputedName).toArray)
       .setStrategy("mean"),
-    new VectorAssembler()
+    // A fixed uid: it is compiled into the generated code (the assembler
+    // UDF's struct field names), so a random one recompiles every fit.
+    new VectorAssembler("vecAssembler_loan")
       .setInputCols(assembledCols)
       .setOutputCol("features"),
     new StandardScaler()

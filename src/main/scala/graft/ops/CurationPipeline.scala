@@ -175,6 +175,11 @@ object CurationPipeline {
       val dirPath = new org.apache.hadoop.fs.Path(dirs.manifest)
       val fs = dirPath.getFileSystem(conf)
       fs.mkdirs(dirPath)
+      // a temp left by a crash between close and rename is dead: the
+      // lock we hold serializes every writer of this dir (ADVICE r19)
+      fs.listStatus(dirPath).map(_.getPath)
+        .filter(f => f.getName.startsWith(".") && f.getName.endsWith(".inprogress"))
+        .foreach(fs.delete(_, false))
       // write behind a DOT-PREFIXED temp name, rename to the final
       // name after close (ADVICE r18): a crash mid-write must not
       // leave a torn non-empty part file at a data name —

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * building its own differently-configured session would silently
   * change behavior for everyone else. */
 object TestSession {
-  lazy val spark: SparkSession = GraftSession.withJoinStrategy(
+  lazy val spark: SparkSession = GraftSession.withSessionConfs(
     SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

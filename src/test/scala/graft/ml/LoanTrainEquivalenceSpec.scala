@@ -9,6 +9,7 @@ import graft.SparkSpec
 import graft.sources.Tables
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.LogisticRegression
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
@@ -76,6 +77,13 @@ class LoanTrainEquivalenceSpec extends SparkSpec {
     val e = intercept[Exception](LoanPipeline.train(spark, unlabelled))
     assert(e.getMessage.contains("Labels MUST NOT be Null"), e.getMessage)
     assert(persisted() === before)
+  }
+
+  test("a repeat train on the same input compiles no generated class") {
+    LoanPipeline.train(spark, csvDir)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    LoanPipeline.train(spark, csvDir)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0L)
   }
 }
 

@@ -1,6 +1,9 @@
 package graft.ops
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -180,6 +183,44 @@ class CurationPipelineSpec extends SparkSpec {
       canon(spark.read.parquet(dirs.digests).select($"fp")) ++
       canon(spark.read.parquet(dirs.chunks).select($"ck")) ++
       canon(spark.read.parquet(dirs.shards))
+  }
+
+  test("a repeat of init, three ingests and finalize into fresh dirs " +
+      "compiles no generated class (the codegen cache holds the working set)") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+    val (holdout, evalDocs, sh) = crashFixture
+    def run(): Seq[String] = {
+      val dirs = CurationPipeline.Dirs(tmp("repeat"))
+      CurationPipeline.init(spark, dirs, evalDocs)
+      sh.zipWithIndex.foreach { case (shard, i) =>
+        CurationPipeline.ingestShard(shard, dirs, holdout, s"s$i")
+      }
+      canon(CurationPipeline.finalizePipeline(spark, dirs))
+    }
+    val first = run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run() === first)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0L)
+  }
+
+  test("a manifest append deletes a crashed append's orphaned .inprogress " +
+      "temp, and the orphan's row never counts as committed") {
+    val (holdout, evalDocs, sh) = crashFixture
+    val dirs = CurationPipeline.Dirs(tmp("orphan"))
+    CurationPipeline.init(spark, dirs, evalDocs)
+    CurationPipeline.ingestShard(sh(0), dirs, holdout, "s0")
+    // a crash between the temp's close and its rename leaves a complete
+    // manifest file, here one committing "ghost", under the temp name
+    val ghost = tmp("ghost")
+    Seq("ghost").toDF("shard_id").coalesce(1).write.mode("overwrite").parquet(ghost)
+    val part = new java.io.File(ghost).listFiles().find(_.getName.startsWith("part-")).get
+    val orphan = Paths.get(dirs.manifest, ".part-x.snappy.parquet.inprogress")
+    Files.copy(part.toPath, orphan)
+    val before = CurationPipeline.committedShards(spark, dirs)
+    assert(before === Set("s0"))
+    CurationPipeline.ingestShard(sh(1), dirs, holdout, "s1")
+    assert(!Files.exists(orphan))
+    assert(CurationPipeline.committedShards(spark, dirs) === before + "s1")
   }
 
   test("crash between ANY two durable ingest writes + whole-shard " +
