@@ -48,13 +48,17 @@ object Curation {
     decontaminateAgainstGrams(train,
       distinctGrams(evalDocs, n).select("g").distinct(), n, threshold)
 
-  /** Per-doc distinct word n-grams — the shared gram projection of the
-    * decontamination family. */
+  /** Per-doc distinct word n-grams (no row for a doc shorter than n
+    * tokens). */
   private def distinctGrams(df: DataFrame, n: Int): DataFrame = df
     .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
-    .filter(size(col("ts")) >= n)
-    .select(col("doc_id"),
-      explode(array_distinct(TextAnalysis.wordNgrams(col("ts"), n))).as("g"))
+    .select(col("doc_id"), explode(gramSet(col("ts"), n)).as("g"))
+
+  /** The distinct word n-grams of a token array, NULL when it is
+    * shorter than n tokens (it carries no n-gram) — the shared gram
+    * projection of the decontamination family. */
+  private def gramSet(ts: Column, n: Int): Column =
+    when(size(ts) >= n, array_distinct(TextAnalysis.wordNgrams(ts, n)))
 
   /** [[decontaminate]] against a PRECOMPUTED distinct-gram table (one
     * `g` string column) — the incremental-pipeline form: a benchmark
@@ -63,17 +67,47 @@ object Curation {
     * against it without re-reading the eval docs. Same plan as the
     * one-shot path (the registry broadcasts; at real benchmark sizes —
     * millions of grams, not corpus-sized — that broadcast is exactly
-    * what the one-shot path builds anyway). */
+    * what the one-shot path builds anyway).
+    *
+    * DISTINCT-INPUT CONTRACT: `evalGrams` holds each gram at most once
+    * — a repeated gram would fan a document's gram row out in the join
+    * and inflate its n_grams and n_hit. Both callers pass a distinct
+    * set ([[decontaminate]] dedups the eval grams;
+    * [[writeEvalGramSidecar]] writes the registry distinct), so no
+    * per-call distinct (an extra aggregation over the registry on
+    * every shard) runs here. */
   def decontaminateAgainstGrams(train: DataFrame, evalGrams: DataFrame,
-      n: Int = 8, threshold: Double = 0.05): DataFrame = {
-    val grams = broadcast(
-      evalGrams.select("g").distinct().withColumn("hit", lit(1L)))
-    distinctGrams(train, n)
+      n: Int = 8, threshold: Double = 0.05): DataFrame =
+    contaminationFlags(train.select(col("doc_id"), col("text")), evalGrams,
+      n, threshold)
+      .filter(col("n_grams") > 0)
+
+  /** [[decontaminateAgainstGrams]] for EVERY row of `train` (`doc_id`,
+    * `text`, one row per doc_id; any other column rides along
+    * unchanged, `text` is dropped): documents shorter than n tokens get n_grams = 0 and NULL
+    * contamination/contaminated instead of no row. Same distinct-input
+    * contract. One explode, one broadcast join and one aggregation on
+    * doc_id — which needs no exchange when `train` is already
+    * partitioned on doc_id, so a caller can run it over an upstream
+    * per-doc aggregation and keep that aggregation's columns without
+    * joining the flags back ([[graft.ops.CurationPipeline]]'s decide
+    * pass). */
+  private[graft] def contaminationFlags(train: DataFrame,
+      evalGrams: DataFrame, n: Int, threshold: Double): DataFrame = {
+    val rest = train.columns.toSeq.filterNot(c => c == "doc_id" || c == "text")
+    val grams = broadcast(evalGrams.select("g").withColumn("hit", lit(1L)))
+    train
+      .select(Seq(col("doc_id"), TextAnalysis.tokens(col("text")).as("__ts")) ++
+        rest.map(col): _*)
+      .select(Seq(col("doc_id"), explode_outer(gramSet(col("__ts"), n)).as("g")) ++
+        rest.map(col): _*)
       .join(grams, Seq("g"), "left")
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("contamination", col("n_hit").cast("double") / col("n_grams"))
+      .agg(count(col("g")).as("n_grams"),
+        (sum(coalesce(col("hit"), lit(0L))).as("n_hit") +:
+          rest.map(c => any_value(col(c)).as(c))): _*)
+      .withColumn("contamination", when(col("n_grams") > 0,
+        col("n_hit").cast("double") / col("n_grams")))
       .withColumn("contaminated", col("contamination") >= threshold)
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -49,8 +49,12 @@ import org.apache.spark.sql.functions._
   * Scale shape per shard: sidecar IO ∝ distinct digests/chunk keys
   * (32-byte hashes, never text) + ONE d²-decimal Gram row; every
   * membership check is a hashed anti-join AQE can broadcast or
-  * bloom-prune; nothing pairs documents. Single-writer per pipeline
-  * dir, like every sidecar family.
+  * bloom-prune; nothing pairs documents. The shard lineage is read
+  * once, and stages 1–3 are one linear plan with three shuffles (on
+  * the digest, on the chunk key, on doc_id — stage 3 reuses the last)
+  * and no join back; an ingest is five SQL executions and no
+  * schema-inference job ([[ingestShardSteps]]). Single-writer per
+  * pipeline dir, like every sidecar family.
   *
   * OPERATIONAL CONTRACT (round 16): ingest is crash-replay safe —
   * decide-from-reads (own-tag rows excluded), sink the survivor
@@ -136,76 +140,36 @@ object CurationPipeline {
     // rewrite can crash with `_temporary` task files on disk — both
     // must stay invisible here or every later ingest throws on a torn
     // footer.
-    for (f <- graft.sources.Sinks.listDataFiles(fs, p)) {
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          f.getPath)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          out += g.getString("shard_id", 0)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
+    for (f <- graft.sources.Sinks.listDataFiles(fs, p))
+      out ++= graft.sources.Sinks.readParquetRows(spark, f.getPath)._2
+        .map(_.getString("shard_id", 0))
     out.toSet
   }
 
-  /** Parquet schema of one manifest row — matches what Spark writes
-    * for a non-nullable StringType column, so manifest dirs stay a
-    * single consistent schema whether a file came from this
-    * driver-side appender or from [[graft.sources.Sinks
-    * .compactParquetDir]]'s Spark rewrite ([[retractShard]]). */
-  private val ManifestSchema =
-    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message spark_schema { required binary shard_id (UTF8); }")
+  /** Schema of one manifest row — a non-nullable string, what Spark
+    * writes for the same column, so manifest dirs stay a single
+    * consistent schema whether a file came from this driver-side
+    * appender or from [[graft.sources.Sinks.compactParquetDir]]'s
+    * Spark rewrite ([[retractShard]]). */
+  private val ManifestSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("shard_id",
+      org.apache.spark.sql.types.StringType, nullable = false)))
 
   /** One-row manifest append, DRIVER-SIDE (optimization round 18): a
     * Spark job for one short string paid scheduler + task + committer
     * overhead per ingest; a direct parquet write of the same row is
     * the metadata-sized IO the manifest actually is. Durability and
     * locking are unchanged — same dir, same lock, the file is closed
-    * before the lock releases. */
+    * and renamed into place before the lock releases
+    * ([[graft.sources.Sinks.appendRowDriverSide]]: a torn or orphaned
+    * temp never reaches [[committedShards]], which runs at the start
+    * of EVERY ingest). */
   private def appendManifestRow(spark: SparkSession, dirs: Dirs,
                                 shardId: String): Unit =
     graft.sources.Sinks.withDirLock(spark, dirs.manifest,
       "CurationPipeline.manifest") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dirPath = new org.apache.hadoop.fs.Path(dirs.manifest)
-      val fs = dirPath.getFileSystem(conf)
-      fs.mkdirs(dirPath)
-      // a temp left by a crash between close and rename is dead: the
-      // lock we hold serializes every writer of this dir (ADVICE r19)
-      fs.listStatus(dirPath).map(_.getPath)
-        .filter(f => f.getName.startsWith(".") && f.getName.endsWith(".inprogress"))
-        .foreach(fs.delete(_, false))
-      // write behind a DOT-PREFIXED temp name, rename to the final
-      // name after close (ADVICE r18): a crash mid-write must not
-      // leave a torn non-empty part file at a data name —
-      // [[committedShards]] runs at the start of EVERY ingest and
-      // would throw on its footer permanently. Dot-prefixed files are
-      // invisible to every reader (Spark's and ours), and the local/
-      // HDFS rename is atomic, so readers see the complete file or
-      // nothing.
-      val base = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
-      val tmp = new org.apache.hadoop.fs.Path(dirPath, s".$base.inprogress")
-      val file = new org.apache.hadoop.fs.Path(dirPath, base)
-      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-          .fromPath(tmp, conf))
-        .withType(ManifestSchema)
-        .withCompressionCodec(
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
-      try {
-        val g = new org.apache.parquet.example.data.simple.SimpleGroup(
-          ManifestSchema)
-        g.append("shard_id", shardId)
-        writer.write(g)
-      } finally writer.close()
-      require(fs.rename(tmp, file),
-        s"CurationPipeline.appendManifestRow: rename $tmp -> $file failed")
+      graft.sources.Sinks.appendRowDriverSide(spark, dirs.manifest,
+        ManifestSchema, Row(shardId))
     }
 
   private[graft] def requireShardId(shardId: String): Unit =
@@ -227,7 +191,16 @@ object CurationPipeline {
     *     decisions bit-for-bit (the failure the old state-first order
     *     had: a replay saw its own digests and dropped the shard
     *     forever). Decisions are eagerly materialized before any
-    *     durable write.
+    *     durable write, in two passes: the shard itself (its lineage
+    *     evaluated once; the Gram moments and the row count are
+    *     observed metrics of that same pass), then ONE checkpoint of a
+    *     per-doc decision frame — stage-1 survivors with their digest,
+    *     kept token count, features, final keep flag and newly kept
+    *     chunk keys. The survivor sink and both sidecar appends are
+    *     projections of that checkpoint; the Gram and manifest rows
+    *     are written driver-side; sidecar and registry schemas come
+    *     from parquet footers, not inference jobs. Five SQL
+    *     executions per ingest, which CurationPipelineSpec pins.
     *  3. SINK FIRST — the survivor metadata lands as an OVERWRITE of
     *     this shard's own partition directory (idempotent by
     *     construction; the ordering [[graft.streaming.EventStreams
@@ -279,7 +252,7 @@ object CurationPipeline {
     * PREFIX to simulate a crash between any two writes, then replay
     * the public [[ingestShard]]. Empty list = nothing to do (empty
     * shard, or already committed). Building the list runs the DECIDE
-    * phase (Spark jobs for the eager materializations). */
+    * phase (the two eager materializations). */
   private[graft] def ingestShardSteps(shard: DataFrame, dirs: Dirs,
                                       holdout: Column, shardId: String,
                                       normalize: Column => Column =
@@ -305,66 +278,80 @@ object CurationPipeline {
         "under a FRESH id (the retraction's negated Gram row and " +
         "deletion marker keyed by the old id must stay unambiguous)")
     if (manifest.contains(shardId)) return Nil
-    // Gram moments + shard row count in ONE aggregation, collected
-    // here in the decide phase (optimization round 18): the count
-    // replaces the separate isEmpty probe (empty shards are a no-op —
-    // an n=0 Gram row carries NULL decimal sums, the ADVICE-r14 trap,
-    // and the stage ops would burn jobs appending empty files), and
-    // the collected row replaces the gram write step's second full
-    // evaluation of the shard lineage (scan + feature join +
-    // aggregation). Gram over ALL shard rows incl. holdout — the
-    // probe trains on the raw corpus, the fastText convention q218
-    // documents.
-    val gramFull = LinearProbe.gramAggDf(shard, FeatureDim,
-      extra = Seq(count(lit(1)).as("__rows")))
-    val gramRowFull = gramFull.collect()(0)
-    if (gramRowFull.getAs[Long]("__rows") == 0L) return Nil
-    val gramSchema = org.apache.spark.sql.types.StructType(
-      gramFull.schema.dropRight(1))
-    val gramRow = org.apache.spark.sql.Row.fromSeq(
-      gramRowFull.toSeq.dropRight(1))
+    // the shard lineage (scan + upstream feature join) evaluated ONCE:
+    // materialized with its holdout flag, the Gram moments and the row
+    // count observed in the same pass — in the checkpoint's final
+    // stage, where Spark applies each task's metric update exactly
+    // once (observed inside the decide plan, a recomputed shuffle
+    // stage could count rows twice; the moments must be exact). The
+    // count makes empty shards a no-op (an n=0 Gram row carries NULL
+    // decimal sums, the ADVICE-r14 trap, and the stage ops would burn
+    // jobs appending empty files). Gram over ALL shard rows incl.
+    // holdout — the probe trains on the raw corpus, the fastText
+    // convention q218 documents.
+    val fNames = (0 until FeatureDim).map(i => s"__f$i")
+    val fCols = fNames.map(col)
+    // read back from the checkpoint's own QueryExecution: an
+    // `Observation` object would start the session's observation
+    // manager, which is not serializable, and MLlib summaries that
+    // capture the session would then fail to ship in later jobs
+    val gramCols = LinearProbe.gramAggCols(FeatureDim)
+    val observed = shard
+      .select(Seq(col("doc_id"), col("source"), col("text")) ++ fCols ++
+        Seq(col("__y"), holdout.as("__holdout")): _*)
+      .observe("ingest_moments", count(lit(1)).as("__rows"), gramCols: _*)
+    val rows = observed.localCheckpoint(true)
+    val moments = observed.queryExecution.observedMetrics("ingest_moments")
+    if (moments.getAs[Long]("__rows") == 0L) return Nil
+    // analysis only: the schema the aggregation itself would produce
+    val gramSchema = LinearProbe.gramAggDf(rows, FeatureDim).schema
+    val gramRow = Row.fromSeq(gramSchema.fieldNames.toSeq.map(moments.getAs[Any]))
     // 2. DECIDE — reads only; invisible rows: this shard's OWN tag (a
     // crashed attempt's partial appends) and every RETRACTED shard's
     // tag (O(1) tombstones whose physical rows await the next
-    // cadenced compaction)
+    // cadenced compaction). Stages 1–3 are ONE linear plan over the
+    // materialized shard, ending in ONE eager checkpoint of a per-doc
+    // decision frame; every later write is a projection of it, so
+    // none can re-read a sidecar this ingest appends to.
     val excluded = retractedShards(manifest) + shardId
-    val fCols = (0 until FeatureDim).map(i => col(s"__f$i"))
-    val corpusB = shard.filter(!holdout)
-      .select(Seq(col("doc_id"), col("source"), col("text")) ++ fCols: _*)
+    val carried = Seq("source", "__fp") ++ fNames
     // stage 1: incremental normalized exact dedup (digest sidecar).
     // dropTextCol: the normalized copy exists only to be fingerprinted
-    // — without the drop it doubles stage 1's shuffle/checkpoint bytes
+    // — without the drop it doubles stage 1's shuffle bytes
     val surv1 = Dedup.sidecarSurvivors(
-      corpusB.withColumn("__ntext", normalize(col("text"))),
+      rows.filter(!col("__holdout"))
+        .select(Seq(col("doc_id"), col("source"), col("text"),
+          normalize(col("text")).as("__ntext")) ++ fCols: _*),
       "__ntext", "doc_id", dirs.digests, bloomPrefilter = false,
       excludeBatchIds = excluded, dropTextCol = true)
-    // lazy over the CHECKPOINTED surv1 (optimization round 18): the
-    // distinct runs once, inside the digest-append step's own job —
-    // re-evaluation cannot re-read the sidecar because every input is
-    // already materialized, so a separate eager checkpoint bought
-    // nothing but one more job per ingest
-    val newFps = surv1.filter(col("__fp").isNotNull)
-      .select(col("__fp").as("fp")).distinct()
-    val surv1Clean = surv1.drop("__fp") // __ntext already dropped pre-shuffle
-    // stage 2: incremental duplicated-span removal (chunk-key sidecar)
-    val (spanOut, newCks) = Dedup.spanRemovalDecide(
-      surv1Clean.select(col("doc_id"), col("text")), "text", "doc_id",
-      dirs.chunks, ChunkTokens, excludeBatchIds = excluded)
-    val cleaned = spanOut
-      .select(col("doc_id"), col("clean_text"),
-        (col("n_tokens") - col("removed_tokens")).as("kept_toks"))
-      .filter(col("kept_toks") >= 1L)
-    // stage 3: decontamination of the CLEAN text vs the frozen registry
-    val contam = Curation.decontaminateAgainstGrams(
-        cleaned.select(col("doc_id"), col("clean_text").as("text")),
-        spark.read.parquet(dirs.evalGrams), DecontamN, DecontamThreshold)
-      .select(col("doc_id"), col("contaminated"))
-    val shardOut = cleaned.select(col("doc_id"), col("kept_toks"))
-      .join(contam, Seq("doc_id"), "left")
-      .filter(!coalesce(col("contaminated"), lit(false)))
-      .join(surv1Clean.drop("text"), "doc_id")
-      .select(Seq(col("doc_id"), col("source"), col("kept_toks")) ++ fCols: _*)
+    // stage 2: incremental duplicated-span removal (chunk-key
+    // sidecar); the per-doc columns ride the chunk rows, so no join
+    // brings them back
+    val spans = Dedup.spanRemovalDecide(surv1, "text", "doc_id",
+        dirs.chunks, ChunkTokens, excludeBatchIds = excluded,
+        carry = carried)
+      .select(Seq(col("doc_id"), col("clean_text").as("text"),
+        (col("n_tokens") - col("removed_tokens")).as("kept_toks"),
+        col("__new_cks")) ++ carried.map(col): _*)
+    // stage 3: decontamination of the CLEAN text vs the frozen
+    // registry, over the per-doc aggregation's own partitioning (no
+    // exchange, no join back); docs left with no token are dropped by
+    // the keep flag, as q218 drops them before stage 3
+    val decision = Curation.contaminationFlags(spans,
+        graft.sources.Sinks.readParquet(spark, dirs.evalGrams), DecontamN,
+        DecontamThreshold)
+      .select(Seq(col("doc_id"), col("kept_toks"), col("__fp"),
+        col("__new_cks"),
+        (col("kept_toks") >= 1L && !coalesce(col("contaminated"), lit(false)))
+          .as("__keep")) ++ (col("source") +: fCols): _*)
       .localCheckpoint(true)
+    val shardOut = decision.filter(col("__keep"))
+      .select(Seq(col("doc_id"), col("source"), col("kept_toks")) ++ fCols: _*)
+    // distinct by construction: one rank-1 stage-1 survivor per fp, and
+    // each unseen chunk key kept by exactly one doc
+    val newFps = decision.filter(col("__fp").isNotNull)
+      .select(col("__fp").as("fp"))
+    val newCks = Dedup.newChunkKeys(decision)
     // 3–5. the durable writes, in commit order
     Seq(
       ("sink_survivor_partition", () =>
@@ -380,8 +367,8 @@ object CurationPipeline {
       ("append_chunk_sidecar", () =>
         Dedup.appendChunkKeys(spark, newCks, dirs.chunks,
           batchId = Some(shardId), op = "CurationPipeline.ingestShard")),
-      // the moment row was computed and collected in the decide phase
-      // above — the write is a literal 1-row append
+      // the moment row was observed in the decide phase above — the
+      // write is a literal 1-row driver-side append
       ("append_gram_sidecar", () =>
         LinearProbe.appendGramMomentRow(spark, gramRow, gramSchema,
           dirs.gram, batchId = Some(shardId))),
@@ -608,7 +595,7 @@ object CurationPipeline {
     val theta = LinearProbe.fitFromSidecar(spark, dirs.gram, FeatureDim,
       iters = GdIters)
     val scored = LinearProbe.scoreFp(
-        spark.read.parquet(dirs.shards), FeatureDim, theta)
+        graft.sources.Sinks.readParquet(spark, dirs.shards), FeatureDim, theta)
       .select(col("doc_id"), col("source"), col("kept_toks"), col("score_fp"))
     finalizeStages(scored)
   }

@@ -447,11 +447,19 @@ object Dedup {
 
   /** Shared survivor computation for the incremental-dedup family:
     * anti-join the batch's md5 text fingerprints against the persisted
-    * sidecar, keep the min-id row per fingerprint within the batch,
-    * and eagerly localCheckpoint the result so callers' later actions
-    * re-read materialized survivors instead of re-running the
-    * anti-join against a sidecar that may meanwhile contain this
-    * batch's own fingerprints (which would drop everything).
+    * sidecar and keep the min-id row per fingerprint within the batch
+    * — so the survivors' non-null `__fp` values are DISTINCT by
+    * construction (one rank-1 row per fingerprint).
+    *
+    * CHECKPOINT CONTRACT: the result is LAZY. A caller must
+    * materialize it (eager localCheckpoint) before appending to the
+    * sidecar, so that later actions re-read materialized survivors
+    * instead of re-running the anti-join against a sidecar that
+    * meanwhile contains this batch's own fingerprints (which would
+    * drop everything). [[dedupAgainstSidecar]] and
+    * [[dedupAgainstSidecarTo]] checkpoint it directly; the
+    * [[graft.ops.CurationPipeline]] ingest checkpoints the whole
+    * stage 1–3 decision built on top of it, in one pass.
     *
     * Null text: `md5(null)` is null, which would silently never match
     * the sidecar (non-null-safe join) while the survivor window
@@ -498,7 +506,7 @@ object Dedup {
     val bloom =
       if (bloomPrefilter) loadSidecarBloom(spark, sidecarDir) else None
     def sidecarFps: DataFrame = {
-      val raw = spark.read.parquet(sidecarDir)
+      val raw = graft.sources.Sinks.readParquet(spark, sidecarDir)
       val visible =
         if (excludeBatchIds.nonEmpty &&
             raw.schema.fieldNames.contains("batch_id"))
@@ -534,7 +542,6 @@ object Dedup {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
       .unionByName(withFp.filter(col("__fp").isNull))
-      .localCheckpoint(true)
   }
 
   /** Incremental corpus dedup — the production "new shard vs existing
@@ -577,9 +584,10 @@ object Dedup {
                           batchId: Option[String] = None): DataFrame = {
     val spark = batch.sparkSession
     val survivors = sidecarSurvivors(batch, textCol, idCol, sidecarDir,
-      bloomPrefilter, excludeBatchIds = batchId.toSet)
+      bloomPrefilter, excludeBatchIds = batchId.toSet).localCheckpoint(true)
+    // distinct by construction (one rank-1 survivor per fingerprint)
     val newFps = survivors.filter(col("__fp").isNotNull)
-      .select(col("__fp").as("fp")).distinct()
+      .select(col("__fp").as("fp"))
     appendDigestFps(spark, newFps, sidecarDir, bloomPrefilter, batchId,
       "dedupAgainstSidecar")
     survivors.drop("__fp")
@@ -727,9 +735,11 @@ object Dedup {
     val spark = batch.sparkSession
     val survivors =
       sidecarSurvivors(batch, textCol, idCol, sidecarDir, bloomPrefilter)
+        .localCheckpoint(true)
     survivors.drop("__fp").write.mode("append").parquet(outDir)
+    // distinct by construction (one rank-1 survivor per fingerprint)
     val newFps = survivors.filter(col("__fp").isNotNull)
-      .select(col("__fp").as("fp")).distinct()
+      .select(col("__fp").as("fp"))
     // sidecar (and Bloom companion) append AFTER the sink — a crash
     // between the writes makes a replay re-emit duplicates, never lose
     // documents (see scaladoc)
@@ -1107,21 +1117,28 @@ object Dedup {
       Seq(col(idCol).asc, col("chunk_idx").asc)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__k")).orderBy(order: _*)
-    chunked
+    reassembleKept(chunked
       .withColumn("__k", key)
-      .withColumn("__keep", row_number().over(w) === 1)
+      .withColumn("__keep", row_number().over(w) === 1), idCol)
+  }
+
+  /** The per-doc reassembly of the span-removal family: kept chunks
+    * (`__keep`) concatenated in chunk order, plus exact chunk and token
+    * counts; `extra` aggregate columns are appended after them. */
+  private def reassembleKept(decided: DataFrame, idCol: String,
+                             extra: Column*): DataFrame =
+    decided
       .groupBy(col(idCol))
       .agg(
         concat_ws(" ", transform(
           sort_array(collect_list(
             when(col("__keep"), struct(col("chunk_idx"), col("chunk_text"))))),
           s => s.getField("chunk_text"))).as("clean_text"),
-        count(lit(1)).as("n_chunks"),
-        sum(when(col("__keep"), 1L).otherwise(0L)).as("kept_chunks"),
-        sum(col("chunk_tokens")).as("n_tokens"),
-        sum(when(!col("__keep"), col("chunk_tokens")).otherwise(0L))
-          .as("removed_tokens"))
-  }
+        (Seq(count(lit(1)).as("n_chunks"),
+          sum(when(col("__keep"), 1L).otherwise(0L)).as("kept_chunks"),
+          sum(col("chunk_tokens")).as("n_tokens"),
+          sum(when(!col("__keep"), col("chunk_tokens")).otherwise(0L))
+            .as("removed_tokens")) ++ extra): _*)
 
   /** Incremental [[removeDuplicateSpans]] — the per-shard form of the
     * span-removal rewrite, backed by a persisted CHUNK-KEY sidecar
@@ -1151,22 +1168,23 @@ object Dedup {
     * bloom prunes the batch scan when it is not); the within-batch
     * keep is one window over the chunk key; reassembly one per-doc
     * aggregation. Sidecar rows are 32-byte hex keys — ∝ distinct
-    * chunks, never corpus text. Survivors are eagerly
-    * localCheckpointed BEFORE the key append (the
-    * [[sidecarSurvivors]] re-read trap: a later action re-running the
-    * anti-join against a sidecar that meanwhile contains this batch's
-    * own keys would drop everything). SINGLE-WRITER like every
-    * sidecar: serialize shard ingests per sidecarDir. */
+    * chunks, never corpus text. The decision is eagerly
+    * localCheckpointed BEFORE the key append (the [[sidecarSurvivors]]
+    * re-read trap: a later action re-running the membership join
+    * against a sidecar that meanwhile contains this batch's own keys
+    * would drop everything); the output and the appended keys are
+    * both projections of that one materialization. SINGLE-WRITER like
+    * every sidecar: serialize shard ingests per sidecarDir. */
   def removeDuplicateSpansAgainstSidecar(batch: DataFrame, textCol: String,
                                          idCol: String, sidecarDir: String,
                                          chunkTokens: Int = 50,
                                          batchId: Option[String] = None)
       : DataFrame = {
-    val (out, newKeys) = spanRemovalDecide(batch, textCol, idCol,
-      sidecarDir, chunkTokens, excludeBatchIds = batchId.toSet)
-    appendChunkKeys(batch.sparkSession, newKeys, sidecarDir, batchId,
-      "removeDuplicateSpansAgainstSidecar")
-    out
+    val decided = spanRemovalDecide(batch, textCol, idCol, sidecarDir,
+      chunkTokens, excludeBatchIds = batchId.toSet).localCheckpoint(true)
+    appendChunkKeys(batch.sparkSession, newChunkKeys(decided), sidecarDir,
+      batchId, "removeDuplicateSpansAgainstSidecar")
+    decided.drop("__new_cks")
   }
 
   /** The span-removal DECISION half — all reads, no writes: chunk the
@@ -1174,24 +1192,34 @@ object Dedup {
     * `excludeBatchIds` are invisible — the crash-replay + retraction-
     * tombstone contract of [[sidecarSurvivors]], applied to chunk
     * keys), keep first occurrence per key within the batch,
-    * reassemble. Returns the per-doc output (eagerly materialized)
-    * AND the batch's new distinct keys (a lazy projection of the
-    * eagerly-materialized decision set — it can never re-read the
-    * sidecar), so a caller can order its own durable writes around
-    * the sidecar append (sink-first — the
-    * [[graft.ops.CurationPipeline]] ingest protocol). */
+    * reassemble. Returns one row per doc: [[removeDuplicateSpans]]'s
+    * columns, then `__new_cks` — the keys of the doc's KEPT chunks
+    * that the sidecar lacks, i.e. exactly one row's worth per unseen
+    * key of the batch (the first occurrence), so [[newChunkKeys]] is
+    * distinct by construction — then the `carry` columns (constant
+    * per doc, so any row's value is the doc's).
+    *
+    * CHECKPOINT CONTRACT (the [[sidecarSurvivors]] one): the result is
+    * LAZY; a caller materializes it before the key append and derives
+    * both its output and the keys from that one materialization, so it
+    * can order its own durable writes around the sidecar append
+    * (sink-first — the [[graft.ops.CurationPipeline]] ingest
+    * protocol, which checkpoints its whole stage 1–3 decision at
+    * once). */
   private[graft] def spanRemovalDecide(batch: DataFrame, textCol: String,
                                        idCol: String, sidecarDir: String,
                                        chunkTokens: Int,
-                                       excludeBatchIds: Set[String])
-      : (DataFrame, DataFrame) = {
+                                       excludeBatchIds: Set[String],
+                                       carry: Seq[String] = Nil)
+      : DataFrame = {
     val spark = batch.sparkSession
     val path = new org.apache.hadoop.fs.Path(sidecarDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val chunked = TextAnalysis.chunk(batch, textCol, chunkTokens, 0, idCol)
+    val chunked = TextAnalysis.chunk(batch, textCol, chunkTokens, 0,
+        idCol +: carry: _*)
       .withColumn("__k", md5(col("chunk_text")))
     def sidecarKeys: DataFrame = {
-      val raw = spark.read.parquet(sidecarDir)
+      val raw = graft.sources.Sinks.readParquet(spark, sidecarDir)
       val visible =
         if (excludeBatchIds.nonEmpty &&
             raw.schema.fieldNames.contains("batch_id"))
@@ -1209,31 +1237,18 @@ object Dedup {
         .drop("ck", "__hit")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__k")).orderBy(col(idCol).asc, col("chunk_idx").asc)
-    val decided = withSeen
-      .withColumn("__keep", !col("__seen") && row_number().over(w) === 1)
-      .localCheckpoint(true)
-    val out = decided
-      .groupBy(col(idCol))
-      .agg(
-        concat_ws(" ", transform(
-          sort_array(collect_list(
-            when(col("__keep"), struct(col("chunk_idx"), col("chunk_text"))))),
-          s => s.getField("chunk_text"))).as("clean_text"),
-        count(lit(1)).as("n_chunks"),
-        sum(when(col("__keep"), 1L).otherwise(0L)).as("kept_chunks"),
-        sum(col("chunk_tokens")).as("n_tokens"),
-        sum(when(!col("__keep"), col("chunk_tokens")).otherwise(0L))
-          .as("removed_tokens"))
-      .localCheckpoint(true)
-    // lazy over the CHECKPOINTED decision set (optimization round 18):
-    // the distinct runs once, inside the key-append step's own job —
-    // re-evaluation cannot re-read the sidecar because `decided` is
-    // already materialized, so a separate eager checkpoint bought
-    // nothing but one more job per ingest
-    val newKeys = decided.filter(!col("__seen"))
-      .select(col("__k").as("ck")).distinct()
-    (out, newKeys)
+    reassembleKept(
+      withSeen.withColumn("__keep", !col("__seen") && row_number().over(w) === 1),
+      idCol,
+      collect_list(when(col("__keep"), col("__k"))).as("__new_cks") +:
+        carry.map(c => any_value(col(c)).as(c)): _*)
   }
+
+  /** The batch's new chunk keys (`ck`) from a materialized
+    * [[spanRemovalDecide]] result — one row per key, no distinct
+    * needed. */
+  private[graft] def newChunkKeys(decided: DataFrame): DataFrame =
+    decided.select(explode(col("__new_cks")).as("ck"))
 
   /** The chunk-key sidecar's append half (the [[appendDigestFps]]
     * twin): tagged rows make crash-replayed appends detectable

@@ -105,17 +105,17 @@ object LinearProbe {
   /** The one-row Gram aggregation frame of a [[scaled]] frame —
     * columns n (long), g_i_j for i ≤ j and b_i (DECIMAL(38,0)). This
     * IS the probe's sufficient statistic: additive over row-disjoint
-    * batches, so it is also the sidecar row format.
-    *
-    * `extra` (optimization round 18): additional aggregate columns
-    * appended AFTER the moment columns — lets a caller piggyback a
-    * cheap side-statistic (e.g. `count(1)` as a shard-emptiness
-    * probe) on the one aggregation pass it already pays instead of
-    * running a separate job over the same lineage. Callers that
-    * persist the row must drop the extras first (the sidecar row
-    * format is exactly n + moments). */
-  def gramAggDf(scaledDf: DataFrame, d: Int,
-                extra: Seq[Column] = Nil): DataFrame = {
+    * batches, so it is also the sidecar row format. */
+  def gramAggDf(scaledDf: DataFrame, d: Int): DataFrame = {
+    val cols = gramAggCols(d)
+    scaledDf.agg(cols.head, cols.tail: _*)
+  }
+
+  /** [[gramAggDf]]'s aggregate columns, in its column order — for a
+    * caller that collects the moments as OBSERVED metrics of a pass it
+    * already runs ([[graft.ops.CurationPipeline]]'s shard
+    * materialization) instead of a separate job over the same rows. */
+  private[graft] def gramAggCols(d: Int): Seq[Column] = {
     val dec = "decimal(38,0)"
     val prods = for (i <- 0 until d; j <- i until d) yield
       sum((col(s"__f$i").cast(dec) * col(s"__f$j").cast(dec)).cast(dec))
@@ -126,21 +126,23 @@ object LinearProbe {
     // count(__y), not count(1): rows nulled by [[scaled]]'s validity
     // projection must be excluded from n exactly as the null sums
     // exclude them from every moment
-    scaledDf.agg(count(col("__y")).as("n"), (prods ++ bs ++ extra): _*)
+    count(col("__y")).as("n") +: (prods ++ bs)
   }
 
   /** Append one PRECOMPUTED moment row to the sidecar — the
     * decide-phase twin of [[writeGramSidecar]] (optimization round 18):
-    * callers that already collected the [[gramAggDf]] row during their
+    * callers that already hold the [[gramAggDf]] row from their
     * read-only decide phase (the [[graft.ops.CurationPipeline]] ingest
     * protocol) write the literal row back instead of re-evaluating the
     * full batch lineage (scan + feature join + aggregation) a second
     * time inside the durable-write step. The row/schema must be
-    * exactly [[gramAggDf]]'s output (n + moments, no extras) — the
-    * deterministic decimal recompute guarantee that makes replayed
-    * appends collapsible holds because the collected row IS the
-    * aggregation's output. Same tag/lock discipline as
-    * [[writeGramSidecar]]. */
+    * exactly [[gramAggDf]]'s output — the deterministic decimal
+    * recompute guarantee that makes replayed appends collapsible holds
+    * because the row IS the aggregation's output. Written DRIVER-SIDE
+    * ([[graft.sources.Sinks.appendRowDriverSide]]): the file reads
+    * back with the schema a Spark write of `gramAggDf` plus `batch_id`
+    * produces, without a Spark job for one row. Same tag/lock
+    * discipline as [[writeGramSidecar]]. */
   private[graft] def appendGramMomentRow(
       spark: org.apache.spark.sql.SparkSession,
       row: org.apache.spark.sql.Row,
@@ -150,10 +152,14 @@ object LinearProbe {
       spark, sidecarDir, batchId.isDefined, "writeGramSidecar")
     graft.sources.Sinks.withDirLock(
       spark, sidecarDir, "writeGramSidecar") {
-      batchId.foldLeft(
-          spark.createDataFrame(java.util.List.of(row), schema))(
-          (df, id) => df.withColumn("batch_id", lit(id)))
-        .write.mode("append").parquet(sidecarDir)
+      // the tag is a non-null string column, as `lit(id)` makes it
+      val (taggedRow, taggedSchema) = batchId.fold((row, schema)) { id =>
+        (org.apache.spark.sql.Row.fromSeq(row.toSeq :+ id),
+          schema.add("batch_id", org.apache.spark.sql.types.StringType,
+            nullable = false))
+      }
+      graft.sources.Sinks.appendRowDriverSide(
+        spark, sidecarDir, taggedSchema, taggedRow)
     }
   }
 
@@ -309,13 +315,12 @@ object LinearProbe {
     * collect: one short string per append ever made. */
   def gramBatchIds(spark: org.apache.spark.sql.SparkSession,
                    sidecarDir: String): Seq[String] = {
-    // driver-side projected read (optimization round 18): the sidecar
-    // holds one short row per append ever made, and this probe runs
-    // before every compaction/finalize — a Spark job (scan + distinct
-    // + collect) paid whole-job overhead for KBs of metadata. The
-    // batch_id column is projected out of each footer-checked file;
-    // an untagged sidecar (no batch_id in the schema, fixed at first
-    // append) stays Nil exactly as before.
+    // driver-side read (optimization round 18): the sidecar holds one
+    // short row per append ever made, and this probe runs before every
+    // compaction/finalize — a Spark job (scan + distinct + collect)
+    // paid whole-job overhead for KBs of metadata. An untagged sidecar
+    // (no batch_id in the schema, fixed at first append) stays Nil
+    // exactly as before.
     val p = new org.apache.hadoop.fs.Path(sidecarDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)
@@ -330,11 +335,7 @@ object LinearProbe {
     val files = graft.sources.Sinks.listDataFiles(fs, p)
     var tagged: Option[Boolean] = None
     for (f <- files) {
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          f.getPath, conf))
-      val schema = try fr.getFooter.getFileMetaData.getSchema
-        finally fr.close()
+      val (schema, rows) = graft.sources.Sinks.readParquetRows(spark, f.getPath)
       val hasTag = schema.containsField("batch_id")
       tagged match {
         case None => tagged = Some(hasTag)
@@ -344,24 +345,7 @@ object LinearProbe {
             s"${if (hasTag) "tagged" else "untagged"}) — a sidecar " +
             "carries batch_id from its first append or never")
       }
-      if (hasTag) {
-        val readConf = new org.apache.hadoop.conf.Configuration(conf)
-        readConf.set(
-          org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-          new org.apache.parquet.schema.MessageType("spark_schema",
-            schema.getType(schema.getFieldIndex("batch_id"))).toString)
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            f.getPath)
-          .withConf(readConf).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            out += g.getString("batch_id", 0)
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
+      if (hasTag) out ++= rows.map(_.getString("batch_id", 0))
     }
     out.toSeq
   }
@@ -465,33 +449,21 @@ object LinearProbe {
     // _temporary/dot-prefixed components skipped at EVERY level
     // (ADVICE r18 — crashed Spark appends leave task files under
     // `_temporary/...` whose leaves look like ordinary parts)
-    for (f <- graft.sources.Sinks.listDataFiles(fs, p)) {
-      {
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            f.getPath)
-          .withConf(conf).build()
-        try {
-          var grp = reader.read()
-          while (grp != null) {
-            val schema = grp.getType
-            val tagged = schema.containsField("batch_id")
-            // duplicate-tag collapse: replicas of a replayed append
-            // are bit-identical, so keeping the first seen is exact
-            val skip = tagged && !seen.add(grp.getString("batch_id", 0))
-            if (!skip) {
-              nTotal += grp.getLong("n", 0)
-              (gNames ++ bNames).foreach { name =>
-                // n=0 rows carry NULL moments — skipped exactly as
-                // SQL sum skips nulls
-                if (grp.getFieldRepetitionCount(name) > 0)
-                  sums(name) = sums.getOrElse(name, BigInt(0)) +
-                    decodeUnscaled(grp, name).get
-              }
-            }
-            grp = reader.read()
-          }
-        } finally reader.close()
+    for (f <- graft.sources.Sinks.listDataFiles(fs, p);
+         grp <- graft.sources.Sinks.readParquetRows(spark, f.getPath)._2) {
+      val tagged = grp.getType.containsField("batch_id")
+      // duplicate-tag collapse: replicas of a replayed append are
+      // bit-identical, so keeping the first seen is exact
+      val skip = tagged && !seen.add(grp.getString("batch_id", 0))
+      if (!skip) {
+        nTotal += grp.getLong("n", 0)
+        (gNames ++ bNames).foreach { name =>
+          // n=0 rows carry NULL moments — skipped exactly as SQL sum
+          // skips nulls
+          if (grp.getFieldRepetitionCount(name) > 0)
+            sums(name) = sums.getOrElse(name, BigInt(0)) +
+              decodeUnscaled(grp, name).get
+        }
       }
     }
     if (nTotal == 0L)

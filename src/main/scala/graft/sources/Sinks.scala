@@ -166,11 +166,21 @@ object Sinks {
     } finally { fs.delete(lock, false); () }
   }
 
+  /** Spark's hidden-path rule (`HadoopFSUtils.shouldFilterOutPathName`,
+    * which its file index applies to every listed name): names starting
+    * with '.', names starting with '_' unless they contain '=' (a
+    * partition directory such as `_shard_id=s0` is data), and
+    * `*._COPYING_` files still being copied in. Spark's exception for
+    * the `_metadata`/`_common_metadata` summary files is left out: they
+    * are not data files. */
+  private def hiddenName(n: String): Boolean =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")
+
   /** Recursive listing of a dir's DATA files for the driver-side
     * parquet readers (ADVICE r18): skips any file whose path relative
-    * to `dir` contains a component starting with '_' or '.' — the
-    * same filter Spark's InMemoryFileIndex/HadoopFSUtils apply at
-    * every level. Filtering only the LEAF name is not enough: a
+    * to `dir` has a component Spark's file index would hide
+    * ([[hiddenName]]). Filtering only the LEAF name is not enough: a
     * crashed Spark append leaves task files under
     * `_temporary/<attempt>/...` whose leaf names look like ordinary
     * parts, and a torn attempt file would make every footer/page read
@@ -184,8 +194,7 @@ object Sinks {
     def hiddenUnderBase(p: org.apache.hadoop.fs.Path): Boolean = {
       var cur = p
       while (cur != null && cur != base) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) return true
+        if (hiddenName(cur.getName)) return true
         cur = cur.getParent
       }
       false
@@ -215,28 +224,164 @@ object Sinks {
     * guard's own invariant every file in the dir agrees, so one
     * footer is exact. */
   private[graft] def assertBatchTagConsistent(spark: SparkSession,
-      dir: String, tagged: Boolean, op: String): Unit = {
+      dir: String, tagged: Boolean, op: String): Unit =
+    // dir missing or holding no data file (e.g. only a _SUCCESS
+    // marker) — the next append defines the schema
+    firstFooter(spark, dir).foreach { footer =>
+      val existingTagged = footer.getParquetMetadata.getFileMetaData
+        .getSchema.containsField("batch_id")
+      require(existingTagged == tagged,
+        s"$op: $dir is ${if (existingTagged) "batch-tagged" else "untagged"} " +
+          s"but this append is ${if (tagged) "tagged" else "untagged"} — " +
+          "a sidecar carries batch_id from its first append or never " +
+          "(mixed parquet schemas can silently drop the tag on read)")
+    }
+
+  /** The footer of ONE data file of a parquet file or dir, read
+    * driver-side; None when the path is missing or holds no data file. */
+  private def firstFooter(spark: SparkSession, dir: String)
+      : Option[org.apache.parquet.hadoop.Footer] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) return
-    val dataFile = listDataFiles(fs, path).headOption
-      .map(_.getPath).orNull
-    // dir exists but holds no data file (e.g. only a _SUCCESS
-    // marker) — the next append defines the schema
-    if (dataFile == null) return
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        dataFile, conf))
-    val existingTagged =
-      try reader.getFooter.getFileMetaData.getSchema
-        .containsField("batch_id")
+    if (!fs.exists(path)) return None
+    listDataFiles(fs, path).headOption.map { f =>
+      val reader = openParquetFile(conf, f.getPath)
+      try new org.apache.parquet.hadoop.Footer(f.getPath, reader.getFooter)
       finally reader.close()
-    require(existingTagged == tagged,
-      s"$op: $dir is ${if (existingTagged) "batch-tagged" else "untagged"} " +
-        s"but this append is ${if (tagged) "tagged" else "untagged"} — " +
-        "a sidecar carries batch_id from its first append or never " +
-        "(mixed parquet schemas can silently drop the tag on read)")
+    }
+  }
+
+  /** Opens one parquet file for a driver-side read with `conf`.
+    * Parquet's entry points without a configuration
+    * (`ParquetFileReader.open(InputFile)`, `ParquetReader.builder`)
+    * build a fresh Hadoop `Configuration` per call, which re-parses
+    * the default XML resources off the classpath: about 10 ms per
+    * file against 1 ms here, paid several times per ingest. */
+  private def openParquetFile(conf: org.apache.hadoop.conf.Configuration,
+      file: org.apache.hadoop.fs.Path)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, file).build())
+
+  /** Every row of one parquet data file as a parquet `Group`, with the
+    * file's schema — the driver-side reader of metadata-sized files
+    * (manifest rows, Gram moment rows), opened like
+    * [[openParquetFile]]. */
+  private[graft] def readParquetRows(spark: SparkSession,
+      file: org.apache.hadoop.fs.Path)
+      : (org.apache.parquet.schema.MessageType,
+         Seq[org.apache.parquet.example.data.Group]) = {
+    val reader = openParquetFile(spark.sparkContext.hadoopConfiguration, file)
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val rows = scala.collection.mutable.ArrayBuffer[
+        org.apache.parquet.example.data.Group]()
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records = new org.apache.parquet.io.ColumnIOFactory()
+          .getColumnIO(schema)
+          .getRecordReader(pages, new org.apache.parquet.example.data.simple
+            .convert.GroupRecordConverter(schema))
+        (0L until pages.getRowCount).foreach(_ => rows += records.read())
+        pages = reader.readNextRowGroup()
+      }
+      (schema, rows.toSeq)
+    } finally reader.close()
+  }
+
+  /** `spark.read.parquet(dir)` without its schema-inference job: the
+    * schema comes from ONE data file's footer, read driver-side — the
+    * Spark schema stored in the footer, else the parquet schema
+    * through Spark's own converter, made nullable. That is what the
+    * inference job computes with schema merging off (it also reads a
+    * single footer, but as a Spark job: 30–100 ms of fixed cost per
+    * read). For dirs whose files share one schema: the engine's own
+    * sidecars and tables, where [[assertBatchTagConsistent]] and the
+    * appenders keep it so. A dir with no data file falls through to
+    * the plain read (and its error). */
+  private[graft] def readParquet(spark: SparkSession, dir: String)
+      : DataFrame =
+    firstFooter(spark, dir).map { footer =>
+      org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        .readSchemaFromFooter(footer,
+          new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetToSparkSchemaConverter(
+              org.apache.spark.sql.internal.SQLConf.get))
+        .toNullable
+    }.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+
+  /** Append `row` to the parquet dir `dir` as ONE file written
+    * DRIVER-SIDE (optimization round 18): for a metadata-sized row a
+    * Spark write job pays scheduler, task and committer overhead for a
+    * few hundred bytes. The parquet schema comes from Spark's own
+    * converter and the footer carries the Spark schema, so files from
+    * here and from a Spark write of the same frame
+    * ([[compactParquetDir]]) read back identically. Column types:
+    * string, long, and decimals too wide for a long, which the
+    * converter maps to fixed-length bytes (the unscaled value,
+    * big-endian, sign-extended).
+    *
+    * The file is written behind a DOT-PREFIXED temp name and renamed
+    * after close (ADVICE r18): a crash mid-write must not leave a torn
+    * non-empty part file at a data name, which every later footer read
+    * would throw on. Dot-prefixed files are invisible to every reader
+    * (Spark's and [[listDataFiles]]), and the local/HDFS rename is
+    * atomic. A temp left by a crash between close and rename is dead
+    * and deleted here (ADVICE r19). The caller must hold the dir lock
+    * ([[withDirLock]]), which serializes every writer of the dir. */
+  private[graft] def appendRowDriverSide(spark: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      row: org.apache.spark.sql.Row): Unit = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val fs = dirPath.getFileSystem(conf)
+    fs.mkdirs(dirPath)
+    fs.listStatus(dirPath).map(_.getPath)
+      .filter(f => f.getName.startsWith(".") && f.getName.endsWith(".inprogress"))
+      .foreach(fs.delete(_, false))
+    val message = new org.apache.spark.sql.execution.datasources.parquet
+      .SparkToParquetSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)
+      .convert(schema)
+    val group = new org.apache.parquet.example.data.simple.SimpleGroup(message)
+    schema.fields.indices.filterNot(row.isNullAt).foreach { i =>
+      val name = schema.fields(i).name
+      val t = message.getType(i).asPrimitiveType()
+      (row.get(i), t.getPrimitiveTypeName) match {
+        case (s: String, BINARY) => group.append(name, s)
+        case (l: Long, INT64) => group.append(name, l)
+        case (d: java.math.BigDecimal, FIXED_LEN_BYTE_ARRAY) =>
+          val scale = schema.fields(i).dataType
+            .asInstanceOf[org.apache.spark.sql.types.DecimalType].scale
+          val unscaled = d.setScale(scale).unscaledValue
+          val minimal = unscaled.toByteArray
+          val bytes = Array.fill[Byte](t.getTypeLength)(
+            if (unscaled.signum < 0) -1 else 0)
+          System.arraycopy(minimal, 0, bytes, bytes.length - minimal.length,
+            minimal.length)
+          group.append(name,
+            org.apache.parquet.io.api.Binary.fromConstantByteArray(bytes))
+        case (v, physical) => throw new IllegalArgumentException(
+          s"Sinks.appendRowDriverSide: $name = $v as $physical")
+      }
+    }
+    val base = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val tmp = new org.apache.hadoop.fs.Path(dirPath, s".$base.inprogress")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf) // see openParquetFile: no per-call Configuration
+      .withType(message)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .withExtraMetaData(java.util.Map.of(
+        "org.apache.spark.sql.parquet.row.metadata", schema.json))
+      .build()
+    try writer.write(group) finally writer.close()
+    val file = new org.apache.hadoop.fs.Path(dirPath, base)
+    require(fs.rename(tmp, file),
+      s"Sinks.appendRowDriverSide: rename $tmp -> $file failed")
   }
 
   /** Clear a stale writer marker left by a crashed appender — call

@@ -19,28 +19,21 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  /** Schema cache, per table path (optimization round 19): a bare
-    * `spark.read.parquet` runs a footer-reading schema-INFERENCE job
-    * on every call — 30–100 ms per read, several reads per query, on
-    * schemas that are constants of the testdata contract
-    * ([[TestdataContract]] fails loudly on any drift, including the
-    * events-ts encoding this cache must not mask — the cached schema
-    * IS the footer-inferred one, so the [[events]] nanos/micros
-    * dispatch still sees exactly what inference saw). This is the
-    * metadata a catalog (HMS/Iceberg) serves in production: table
-    * SCHEMA, never data or results. A fresh JVM re-infers. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
   /** Parquet scan of one testdata table. Filters/projections composed on
     * top of this are pushed into the parquet reader by Catalyst
-    * (visible as PushedFilters/ReadSchema in explain). */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(path)
-  }
+    * (visible as PushedFilters/ReadSchema in explain).
+    *
+    * The schema comes from one data file's footer, read driver-side
+    * on every call ([[Sinks.readParquet]]): a bare
+    * `spark.read.parquet` runs a footer-reading schema-INFERENCE job
+    * per call — 30–100 ms per read, several reads per query. It is
+    * not cached per path: a table rewritten with a different schema
+    * in the same JVM must read with the new schema, never the old
+    * one's nulls (ADVICE r19 #1). The footer is what inference reads,
+    * so the [[events]] nanos/micros dispatch sees exactly what
+    * inference would see. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    Sinks.readParquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -203,6 +203,187 @@ class CurationPipelineSpec extends SparkSpec {
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0L)
   }
 
+  // Two monotone shards over a hand-built corpus: a normalized duplicate
+  // (docs 2 and 3 differ only in case and punctuation) inside shard 0
+  // and again across shards (doc 6); a 10-token chunk (`rep`, one full
+  // ChunkTokens stride) twice inside shard 0 and again in shard 1; and
+  // a feature that is negative on half the docs, so Gram moments
+  // g_0_1 and b_1 are negative.
+  private lazy val plantedFixture: (org.apache.spark.sql.Column, DataFrame,
+      Seq[DataFrame]) = {
+    val rep = (1 to CurationPipeline.ChunkTokens).map(i => s"r$i").mkString(" ")
+    val docs = Seq(
+      (1L, "web", s"$rep alpha beta gamma"),
+      (2L, "web", "Hello, World! one two three"),
+      (3L, "books", "hello world one two three"),
+      (4L, "books", s"$rep delta epsilon zeta eta"),
+      (5L, "web", s"$rep theta iota"),
+      (6L, "books", "HELLO world one two three"),
+      (7L, "web", "kappa lambda mu nu xi omicron"),
+      (19L, "web", "pi rho sigma tau upsilon")).toDF("doc_id", "source", "text")
+    val scaled = LinearProbe.scaled(
+      docs.withColumn("neg", when($"doc_id" % 2 === 0, -0.5).otherwise(0.25))
+        .withColumn("len", length($"text") / 100.0),
+      Seq("neg", "len"), $"doc_id" % 2 === 0)
+    val withFeats = scaled.select(Seq($"doc_id", $"source", $"text",
+        $"__f0", $"__f1", $"__f2") ++
+      (3 until CurationPipeline.FeatureDim).map(i => lit(0L).as(s"__f$i")) :+
+      $"__y": _*)
+    val holdout = col("doc_id") % 19 === 0
+    (holdout, Seq((100L, "sigma tau upsilon phi")).toDF("doc_id", "text"),
+      Seq(withFeats.filter($"doc_id" <= 4L), withFeats.filter($"doc_id" > 4L)))
+  }
+
+  test("each ingest appends every new fp and ck exactly once per batch_id, " +
+      "and the sets equal the distinct() formulation") {
+    val (holdout, evalDocs, sh) = plantedFixture
+    val dirs = CurationPipeline.Dirs(tmp("planted"))
+    CurationPipeline.init(spark, dirs, evalDocs)
+    sh.zipWithIndex.foreach { case (shard, i) =>
+      CurationPipeline.ingestShard(shard, dirs, holdout, s"s$i")
+    }
+    // the distinct() formulation: stage-1 survivors are the min-id doc
+    // of each normalized text not seen in an earlier shard; their fps
+    // and the chunk keys of their raw text, minus earlier shards' keys
+    var (seenFps, seenCks) = (Seq.empty[String].toDF("fp"), Seq.empty[String].toDF("ck"))
+    val expected = sh.zipWithIndex.map { case (shard, i) =>
+      val withFp = shard.filter(!holdout)
+        .withColumn("fp", md5(TextAnalysis.normalizeText($"text")))
+      val firstIds = withFp.join(seenFps, Seq("fp"), "left_anti")
+        .groupBy($"fp").agg(min($"doc_id").as("doc_id"))
+      val survivors = withFp.join(firstIds, Seq("fp", "doc_id"))
+      val fps = survivors.select($"fp").distinct()
+      val cks = TextAnalysis.chunk(survivors, "text",
+          CurationPipeline.ChunkTokens, 0, "doc_id")
+        .select(md5($"chunk_text").as("ck")).distinct()
+        .except(seenCks)
+      seenFps = seenFps.union(fps)
+      seenCks = seenCks.union(cks)
+      (canon(fps.withColumn("batch_id", lit(s"s$i"))),
+        canon(cks.withColumn("batch_id", lit(s"s$i"))))
+    }
+    val digests = spark.read.parquet(dirs.digests).select($"fp", $"batch_id")
+    val chunks = spark.read.parquet(dirs.chunks).select($"ck", $"batch_id")
+    assert(canon(digests) === expected.flatMap(_._1).sorted)
+    assert(canon(chunks) === expected.flatMap(_._2).sorted)
+    assert(digests.count() === digests.distinct().count())
+    assert(chunks.count() === chunks.distinct().count())
+    // the planted duplicates were exercised: shard 0 keeps 3 of its 4
+    // texts and `rep` once; shard 1 keeps 2 of 3 and not `rep` again
+    val rep = md5(lit((1 to CurationPipeline.ChunkTokens).map(i => s"r$i")
+      .mkString(" ")))
+    assert(expected.map(_._1.size) === Seq(3, 2))
+    assert(chunks.filter($"ck" === rep).select($"batch_id").as[String]
+      .collect().toSeq === Seq("s0"))
+  }
+
+  test("a driver-written Gram moment row reads back through " +
+      "spark.read.parquet with the schema, parquet footer and values of " +
+      "Spark's own write of gramAggDf plus batch_id") {
+    val (_, _, sh) = plantedFixture
+    val agg = LinearProbe.gramAggDf(sh(0), CurationPipeline.FeatureDim)
+    val row = agg.collect()(0)
+    assert(row.getAs[java.math.BigDecimal]("g_0_1").signum < 0)
+    val base = tmp("gramrow")
+    LinearProbe.appendGramMomentRow(spark, row, agg.schema, s"$base/driver",
+      batchId = Some("b0"))
+    agg.withColumn("batch_id", lit("b0")).write.parquet(s"$base/spark")
+    val (driver, viaSpark) =
+      (spark.read.parquet(s"$base/driver"), spark.read.parquet(s"$base/spark"))
+    assert(driver.schema === viaSpark.schema)
+    assert(canon(driver) === canon(viaSpark))
+    def footer(dir: String): org.apache.parquet.schema.MessageType = {
+      val f = new java.io.File(dir).listFiles()
+        .find(_.getName.startsWith("part-")).get
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath),
+          spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    }
+    assert(footer(s"$base/driver") === footer(s"$base/spark"))
+  }
+
+  test("sidecarGram totals, negative moments included, stay exact " +
+      "through driver-written appends, retractShard and compactState") {
+    val (holdout, evalDocs, sh) = plantedFixture
+    val d = CurationPipeline.FeatureDim
+    def totals(dir: String) = {
+      val (g, b, n) = LinearProbe.sidecarGram(spark, dir, d)
+      (g.map(_.toSeq).toSeq, b.toSeq, n)
+    }
+    def reference(frames: DataFrame*) = {
+      val (g, b, n) = LinearProbe.gram(frames.reduce(_ unionByName _), d)
+      (g.map(_.toSeq).toSeq, b.toSeq, n)
+    }
+    val dirs = CurationPipeline.Dirs(tmp("gramtotals"))
+    CurationPipeline.init(spark, dirs, evalDocs)
+    CurationPipeline.ingestShard(sh(0), dirs, holdout, "s0")
+    CurationPipeline.ingestShard(sh(1), dirs, holdout, "s1")
+    val both = reference(sh: _*)
+    assert(both._1(0)(1) < 0 && both._2(1) < 0)
+    assert(totals(dirs.gram) === both)
+    CurationPipeline.retractShard(spark, dirs, "s1", sh(1))
+    val first = reference(sh(0))
+    assert(totals(dirs.gram) === first)
+    CurationPipeline.compactState(spark, dirs)
+    assert(totals(dirs.gram) === first)
+  }
+
+  /** Run `body` and count the SQL executions it ran (QueryExecutionListener
+    * callbacks) and the Spark jobs it started outside any SQL execution
+    * (schema-inference probes and other bare RDD jobs). */
+  private def sparkWork(body: => Unit): (Int, Int) = {
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val looseJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        executions.incrementAndGet(); ()
+      }
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = {
+        executions.incrementAndGet(); ()
+      }
+    }
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties == null ||
+            j.properties.getProperty("spark.sql.execution.id") == null) {
+          looseJobs.incrementAndGet(); ()
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+    spark.listenerManager.register(qel)
+    sc.addSparkListener(jobs)
+    try {
+      body
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+    } finally {
+      spark.listenerManager.unregister(qel)
+      sc.removeSparkListener(jobs)
+    }
+    (executions.get(), looseJobs.get())
+  }
+
+  test("one ingest runs at most 5 SQL executions and no job outside one " +
+      "(one shard materialization, one decide checkpoint, three appends)") {
+    val (holdout, evalDocs, sh) = crashFixture
+    val dirs = CurationPipeline.Dirs(tmp("work"))
+    CurationPipeline.init(spark, dirs, evalDocs)
+    CurationPipeline.ingestShard(sh(0), dirs, holdout, "s0")
+    val (executions, looseJobs) = sparkWork {
+      CurationPipeline.ingestShard(sh(1), dirs, holdout, "s1")
+    }
+    assert(executions <= 5, s"$executions SQL executions")
+    assert(looseJobs === 0)
+    // and leaves the session serializable: MLlib model summaries
+    // capture it and ship it with later jobs
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
+      .writeObject(spark)
+  }
+
   test("a manifest append deletes a crashed append's orphaned .inprogress " +
       "temp, and the orphan's row never counts as committed") {
     val (holdout, evalDocs, sh) = crashFixture

@@ -132,6 +132,42 @@ class SinksSpec extends SparkSpec {
     assert(after.getAs[Long]("file_count") === 1L)
   }
 
+  test("listDataFiles follows Spark's hidden-path rule: a `_col=value` " +
+      "partition dir is data; `_temporary`, dot-prefixed and `._COPYING_` " +
+      "files stay hidden") {
+    val dir = Files.createTempDirectory("graft-list")
+    Seq("_shard_id=a/part-0.parquet",
+        "_temporary/0/_temporary/attempt_0/part-1.parquet",
+        "_shard_id=a/.part-2.parquet.inprogress",
+        ".x.inprogress",
+        "part-3.parquet._COPYING_",
+        "_SUCCESS").foreach { rel =>
+      val p = dir.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array[Byte](1))
+    }
+    val path = new org.apache.hadoop.fs.Path(dir.toString)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = Sinks.listDataFiles(fs, path)
+      .map(f => dir.relativize(java.nio.file.Paths.get(f.getPath.toUri)).toString)
+    assert(listed === Seq("_shard_id=a/part-0.parquet"))
+  }
+
+  test("Tables.table reads a table rewritten with a new schema in the same " +
+      "JVM with that schema, never the old one's nulls") {
+    import spark.implicits._
+    val sf = Files.createTempDirectory("graft-rewrite").toString
+    val path = s"$sf/t.parquet"
+    Seq((1L, "x")).toDF("id", "b").write.parquet(path)
+    val first = Tables.table(spark, sf, "t")
+    assert(first.schema === spark.read.parquet(path).schema)
+    assert(first.collect().map(_.toString).toSeq === Seq("[1,x]"))
+    Seq((2L, "y")).toDF("id", "c").write.mode("overwrite").parquet(path)
+    val again = Tables.table(spark, sf, "t")
+    assert(again.schema === spark.read.parquet(path).schema)
+    assert(again.collect().map(_.toString).toSeq === Seq("[2,y]"))
+  }
+
   test("withDirLock: a second concurrent writer fails loud with the holder's identity") {
     val dir = Files.createTempDirectory("lock").toString + "/side"
     Sinks.withDirLock(spark, dir, "outer") {
