@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query at the given scale
   * factor and prints ONE JSON line. A warmup action runs first so JVM
   * startup / first-codegen cost is not attributed to whichever query
@@ -29,23 +27,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the low-mem sweep raises partitions above the thread count so
     // each task's hash/sort state shrinks — the knob a real cluster
     // turns when executors are memory-tight
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = GraftSession.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // page granularity ∝ memory-per-task — see GraftSession scaladoc
-      .config("spark.buffer.pageSize",
-        GraftSession.tungstenPageSize(cores = cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .map(_.toInt).getOrElse(GraftSession.cores)
+    val spark = GraftSession.builder(shufflePartitions = shufflePartitions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val spillListener = new SpillListener
     spark.sparkContext.addSparkListener(spillListener)
     // pre-flight: fail ONCE with a named diff on testdata storage drift

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of each
   * registered query (or a named subset) so scan pruning / pushdown /
   * join strategy / codegen spans can be reviewed.
@@ -19,15 +17,8 @@ object Explain {
     // bench runs at local[32]/32 shuffle partitions, so plan review at
     // those settings sees what the bench actually executes.
     val executed = sys.env.contains("SPARK_GRAFT_EXPLAIN_EXECUTED")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.isEmpty || names(name)) {
         println(s"\n========== $name ==========")

@@ -38,7 +38,8 @@ import org.apache.spark.sql.SparkSession
   * Env: SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_FAULT_ARMED
   * (1 = inject, 0 = clean baseline), SPARK_GRAFT_FAULT_QUERIES
   * (comma list or ALL; default = the deterministic-operator set the
-  * round-9 verdict names), SPARK_GRAFT_CPUS (default 8).
+  * round-9 verdict names), SPARK_GRAFT_CPUS (default: every available
+  * processor; see [[GraftSession.cores]]).
   */
 object FaultInjectionPlugin {
   /** Injection switch — flipped by [[Faults.main]] after session
@@ -453,27 +454,18 @@ object Faults {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val armed = sys.env.getOrElse("SPARK_GRAFT_FAULT_ARMED", "1") == "1"
     val names = sys.env.get("SPARK_GRAFT_FAULT_QUERIES") match {
       case Some("ALL") => SparkEntry.queries.keys.toSeq.sorted
       case Some(list) => list.split(",").map(_.trim).toSeq
       case None => DefaultQueries
     }
-    val spark = GraftSession.withSessionConfs(SparkSession.builder()
-      // local[N, 4]: local-mode task retries, maxFailures = 4 — the
-      // injected first-attempt kill leaves 3 more attempts
-      .master(s"local[$cpus, 4]")
+    // local[N, 4]: local-mode task retries, maxFailures = 4 — the
+    // injected first-attempt kill leaves 3 more attempts
+    val spark = GraftSession.builder(s"local[${GraftSession.cores}, 4]")
       .config("spark.plugins", "graft.FaultInjectionPlugin")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // page granularity ∝ memory-per-task — see GraftSession scaladoc
-      .config("spark.buffer.pageSize",
-        GraftSession.tungstenPageSize(cores = cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR") // injected failures are noisy at WARN
-    graft.functions.GraftFunctions.register(spark)
     graft.sources.TestdataContract.assertContract(spark, sfDir)
 
     FaultInjectionPlugin.armed.set(armed)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot fixture generator (not part of the driver contract) —
   * dumps the dHash of every image in the pinned q208 corpus
   * ([[graft.sources.Multimodal.syntheticImageCorpus]], n = 400) to
@@ -20,9 +18,8 @@ import org.apache.spark.sql.SparkSession
   */
 object FixtureDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // local[8] with 8 partitions: the MLlib-fit fixtures depend on it
+    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rows = graft.sources.Multimodal
       .syntheticImageCorpus(spark, 400)

@@ -3,22 +3,27 @@ package graft
 import graft.functions.{GraftExtensions, GraftFunctions}
 import org.apache.spark.sql.SparkSession
 
-/** Opinionated session factory encoding the engine's deployment
-  * configuration — the settings that matter at 100 TB, pre-wired:
+/** The engine's one session factory: every main and the test session
+  * build their session here. It sets exactly:
   *
-  *  - AQE on (runtime re-planning: shuffle coalescing, broadcast
-  *    downgrade, skew-join splitting);
-  *  - skew-join handling explicitly enabled;
-  *  - shuffle partitions sized to the actual parallelism instead of
-  *    the 200 default (AQE coalesces down, but the ceiling should
-  *    reflect the cluster);
-  *  - 128 MB scan partitions (`files.maxPartitionBytes` default kept
-  *    explicit — the knob to raise for wide-row tables);
+  *  - the master, `local[cores]` by default ([[cores]]), and the app
+  *    name `graft`;
+  *  - shuffle partitions, [[cores]] by default: sized to the actual
+  *    parallelism instead of the 200 default (AQE coalesces down, but
+  *    the ceiling should reflect the cluster);
+  *  - `spark.buffer.pageSize` from the master's thread count
+  *    ([[tungstenPageSize]]);
   *  - UTC session timezone (oracle/cross-engine parity);
-  *  - the join strategy and a codegen cache sized to the engine's
-  *    working set ([[sessionConfs]], shared with every entry point);
-  *  - the engine's custom Catalyst functions injected via
-  *    [[GraftExtensions]] so `cosine_sim` & co. resolve in SQL.
+  *  - [[sessionConfs]]: the join strategy and a codegen cache sized to
+  *    the engine's working set;
+  *  - [[GraftExtensions]]: `cosine_sim` & co. resolve in SQL, plus the
+  *    top-k planner strategy and its conf-gated rewrite rule.
+  *
+  * AQE, AQE skew-join splitting and 128 MB scan splits
+  * (`files.maxPartitionBytes`) are Spark 4.1 defaults; the factory does
+  * not restate them. A caller adds only what is its own (Faults its
+  * fault-injection plugin and task retries, the test session its
+  * warehouse dir).
   */
 object GraftSession {
 
@@ -40,17 +45,15 @@ object GraftSession {
     * own ceiling), power-of-two. On a real cluster at ≥ 1 GiB/core
     * this computes the same 64 MiB Spark picks — the knob only moves
     * where memory-per-task is tight, exactly where it must. */
-  def tungstenPageSize(heapBytes: Long = Runtime.getRuntime.maxMemory(),
-                       cores: Int =
-                         Runtime.getRuntime.availableProcessors): Long = {
+  def tungstenPageSize(cores: Int): Long = {
+    val heapBytes = Runtime.getRuntime.maxMemory()
     val execPool = ((heapBytes - (300L << 20)) * 0.6).toLong max (64L << 20)
     val raw = execPool / (cores.toLong * 12L)
     val clamped = raw.max(1L << 20).min(64L << 20)
     java.lang.Long.highestOneBit(clamped)
   }
 
-  /** Configuration shared by EVERY engine entry point
-    * (bench/verify/scale-bench/faults/deep runs/tests, and [[builder]]):
+  /** Configuration [[builder]] applies to every engine entry point:
     * the join strategy (optimization round 19) and the codegen cache
     * size.
     *
@@ -96,29 +99,37 @@ object GraftSession {
       (64L << 20).toString,
     "spark.sql.codegen.cache.maxEntries" -> "1000")
 
-  /** Apply [[sessionConfs]] to a builder. */
-  def withSessionConfs(b: SparkSession.Builder): SparkSession.Builder =
-    sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  /** Executor threads of the engine's entry points:
+    * `SPARK_GRAFT_CPUS`, else every available processor. */
+  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def builder(master: String = "local[*]",
-              shufflePartitions: Int =
-                Runtime.getRuntime.availableProcessors): SparkSession.Builder =
-    withSessionConfs(SparkSession.builder()
+  private val LocalThreads = """local\[(\d+)\s*(?:,\s*\d+)?\]""".r
+
+  /** Executor threads of a master URL: N for `local[N]` and
+    * `local[N, F]`, every available processor otherwise (`local[*]`). */
+  private def masterThreads(master: String): Int = master match {
+    case LocalThreads(n) => n.toInt
+    case _ => Runtime.getRuntime.availableProcessors
+  }
+
+  def builder(master: String = s"local[$cores]",
+              shufflePartitions: Int = cores): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.files.maxPartitionBytes", (128L << 20).toString)
-      .config("spark.buffer.pageSize", tungstenPageSize().toString)
-      .config("spark.sql.session.timeZone", "UTC"))
+      .config("spark.buffer.pageSize",
+        tungstenPageSize(cores = masterThreads(master)).toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(sessionConfs.toMap)
       .withExtensions(new GraftExtensions)
 
   /** Build (or attach to) a session and ensure the custom functions
     * are registered even when an existing session is returned
     * (getOrCreate ignores extensions on reuse). */
-  def getOrCreate(master: String = "local[*]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
+  def getOrCreate(): SparkSession = {
+    val spark = builder().getOrCreate()
     GraftFunctions.register(spark)
     spark
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-shot deep-shard harness for the incremental curation pipeline
@@ -75,8 +75,7 @@ object IncrementalDeepRun {
     val forgetAfter =
       sys.env.getOrElse("SPARK_GRAFT_INCR_FORGET_AFTER", "12").toInt
     require(shards >= 2 && compactEvery >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.getOrCreate(s"local[$cpus]")
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.ops.CurationPipeline

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot deep-peel harness for [[graft.ops.Graph.kCoreConverged]]
@@ -34,13 +33,7 @@ object KCoreDeepRun {
     require(tail + 8 <= 64,
       s"SPARK_GRAFT_KCORE_TAIL must be <= 56 so the bounded cross-check " +
         s"(rounds = min(64, tail + 8)) can reach the peel depth; got $tail")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // one lollipop per copy: triangle {0,1,2} + path 0-3-4-…-(2+tail);

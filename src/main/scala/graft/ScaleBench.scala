@@ -122,7 +122,6 @@ object ScaleBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // ALL = full-registry linearity map; otherwise a comma list or the
     // pinned most-expensive default
     val names = sys.env.get("SPARK_GRAFT_SCALEBENCH_QUERIES") match {
@@ -132,17 +131,8 @@ object ScaleBench {
     }
     val outDir = s"target/tmp/scalebench_x$copies"
 
-    val spark = GraftSession.withSessionConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // page granularity ∝ memory-per-task — see GraftSession scaladoc
-      .config("spark.buffer.pageSize",
-        GraftSession.tungstenPageSize(cores = cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     materialize(spark, sfDir, outDir, copies)
 

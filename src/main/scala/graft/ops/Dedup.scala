@@ -404,31 +404,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** MLlib-API variant of MinHash near-dup detection: shingles →
-    * HashingTF(binary) sparse vectors → MinHashLSH →
-    * approxSimilarityJoin. Kept alongside the expression-level
-    * [[minhashDedupPairs]] for users standardized on the ml.feature
-    * pipeline API; the expression path stays in whole-stage codegen
-    * and avoids the VectorUDT detour. */
-  def minhashDedupPairsMLlib(df: DataFrame, textCol: String, idCol: String,
-                             shingleK: Int = 2, numHashTables: Int = 8,
-                             threshold: Double = 0.5,
-                             seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-    val withSh = df.select(col(idCol).as("id"),
-      shingles(col(textCol), shingleK).as("sh"))
-    val tf = new HashingTF().setInputCol("sh").setOutputCol("fv")
-      .setBinary(true).setNumFeatures(1 << 18)
-    val vectors = tf.transform(withSh)
-    val lsh = new MinHashLSH().setInputCol("fv").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    val model = lsh.fit(vectors)
-    model.approxSimilarityJoin(vectors, vectors, 1.0 - threshold, "dist")
-      .select(col("datasetA.id").as("id_a"), col("datasetB.id").as("id_b"),
-        (lit(1.0) - col("dist")).as("jaccard"))
-      .filter(col("id_a") < col("id_b"))
-  }
-
   /** Initialize (or extend) a fingerprint sidecar from an existing
     * corpus: one md5 text digest per distinct document, written as
     * parquet sorted within files (row-group min/max stats then prune

@@ -26,28 +26,13 @@ object Relational {
   def dropNullsIn(df: DataFrame, cols: Seq[String]): DataFrame =
     df.na.drop(cols)
 
-  /** Mean-fill of a numeric column (P5, `app.py:34-36`), computed
-    * without a driver-side collect: the per-column mean is an
-    * unpartitioned window aggregate, so the fill composes into one
-    * plan. Numerator goes through decimal so the mean (and therefore
-    * the fill) is identical under any partitioning.
-    *
-    * Scale note: `Window.partitionBy()` (no keys) coalesces to a
-    * single partition for the window — fine for a scalar aggregate at
-    * any scale IF Spark plans it as a single-row aggregate. For very
-    * wide data prefer [[meanFillAgg]] which computes means via a
-    * proper partial+final aggregate and joins them back broadcast. */
-  def meanFillExpr(c: Column, scale: Int = 2): Column = {
-    val w = Window.partitionBy()
-    val mean = sum(c.cast(DecimalType(28, scale))).over(w).cast("double") /
-      count(c).over(w)
-    coalesce(c, mean)
-  }
-
-  /** Mean-fill via partial+final hash aggregate + broadcast join —
-    * the 100 TB-safe variant of [[meanFillExpr]]: one map-side-combined
-    * aggregate produces a 1-row means relation, broadcast back onto
-    * the data (no single-partition window). */
+  /** Mean-fill of numeric columns (P5, `app.py:34-36`) via a
+    * partial+final hash aggregate and a broadcast join: one
+    * map-side-combined aggregate produces a 1-row means relation,
+    * broadcast back onto the data (no driver-side collect, no
+    * single-partition window). The numerator goes through decimal so
+    * the mean, and therefore the fill, is identical under any
+    * partitioning. */
   def meanFillAgg(df: DataFrame, cols: Seq[String], scale: Int = 2): DataFrame = {
     val meanCols = cols.map { n =>
       (sum(col(n).cast(DecimalType(28, scale))).cast("double") /

@@ -97,16 +97,11 @@ object TextAnalysis {
 
   /** Tokens-in-set count via the fused native expression
     * ([[graft.functions.TokensInSet]]): one zero-copy byte scan
-    * instead of split + interpreted per-token lambda. The HOF twin is
-    * kept as [[stopwordCountHof]] for property tests. */
+    * instead of split + interpreted per-token lambda. */
   def tokensInSet(text: Column, words: Seq[String]): Column =
     graft.functions.GraftFunctions.tokens_in_set(text, words)
 
   def stopwordCount(text: Column): Column = tokensInSet(text, Stopwords)
-
-  /** Interpreted-HOF formulation (reference semantics). */
-  def stopwordCountHof(text: Column): Column =
-    size(filter(tokens(text), t => t.isin(Stopwords: _*)))
 
   /** Quality heuristics (length / punctuation / stopword ratios):
     *  - n_chars, n_tokens
@@ -217,30 +212,12 @@ object TextAnalysis {
     * word-marker [[langId]]; works on unsegmented scripts where
     * whitespace tokenization fails. Scores are fused native n-gram
     * counts ([[graft.functions.NgramsInSet]] — one byte scan per
-    * profile instead of a substring allocation per window position);
-    * the HOF twin is kept as [[langIdCharNgramHof]] for property
-    * tests. */
+    * profile instead of a substring allocation per window position). */
   def langIdCharNgram(text: Column): Column = {
     val lowered = lower(text)
     val scored = array(CharNgramProfiles.map { case (lang, grams) =>
       struct(graft.functions.GraftFunctions.ngrams_in_set(lowered, grams)
         .as("score"), lit(lang).as("lang"))
-    }: _*)
-    val best = array_max(scored)
-    when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
-
-  /** Interpreted-HOF formulation (reference semantics): explicit
-    * char-window substrings + isin filter. */
-  def langIdCharNgramHof(text: Column): Column = {
-    val lowered = lower(text)
-    val tris = when(length(lowered) >= 3,
-      transform(sequence(lit(1), length(lowered) - 2),
-        i => call_function("substring", lowered, i, lit(3))))
-      .otherwise(array().cast("array<string>"))
-    val scored = array(CharNgramProfiles.map { case (lang, grams) =>
-      struct(size(filter(tris, t => t.isin(grams: _*))).as("score"),
-        lit(lang).as("lang"))
     }: _*)
     val best = array_max(scored)
     when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))

@@ -322,7 +322,7 @@ object EngineProperties extends Properties("graft") {
 
   property("TopKRewrite: rewritten plan == window plan as (key,score) multiset") =
     forAll(keyedScores) { case (rows, k) =>
-      import graft.plans.{TopKRewriteRule, TopKStrategy}
+      import graft.plans.TopKRewriteRule
       import org.apache.spark.sql.expressions.Window
       import spark.implicits._
       val df = rows.toDF("k", "v")
@@ -333,14 +333,6 @@ object EngineProperties extends Properties("graft") {
         d.collect().map(r => (r.getInt(0), Option(r.get(1)))).toList
           .sortBy(t => (t._1, t._2.map(_.asInstanceOf[Double]).getOrElse(-1.0)))
       val plain = multiset(idiom)
-      if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ TopKRewriteRule
-      }
-      if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TopKStrategy
-      }
       spark.conf.set(TopKRewriteRule.ConfKey, "true")
       try {
         val rewritten = idiom

@@ -1,22 +1,27 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends SparkSpec {
 
   test("GraftSession configures AQE/skew/UTC and resolves custom SQL functions") {
-    val spark = GraftSession.getOrCreate("local[2]")
-    // getOrCreate may reuse the suite-wide session; register() makes the
-    // function surface available either way
     assert(spark.sql("SELECT cosine_sim(array(3.0d, 0.0d), array(7.0d, 0.0d))")
       .collect()(0).getDouble(0) === 1.0)
-    // on a fresh session these configs come from the builder; on a
-    // reused one the call is still required to be harmless
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
   }
 
+  test("the shared test session carries the factory's settings and extensions") {
+    assert(spark.conf.get("spark.buffer.pageSize") ===
+      GraftSession.tungstenPageSize(cores = 4).toString)
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+    assert(spark.conf.get("spark.sql.join.preferSortMergeJoin") === "false")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    // a new session has none of the parent's registered temp functions,
+    // so only the injected GraftExtensions resolves the name
+    assert(spark.newSession()
+      .sql("SELECT cosine_sim(array(1.0d), array(1.0d))")
+      .collect()(0).getDouble(0) === 1.0)
+  }
+
   test("every registered custom function resolves in SQL") {
-    val spark = GraftSession.getOrCreate("local[2]")
     val r = spark.sql(
       """SELECT
         |  tokens_in_set('the cat the', array('the')) AS t,

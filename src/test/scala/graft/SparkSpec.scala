@@ -3,21 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession for the whole forked test JVM.
+/** One shared local SparkSession for the whole forked test JVM, built
+  * by the engine's session factory at local[4] with 4 shuffle
+  * partitions, so tests run the configuration the entry points run.
   * Every suite (ScalaTest and ScalaCheck) must go through this object:
   * getOrCreate ignores the configs of any later builder, so a suite
   * building its own differently-configured session would silently
   * change behavior for everyone else. */
 object TestSession {
-  lazy val spark: SparkSession = GraftSession.withSessionConfs(
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString))
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()
 }
 

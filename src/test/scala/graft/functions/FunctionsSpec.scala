@@ -25,7 +25,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim resolves in SQL after register()") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(0.5d, 0.0d)) AS c")
       .as[Double].collect()(0)
@@ -173,7 +172,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash64 resolves in SQL after register() and nulls propagate") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT simhash64('a b c') AS s, simhash64(CAST(NULL AS STRING)) AS n")
       .collect()(0)
@@ -276,7 +274,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("signature_agreement resolves in SQL after register()") {
-    GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT signature_agreement(array(1L,3L,5L), array(1L,4L,5L))")
       .collect()(0).getInt(0) === 2)
@@ -293,7 +290,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count resolves in SQL after register()") {
-    GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT sorted_intersect_count(array(1L,3L,5L), array(3L,4L,5L))")
       .collect()(0).getInt(0) === 2)
@@ -317,7 +313,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("sq_euclidean: geometry, nulls, SQL registration") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT sq_euclidean(array(1.0d, 2.0d), array(4.0d, 6.0d)) AS d, " +
         "sq_euclidean(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS n")
@@ -327,7 +322,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("sq_euclidean_long: exact integer geometry, nulls, SQL registration") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT sq_euclidean_long(array(1L, 2L), array(4L, 6L)) AS d, " +
         "sq_euclidean_long(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS n")
@@ -339,7 +333,6 @@ class FunctionsSpec extends SparkSpec {
   test("sq_euclidean_long holds the module null contract: length mismatch " +
       "and null elements yield null, never a truncated distance " +
       "(round-10 ADVICE)") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT sq_euclidean_long(array(1L, 2L, 3L), array(1L, 2L)) AS mismatch, " +
         "sq_euclidean_long(array(1L, CAST(NULL AS BIGINT)), array(1L, 2L)) " +
@@ -428,15 +421,9 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects cosine_sim at session build time") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // getOrCreate may return the shared session; extensions are only
-    // guaranteed on a fresh one, so just assert resolution works here.
-    GraftFunctions.register(s2)
+    // a new session shares the SparkContext but none of the parent's
+    // temp functions: only the injected extension resolves the name
+    val s2 = spark.newSession()
     assert(s2.sql("SELECT cosine_sim(array(1.0d), array(1.0d))")
       .collect()(0).getDouble(0) === 1.0)
   }

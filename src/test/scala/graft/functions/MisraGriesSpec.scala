@@ -49,7 +49,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("mg_candidates is SQL-registered and rejects non-string input") {
-    GraftFunctions.register(spark)
     Seq("x", "y", "x").toDF("t").createOrReplaceTempView("mg_in")
     val got = spark.sql("SELECT mg_candidates(t, 2) FROM mg_in")
       .as[Seq[String]].collect()(0)

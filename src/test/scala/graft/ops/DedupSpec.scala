@@ -513,14 +513,6 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.keySet.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("MLlib MinHashLSH variant finds the exact-dup pair too") {
-    val pairs = Dedup.minhashDedupPairsMLlib(docs, "text", "doc_id",
-      shingleK = 2, numHashTables = 8, threshold = 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 4L)), s"exact dup pair missed: $pairs")
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), "unrelated doc paired")
-  }
-
   test("minhash pairs on real documents table are high-jaccard") {
     val pairs = Dedup.minhashDedupPairs(Tables.documents(spark, sf0001),
       "text", "doc_id", shingleK = 2, numHashes = 32, bands = 8, threshold = 0.2)

@@ -8,15 +8,9 @@ import org.apache.spark.sql.functions._
 
 class TopKRewriteSpec extends SparkSpec {
 
+  /** The rule and strategy come from the session's GraftExtensions;
+    * the conf key switches the rewrite on. */
   private def withRule[A](f: => A): A = {
-    if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewriteRule
-    }
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
     spark.conf.set(TopKRewriteRule.ConfKey, "true")
     try f finally spark.conf.set(TopKRewriteRule.ConfKey, "false")
   }
