@@ -139,7 +139,7 @@ object Faults {
     * above already RUNS every sidecar family under injection, but its
     * evidence is the query OUTPUT; a retried WRITE task that
     * double-appended a batch, tore a compaction backup-swap, or
-    * re-ran a `foreachBatch` body could leave corrupted ON-DISK state
+    * re-ran a batch body could leave corrupted ON-DISK state
     * that the particular backing query happens not to read (e.g. an
     * orphan file a later append would compound). Each scenario here
     * runs a full multi-batch sidecar WRITE lifecycle — wipe, ≥2
@@ -417,13 +417,13 @@ object Faults {
       Seq(s"$w/merged")
     }),
     ("append_streaming_curation", (s: SparkSession, d: String, w: String) => {
-      // two curateBatch calls = two micro-batches through the SAME
+      // two curateBatch calls = two batches through the SAME
       // pipelineDir: the second batch's dedup/budget/pack state
       // depends on what batch one PERSISTED, so a retry-corrupted
       // first write would also cascade into batch two's rows
       val docs = graft.sources.Tables.documents(s, d)
       Seq(0, 1).foreach { par =>
-        graft.streaming.EventStreams.curateBatch(
+        graft.ops.Curation.curateBatch(
           docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === par),
           "text", "doc_id", "source", w,
           shingleK = 2, numHashes = 64, bands = 8, nearDupThreshold = 0.7,

@@ -1,7 +1,6 @@
 package graft.ml
 
 import graft.ml.LoanPipeline.LoanInput
-import graft.sources.Tables
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.classification.LogisticRegressionModel
 import org.apache.spark.ml.feature.{ImputerModel, StandardScalerModel}
@@ -25,8 +24,6 @@ final class LoanScorer private (
     scalerStd: Array[Double],
     scalerMean: Option[Array[Double]],
     lr: LogisticRegressionModel) extends Serializable {
-
-  private val featureOrder = Tables.loanFeatureCols
 
   /** Assemble → impute → scale → LR predict, locally. */
   def predict(in: LoanInput): Double = {

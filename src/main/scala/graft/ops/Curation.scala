@@ -128,36 +128,6 @@ object Curation {
         .write.mode("overwrite").parquet(registryDir)
     }
 
-  /** Hashed variant of [[decontaminate]] — the 100 TB path. Grams ride
-    * the explode/join as 64-bit XXH64 hashes (the fused
-    * [[graft.functions.HashedShingles]] codegen expression: one
-    * zero-copy byte scan per doc, distinct hashes out, no window
-    * strings ever allocated), so the broadcast table and the join keys
-    * are 8 bytes per gram instead of n words of UTF-8.
-    *
-    * Semantics vs the exact path: identical except for XXH64
-    * collisions, which can only OVER-count overlap (flag a clean doc),
-    * never miss real contamination — the safe direction for a
-    * decontamination filter. At 10^9 distinct grams the expected
-    * collision count is ~0.05 pairs. CurationSpec asserts flag parity
-    * with [[decontaminate]] on the test corpus. */
-  def decontaminateHashed(train: DataFrame, evalDocs: DataFrame, n: Int = 8,
-      threshold: Double = 0.05): DataFrame = {
-    def gramHashes(df: DataFrame): DataFrame = df
-      .select(col("doc_id"),
-        explode(graft.functions.GraftFunctions.hashed_shingles(col("text"), n))
-          .as("g"))
-    val evalGrams = broadcast(
-      gramHashes(evalDocs).select("g").distinct().withColumn("hit", lit(1L)))
-    gramHashes(train)
-      .join(evalGrams, Seq("g"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("contamination", col("n_hit").cast("double") / col("n_grams"))
-      .withColumn("contaminated", col("contamination") >= threshold)
-  }
-
   /** Repetition quality signals per document (the Gopher repetition
     * filters): duplicate-word fraction, duplicate-bigram fraction and
     * top-word share. High values mean boilerplate / degenerate
@@ -479,7 +449,7 @@ object Curation {
     * in the HLL-sidecar discipline ([[Sketches.writeSketchSidecar]]):
     * exact long counts are ADDITIVE, so the merge is a lossless sum
     * and the merged table equals a from-scratch build over everything
-    * ingested, however the stream happened to micro-batch. Each append
+    * ingested, however the appends were batched. Each append
     * is one batch-local aggregation (map-side combine; the shuffle
     * moves the batch's distinct tokens, not occurrences) written as
     * (w, cnt) rows; single writer per sidecar via the dir lock, like
@@ -570,7 +540,7 @@ object Curation {
     * re-aggregating the corpus — [[tokenRarity]] with the frequency
     * table read from `sidecarDir`. When the sidecar holds exactly the
     * corpus' counts the output is IDENTICAL to [[tokenRarity]] (q168
-    * proves it against the DuckDB oracle); in the streaming setting
+    * proves it against the DuckDB oracle); in the incremental setting
     * the sidecar is the running corpus-so-far, which is the
     * incremental semantic a rolling quality filter wants. Same scale
     * shape: the docs side compresses to (doc, token, count) before
@@ -647,4 +617,165 @@ object Curation {
     "n_phone" -> regexp_count(text, lit(PhonePattern)).cast("long"),
     "redacted" -> regexp_replace(
       regexp_replace(text, EmailPattern, "[EMAIL]"), PhonePattern, "[PHONE]"))
+
+  /** Test-only fault-injection seam for [[curateBatch]]'s crash-
+    * ordering contract: invoked with a window name at the two points
+    * inside the write section where a process death would tear the
+    * batch (after the packed sink append; after the sidecar append).
+    * Production value is a no-op; the fault-injection spec swaps in a
+    * thrower and restores it in a finally — the thrown exception
+    * aborts the remaining writes exactly like a kill would, while
+    * `Sinks.withDirLock` still releases the lock the way a crashed
+    * holder's marker would be cleared with `breakDirLock`. */
+  @volatile private[graft] var failpoint: String => Unit = _ => ()
+
+  /** One batch of the composed curation pipeline (the one-shot form
+    * is q131's `curationPipeline`):
+    *
+    *   near-dup sidecar dedup → per-row quality gate → per-source
+    *   rolling token budget → packed-sequence append
+    *
+    * run incrementally, with all cross-batch state in three tiny
+    * persisted tables under `pipelineDir`:
+    *
+    *  - `minhash/` — the near-dup signature sidecar
+    *    ([[graft.ops.Dedup.writeMinhashSidecar]] layout);
+    *  - `budget_state/` — (source, seen_tokens, seen_docs): the
+    *    running quality-kept token AND document counts per source.
+    *    Admission is prefix-by-arrival on BOTH: a row is admitted
+    *    while the source's seen token total stays ≤ `tokensPerSource`
+    *    AND its seen doc count stays ≤ `docsPerSource` (the
+    *    incremental twin of [[capPerSource]]'s no-domain-dominates
+    *    rule — arrival-order prefix instead of the one-shot op's
+    *    seeded uniform sample, because an earlier batch cannot be
+    *    un-admitted). Both counters include earlier REJECTED rows —
+    *    the running-cum-≤-budget rule of the batch mixture stage,
+    *    which is what makes incremental == one-shot;
+    *  - `pack_state/` — the global token offset the next batch's
+    *    packing continues from.
+    *
+    * Determinism contract: with batches arriving in `idCol` order
+    * (a sorted landing zone — the same assumption the exact sidecar's
+    * min-id survivor rule makes), processing N batches yields
+    * BYTE-identical packed output and state to processing their union
+    * as one batch (CurationSpec proves two-batch == one-shot).
+    * Near-dups are dropped against the SIDECAR (corpus + earlier
+    * batches); intra-batch near-dups are not collapsed (the documented
+    * [[graft.ops.Dedup.nearDupAgainstSidecar]] contract) — compose a
+    * batch-level clusterer upstream when that matters.
+    *
+    * Crash ordering (at-least-once replay), sink-first like every
+    * incremental op here: packed rows append BEFORE the sidecar and
+    * state writes. A crash before the sidecar append re-emits the
+    * batch on replay (duplicate packed rows — recoverable); a crash
+    * between the sidecar append and the state writes makes the replay
+    * contribute zero survivors and leaves the states un-advanced, so
+    * the NEXT batch's sequence positions overlap the crashed batch's
+    * tail — duplicates/overlap, never silent loss; rebuild the packed
+    * output from the corpus when exact positions matter. Single writer
+    * per pipelineDir (enforced by the `.lock` marker). */
+  private[graft] def curateBatch(batch: DataFrame, textCol: String,
+      idCol: String, sourceCol: String, pipelineDir: String,
+      shingleK: Int, numHashes: Int, bands: Int, nearDupThreshold: Double,
+      minQuality: Double, tokensPerSource: Long, seqTokens: Long,
+      docsPerSource: Long = Long.MaxValue): Unit = {
+    val spark = batch.sparkSession
+    val fs = new org.apache.hadoop.fs.Path(pipelineDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+
+    // stage 1: near-dup dedup against the persisted sidecar (survivors
+    // are checkpointed inside; signatures append LATER — sink-first)
+    val surv = graft.ops.Dedup.nearDupAgainstSidecar(batch, textCol, idCol,
+      s"$pipelineDir/minhash", shingleK, numHashes, bands,
+      nearDupThreshold, appendSurvivors = false)
+
+    // stage 2: per-row quality gate (pure projection — no state)
+    val kept = surv
+      .filter(graft.ops.TextAnalysis.qualityScore(col(textCol)) >= minQuality)
+      .withColumn("__n_toks",
+        graft.ops.TextAnalysis.tokenCount(col(textCol)).cast("long"))
+
+    // stage 3: per-source rolling budget AND doc cap. Prior =
+    // quality-kept tokens/docs SEEN so far (admitted or not — the
+    // batch mixture stage's running-cum rule); within the batch both
+    // cums order by id on the SAME window.
+    val budgetDir = s"$pipelineDir/budget_state"
+    val prior0 =
+      if (exists(budgetDir)) spark.read.parquet(budgetDir)
+      else kept.select(col(sourceCol)).limit(0)
+        .withColumn("seen_tokens", lit(0L))
+        .withColumn("seen_docs", lit(0L))
+    // pre-doc-cap state dirs lack seen_docs; treat as zero
+    val prior =
+      if (prior0.columns.contains("seen_docs")) prior0
+      else prior0.withColumn("seen_docs", lit(0L))
+    val wSrc = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(sourceCol)).orderBy(col(idCol))
+    val cumFrame = wSrc.rowsBetween(
+      org.apache.spark.sql.expressions.Window.unboundedPreceding,
+      org.apache.spark.sql.expressions.Window.currentRow)
+    val withCum = kept
+      .withColumn("__cum", sum(col("__n_toks")).over(cumFrame))
+      .withColumn("__rn", row_number().over(wSrc).cast("long"))
+    val admitted = withCum
+      .join(broadcast(prior.withColumnRenamed(sourceCol, "__psrc")
+        .withColumnRenamed("seen_tokens", "__prior")
+        .withColumnRenamed("seen_docs", "__prior_docs")),
+        col(sourceCol) === col("__psrc"), "left_outer")
+      .withColumn("__prior", coalesce(col("__prior"), lit(0L)))
+      .withColumn("__prior_docs", coalesce(col("__prior_docs"), lit(0L)))
+      .filter(col("__prior") + col("__cum") <= tokensPerSource &&
+        col("__prior_docs") + col("__rn") <= docsPerSource)
+      .drop("__psrc", "__cum", "__rn", "__prior_docs")
+
+    // stage 4: sequence packing continuing from the persisted offset
+    val packDir = s"$pipelineDir/pack_state"
+    val offset =
+      if (exists(packDir))
+        spark.read.parquet(packDir).head().getLong(0)
+      else 0L
+    val packed = graft.ops.Relational.packSequences(
+        admitted.select(col(idCol), col(sourceCol), col("__n_toks")),
+        order = Seq(col(idCol)), nTokens = col("__n_toks"),
+        seqTokens = seqTokens)
+      .withColumn("cum_tokens", col("cum_tokens") + lit(offset))
+      .withColumn("start_seq", expr(s"(cum_tokens - n_toks) DIV $seqTokens"))
+      .withColumn("start_offset", expr(s"(cum_tokens - n_toks) % $seqTokens"))
+      .withColumn("end_seq", expr(s"(cum_tokens - 1) DIV $seqTokens"))
+      .select(col(idCol), col(sourceCol), col("n_toks"), col("cum_tokens"),
+        col("start_seq"), col("start_offset"), col("end_seq"))
+      .localCheckpoint(true)
+    val batchSeen = kept.groupBy(col(sourceCol))
+      .agg(sum(col("__n_toks")).as("__batch_seen"),
+        count(lit(1)).as("__batch_docs"))
+    val newState = prior
+      .join(batchSeen, Seq(sourceCol), "full_outer")
+      .select(col(sourceCol),
+        (coalesce(col("seen_tokens"), lit(0L)) +
+          coalesce(col("__batch_seen"), lit(0L))).as("seen_tokens"),
+        (coalesce(col("seen_docs"), lit(0L)) +
+          coalesce(col("__batch_docs"), lit(0L))).as("seen_docs"))
+      .localCheckpoint(true)
+    val admittedTokens = packed.agg(coalesce(sum(col("n_toks")), lit(0L)))
+      .head().getLong(0)
+
+    // writes, sink-first (see crash ordering above), under the
+    // pipeline-dir lock: the sidecar append's own lock covers only the
+    // minhash tables — the budget/pack state files need the same
+    // single-writer enforcement (a second concurrent pipeline would
+    // silently double-admit budgets and overlap sequence positions)
+    graft.sources.Sinks.withDirLock(spark, pipelineDir, "curateBatch") {
+      packed.write.mode("append").parquet(s"$pipelineDir/packed")
+      failpoint("curateBatch:after-packed-append")
+      graft.ops.Dedup.writeMinhashSidecar(surv, textCol, idCol,
+        s"$pipelineDir/minhash", shingleK, numHashes, bands)
+      failpoint("curateBatch:after-sidecar-append")
+      newState.coalesce(1).write.mode("overwrite").parquet(budgetDir)
+      import spark.implicits._
+      Seq(offset + admittedTokens).toDF("next_offset")
+        .coalesce(1).write.mode("overwrite").parquet(packDir)
+    }
+    ()
+  }
 }

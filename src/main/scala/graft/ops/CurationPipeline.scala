@@ -203,8 +203,8 @@ object CurationPipeline {
     *     executions per ingest, which CurationPipelineSpec pins.
     *  3. SINK FIRST — the survivor metadata lands as an OVERWRITE of
     *     this shard's own partition directory (idempotent by
-    *     construction; the ordering [[graft.streaming.EventStreams
-    *     .runCurationToParquet]] documents, now on the batch path).
+    *     construction; the ordering [[graft.ops.Curation.curateBatch]]
+    *     documents).
     *  4. SIDECAR APPENDS, each tagged `batch_id = shardId`: digest
     *     fps and chunk keys are set-semantics (replayed duplicates
     *     collapse at compaction and are excluded from the replay's

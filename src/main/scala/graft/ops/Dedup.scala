@@ -271,41 +271,6 @@ object Dedup {
       lit(0L), (acc, x) => acc.bitwiseOR(x))
   }
 
-  /** SimHash band keys: the 64-bit fingerprint cut into 16-bit chunks.
-    * Docs within hamming distance 3 share at least one intact chunk
-    * (pigeonhole), so joining on chunks finds all such pairs. */
-  def simhashBands(sim: Column): Column =
-    transform(sequence(lit(0), lit(3)),
-      b => struct(b.as("band"),
-        call_function("shiftright", sim, b * lit(16))
-          .bitwiseAND(lit(0xFFFFL)).as("chunk")))
-
-  /** SimHash near-duplicate pairs via chunk-bucket grouping + exact
-    * hamming-distance filter (bit_count of XOR). Same bucket-cap
-    * discipline as [[minhashDedupPairs]]: a chunk shared by more than
-    * `bucketCap` docs carries no signal and is dropped rather than
-    * allowed to go quadratic. */
-  def simhashDedupPairs(df: DataFrame, textCol: String, idCol: String,
-                        maxHamming: Int = 3, bucketCap: Int = 200): DataFrame = {
-    val withSim = df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sim"))
-    val sig = withSim.select(col("id"),
-      explode(simhashBands(col("sim"))).as("bk"))
-    val buckets = sig.groupBy(col("bk"))
-      .agg(collect_list(col("id")).as("ids"), count(lit(1)).as("n"))
-      .filter(col("n").between(2, bucketCap))
-    val pairs = buckets
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .distinct()
-    val simA = withSim.select(col("id").as("id_a"), col("sim").as("sim_a"))
-    val simB = withSim.select(col("id").as("id_b"), col("sim").as("sim_b"))
-    pairs.join(simA, "id_a").join(simB, "id_b")
-      .select(col("id_a"), col("id_b"),
-        call_function("bit_count", col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
   /** Interpreted-HOF md5 minhash signature (reference formulation,
     * bit-identical to [[graft.functions.MinHashMd5Signature]]): for
     * each seed, the minimum md5-top-60-bit hash of
@@ -431,8 +396,8 @@ object Dedup {
     * sidecar, so that later actions re-read materialized survivors
     * instead of re-running the anti-join against a sidecar that
     * meanwhile contains this batch's own fingerprints (which would
-    * drop everything). [[dedupAgainstSidecar]] and
-    * [[dedupAgainstSidecarTo]] checkpoint it directly; the
+    * drop everything). [[dedupAgainstSidecar]] checkpoints it
+    * directly; the
     * [[graft.ops.CurationPipeline]] ingest checkpoints the whole
     * stage 1–3 decision built on top of it, in one pass.
     *
@@ -538,10 +503,10 @@ object Dedup {
     * SINGLE-WRITER CONTRACT: the sidecar has no commit protocol — two
     * concurrent shard ingests could each pass the anti-join and then
     * both append, admitting duplicate survivors. Serialize ingests per
-    * sidecar (the same restriction [[graft.streaming.EventStreams
-    * .runUpsertToParquet]] documents for its snapshot). For a pipeline
-    * that also SINKS the survivors, prefer [[dedupAgainstSidecarTo]],
-    * which orders the two writes crash-safely.
+    * sidecar. A pipeline that also SINKS the survivors must append
+    * them to the sink BEFORE the sidecar (the sink-first order of
+    * [[graft.ops.Curation.curateBatch]]): a crash between the writes
+    * then re-emits duplicates instead of losing documents.
     *
     * `bloomPrefilter = true` routes membership through the sidecar's
     * Bloom companion ([[writeSidecarBloom]]) when present: definitely-
@@ -550,8 +515,8 @@ object Dedup {
     * append. Crash between those two writes leaves the bloom missing
     * that batch's fingerprints, so a replay (or later batches) can
     * re-admit exactly those documents as duplicate survivors — the
-    * same recoverable duplicates-not-loss direction as
-    * [[dedupAgainstSidecarTo]]'s crash window; the next
+    * same recoverable duplicates-not-loss direction as the sink-first
+    * order's crash window; the next
     * [[writeSidecarBloom]] rebuild reconverges. */
   def dedupAgainstSidecar(batch: DataFrame, textCol: String, idCol: String,
                           sidecarDir: String,
@@ -692,35 +657,6 @@ object Dedup {
       raw.filter(!coalesce(
         col("batch_id").isin(dropBatchIds.toSeq: _*), lit(false)))
     else raw
-
-  /** Incremental dedup straight into a parquet sink, with the two
-    * writes ordered for crash safety: survivors are appended to
-    * `outDir` BEFORE their fingerprints reach the sidecar. A crash
-    * between the writes makes a replay re-emit the batch's survivors —
-    * duplicate output rows, which downstream dedup tolerates and a
-    * sink repair can remove — instead of the reverse order's silent
-    * data loss (a replay would find its own fingerprints already
-    * persisted, admit zero survivors, and the documents would never
-    * reach the corpus). A replay of a FULLY committed batch still
-    * contributes zero survivors. Same single-writer contract as
-    * [[dedupAgainstSidecar]]. */
-  def dedupAgainstSidecarTo(batch: DataFrame, textCol: String, idCol: String,
-                            sidecarDir: String, outDir: String,
-                            bloomPrefilter: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val survivors =
-      sidecarSurvivors(batch, textCol, idCol, sidecarDir, bloomPrefilter)
-        .localCheckpoint(true)
-    survivors.drop("__fp").write.mode("append").parquet(outDir)
-    // distinct by construction (one rank-1 survivor per fingerprint)
-    val newFps = survivors.filter(col("__fp").isNotNull)
-      .select(col("__fp").as("fp"))
-    // sidecar (and Bloom companion) append AFTER the sink — a crash
-    // between the writes makes a replay re-emit duplicates, never lose
-    // documents (see scaladoc)
-    appendDigestFps(spark, newFps, sidecarDir, bloomPrefilter,
-      batchId = None, op = "dedupAgainstSidecarTo")
-  }
 
   /** Guarded id→long cast for the minhash-sidecar family, whose
     * stored layout keys documents by BIGINT id: a silently nulled cast
@@ -963,28 +899,6 @@ object Dedup {
         .coalesce(coalesceTo).sortWithinPartitions(col("bucket"))
         .write.mode("append").parquet(s"$sidecarDir/stats")
     }
-
-  /** Near-dup dedup straight into a parquet sink, writes ordered for
-    * crash safety exactly like [[dedupAgainstSidecarTo]]: survivors
-    * reach `outDir` BEFORE their signatures reach the sidecar, so a
-    * crash between the writes re-admits the batch on replay
-    * (duplicate output rows, recoverable) — never silent loss. A
-    * replay of a fully committed batch contributes zero survivors
-    * (its signatures estimate 1.0 against themselves). Same
-    * single-writer contract. */
-  def nearDupAgainstSidecarTo(batch: DataFrame, textCol: String,
-                              idCol: String, sidecarDir: String,
-                              outDir: String, shingleK: Int = 2,
-                              numHashes: Int = 64, bands: Int = 8,
-                              threshold: Double = 0.7,
-                              bucketCap: Int = 200): Unit = {
-    val survivors = nearDupAgainstSidecar(batch, textCol, idCol, sidecarDir,
-      shingleK, numHashes, bands, threshold, bucketCap,
-      appendSurvivors = false)
-    survivors.write.mode("append").parquet(outDir)
-    writeMinhashSidecar(survivors, textCol, idCol, sidecarDir,
-      shingleK, numHashes, bands)
-  }
 
   /** Substring-level exact dedup signal: per-document duplicated-SPAN
     * fraction — how much of each document consists of token windows

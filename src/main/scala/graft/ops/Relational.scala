@@ -132,18 +132,6 @@ object Relational {
   def decAvg(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(28, scale))).cast("double") / count(c)
 
-  /** Stable per-record id with NO shuffle and NO driver coordination:
-    * hash of (source file path, row index within file) from the
-    * parquet scan's `_metadata` struct. Unlike
-    * `monotonically_increasing_id` (partition-layout-dependent) or a
-    * row_number window (global sort), this id is reproducible across
-    * runs and cluster sizes as long as the files don't change — the
-    * right identity for sample-level lineage at 100 TB. Must be
-    * applied directly to a file-scan DataFrame (before joins/aggs). */
-  def provenanceId(df: DataFrame): DataFrame =
-    df.withColumn("provenance_id",
-      xxhash64(col("_metadata.file_path"), col("_metadata.row_index")))
-
   /** Forward fill (last observation carried forward): each null takes
     * the latest non-null value earlier in `order` within the same
     * `keys` partition — the standard time-series gap fill, as one

@@ -90,25 +90,4 @@ object RetrievalMetrics {
           .cast("double") / col("idcg").cast("double"), 6).as("ndcg"))
   }
 
-  /** Suite-level macro averages of [[rankingMetrics]] — mean P@k/R@k/
-    * MRR/nDCG plus query counts; each mean is an exact decimal sum of
-    * the per-query rounded values divided once (count is exact), so
-    * the summary replays like the per-query rows. */
-  def rankingMetricsSummary(ranking: DataFrame, relevance: DataFrame,
-                            k: Int): DataFrame =
-    rankingMetrics(ranking, relevance, k)
-      .agg(
-        count(lit(1)).as("n_queries"),
-        sum(col("n_hit")).as("n_hit_total"),
-        round(sum(col("precision_at_k").cast("decimal(18,6)"))
-          .cast("double") / count(lit(1)).cast("double"), 6)
-          .as("mean_precision_at_k"),
-        round(sum(col("recall_at_k").cast("decimal(18,6)"))
-          .cast("double") / count(lit(1)).cast("double"), 6)
-          .as("mean_recall_at_k"),
-        round(sum(col("rr").cast("decimal(18,6)"))
-          .cast("double") / count(lit(1)).cast("double"), 6).as("mrr"),
-        round(sum(col("ndcg").cast("decimal(18,6)"))
-          .cast("double") / count(lit(1)).cast("double"), 6)
-          .as("mean_ndcg"))
 }

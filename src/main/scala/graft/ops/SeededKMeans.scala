@@ -425,8 +425,8 @@ object SeededKMeans {
     * the MLlib fit keeps the maintenance op rows-only).
     *
     * Replay safety (round 18 — the exactly-once rollout reaching the
-    * streaming ANN ingest): an UNTAGGED append keeps the historical
-    * at-least-once caveat — a checkpoint-recovery replay appends the
+    * incremental ANN ingest): an UNTAGGED append keeps the historical
+    * at-least-once caveat — a crash-recovery replay appends the
     * batch's vectors twice, and a duplicated vector can occupy TWO of
     * the k neighbor slots in stored-index answers. Passing `batchId`
     * (unique per logical batch; requires an index built with a
@@ -473,12 +473,12 @@ object SeededKMeans {
     else raw
 
   /** Physically collapse replayed append duplicates and the
-    * small-files tax of many streamed appends: one file set per cell,
+    * small-files tax of many appends: one file set per cell,
     * one row per (batch_id, vec_id) — re-tagged with the
     * `__compacted__` sentinel — via the shared backup-swap compaction,
     * cell partitioning preserved (probe plans keep pruning). Untagged
     * indexes just get the file compaction. Run it on the ingest
-    * cadence, after in-flight micro-batches are resolved (the
+    * cadence, after in-flight batches are resolved (the
     * standing tagged-sidecar discipline). */
   def compactIvfVectorsSeeded(spark: SparkSession, indexDir: String): Unit =
     graft.sources.Sinks.compactParquetDir(spark, s"$indexDir/vectors",

@@ -275,9 +275,8 @@ object Similarity {
     * vector is assigned to its nearest STORED centroid — exact
     * squared-euclidean argmin, ties to the lowest cell id, the same
     * rule `KMeans.transform` applies — and appended to the
-    * cell-partitioned layout, where [[annJoinIvfStored]] /
-    * [[ivfCosineTopKStored]] see it on their next scan with no other
-    * change.
+    * cell-partitioned layout, where [[annJoinIvfStored]] sees it on
+    * its next scan with no other change.
     *
     * Shape at scale: candidates come from a broadcast nested loop
     * against the nlist-row centroid table (bounded build side), the
@@ -285,15 +284,15 @@ object Similarity {
     * [[sqEuclidean]] expression (no interpreted HOF lambdas in the
     * ingest hot path), and the argmin is a map-side-combining `min_by`
     * — one narrow shuffle row per vector. Centroids drift as the
-    * corpus grows; audit with [[auditIvfIndex]] and rebuild with
-    * [[rebalanceIvfIndex]] when cell-size skew warrants, serving reads
-    * from the appended index meanwhile. Same single-writer contract as
+    * corpus grows; rebuild with [[buildIvfIndex]] when cell-size skew
+    * warrants, serving reads from the appended index meanwhile. Same
+    * single-writer contract as
     * the dedup sidecar ([[graft.ops.Dedup.dedupAgainstSidecar]]),
     * ENFORCED by the `.lock` marker ([[graft.sources.Sinks
     * .withDirLock]]) — a concurrent second appender fails loud.
     * Appends are NOT idempotent — replaying a batch appends duplicate
     * (vec_id, vec) rows; dedup replays upstream (the sidecar pattern)
-    * or drop duplicates by vec_id when rebuilding/compacting. */
+    * or drop duplicates by vec_id when rebuilding. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String, df: DataFrame,
                        idCol: String, vecCol: String): Unit =
@@ -312,212 +311,6 @@ object Similarity {
         .write.mode("append").partitionBy("cell")
         .parquet(s"$indexDir/vectors")
     }
-
-  /** Per-cell health report of a stored IVF index — the audit run
-    * before deciding a [[rebalanceIvfIndex]]: one row per centroid
-    * cell with its stored vector count (empty cells report 0 — drift
-    * starves cells as often as it floods them) and its share of the
-    * corpus. One map-side-combined aggregate over the vectors layout
-    * plus the nlist-row centroid table; the share window is
-    * unpartitioned but bounded by nlist rows (the same bounded class
-    * as the centroid collect). Probe cost degrades with skew: a query
-    * probing a cell holding 30% of the corpus re-ranks 30% of it, so
-    * `max(share) · nlist ≫ 1` is the rebalance signal. */
-  def auditIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                    indexDir: String): DataFrame = {
-    val counts = spark.read.parquet(s"$indexDir/vectors")
-      .groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
-    spark.read.parquet(s"$indexDir/centroids").select(col("cell"))
-      .join(counts, Seq("cell"), "left_outer")
-      .withColumn("n_vectors", coalesce(col("n_vectors"), lit(0L)))
-      .withColumn("share", col("n_vectors").cast("double") /
-        sum(col("n_vectors")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy()))
-  }
-
-  /** Rebalance a stored IVF index whose cells have gone skewed after a
-    * run of [[appendToIvfIndex]] batches against frozen centroids:
-    * refit KMeans on (a deterministic hash-sample of) the CURRENT
-    * stored vectors, reassign every vector to the new cells, and
-    * rewrite BOTH tables via a tmp → backup → swap (the
-    * [[graft.sources.Sinks.compactParquetDir]] discipline). Serving
-    * reads continue off the old layout until the swap; a crash
-    * mid-swap leaves `__rebal_bak` dirs holding the complete old
-    * layout to restore by hand — never a half-written live dir mixing
-    * old centroids with new cell assignments.
-    *
-    * `sampleFraction` bounds the KMeans fit cost at corpus scale (the
-    * fit is the expensive half; assignment is one broadcast pass with
-    * the fused [[sqEuclidean]]); the sample is md5-hash-deterministic
-    * per vec_id, so reruns train on the same rows.
-    * `dropDuplicateIds = true` additionally collapses duplicate vec_id
-    * rows left by replayed appends — one row per id, the array-min
-    * vector deterministically winning ties (replays store identical
-    * vectors, so this is a pure duplicate collapse). Single-writer
-    * enforced via the indexDir `.lock`.
-    *
-    * IVFPQ layouts ([[buildIvfPqIndex]]) carry a `codes/` table
-    * partitioned by the SAME cells — leaving it untouched after a
-    * rebalance would have [[annJoinIvfPqStored]] prune by the new
-    * centroids while reading codes filed under the old cells. When
-    * `codes/` exists the rebalance re-encodes the reassigned vectors
-    * against the STORED codebooks (codes are non-residual, so the
-    * bytes are bit-identical to the old table — only the cell
-    * partitioning changes, and the codebooks are deliberately NOT
-    * refit) and swaps all three tables atomically together. */
-  def rebalanceIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String, nlist: Int = 16,
-                        seed: Long = 42L, sampleFraction: Double = 1.0,
-                        dropDuplicateIds: Boolean = false): Unit =
-    graft.sources.Sinks.withDirLock(spark, indexDir, "rebalanceIvfIndex") {
-      import spark.implicits._
-      require(sampleFraction > 0.0 && sampleFraction <= 1.0,
-        s"sampleFraction must be in (0, 1], got $sampleFraction")
-      val stored = spark.read.parquet(s"$indexDir/vectors")
-        .select(col("vec_id"), col("vec"))
-      val deduped =
-        if (!dropDuplicateIds) stored
-        else stored.groupBy(col("vec_id"))
-          .agg(min(col("vec")).as("vec"))
-      // sever lineage from the files about to be replaced: every later
-      // job (fit, assignment, the write) reads the checkpoint, not the
-      // live dir mid-swap
-      val base = deduped.withColumn("fv", array_to_vector(col("vec")))
-        .localCheckpoint(true)
-      val train =
-        if (sampleFraction >= 1.0) base
-        else {
-          // md5-derived uniform (the engine's deterministic-sampling
-          // construction): reproducible across runs and cluster sizes
-          val u = (conv(substring(md5(concat_ws("|", col("vec_id"),
-            lit(seed))), 1, 15), 16, 10).cast("double") + 1.0) /
-            1.152921504606847e18
-          base.filter(u < sampleFraction)
-        }
-      val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-        .setFeaturesCol("fv").setPredictionCol("cell").fit(train)
-      val assigned = model.transform(base)
-        .select(col("vec_id"), col("vec"), col("cell"))
-      val centroids = model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def p(s: String) = new org.apache.hadoop.fs.Path(s)
-      // an IVFPQ layout's codes table moves cells with its vectors
-      val hasCodes = fs.exists(p(s"$indexDir/codes"))
-      val tables = Seq("vectors", "centroids") ++
-        (if (hasCodes) Seq("codes") else Nil)
-      // write all replacements fully before touching the live layout
-      tables.foreach(t => fs.delete(p(s"$indexDir/${t}__rebal_tmp"), true))
-      assigned.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/vectors__rebal_tmp")
-      centroids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexDir/centroids__rebal_tmp")
-      if (hasCodes) {
-        val codebooks = spark.read.parquet(s"$indexDir/codebooks")
-          .collect()  // bounded: m × ksub tiny rows
-          .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-          .map { case (_, rows) =>
-            rows.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray).toArray
-          }.toArray
-        assigned.select(col("vec_id"),
-          graft.functions.GraftFunctions.pq_encode(col("vec"), codebooks,
-            normalize = true).as("codes"),
-          col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/codes__rebal_tmp")
-      }
-      tables.foreach(t => fs.delete(p(s"$indexDir/${t}__rebal_bak"), true))
-      require(tables.forall(t => fs.rename(p(s"$indexDir/$t"),
-        p(s"$indexDir/${t}__rebal_bak"))),
-        s"rebalanceIvfIndex: could not stage backups under $indexDir")
-      require(tables.forall(t => fs.rename(p(s"$indexDir/${t}__rebal_tmp"),
-        p(s"$indexDir/$t"))),
-        s"rebalanceIvfIndex: could not swap new layout into $indexDir " +
-          "(old layout preserved at __rebal_bak)")
-      tables.foreach(t => fs.delete(p(s"$indexDir/${t}__rebal_bak"), true))
-      ()
-    }
-
-  /** Audit-gated rebalance: run [[rebalanceIvfIndex]] only when the
-    * stored index's worst cell holds more than `maxShare` of the
-    * corpus (the probe-cost degradation signal [[auditIvfIndex]]
-    * documents — a query probing a 30 %-of-corpus cell re-ranks 30 %
-    * of it). The periodic-maintenance entry point: cheap when healthy
-    * (one aggregate), full refit only when drift warrants. Returns
-    * whether a rebalance ran. */
-  def rebalanceIvfIndexIfSkewed(spark: org.apache.spark.sql.SparkSession,
-                                indexDir: String, maxShare: Double = 0.5,
-                                nlist: Int = 16, seed: Long = 42L,
-                                sampleFraction: Double = 1.0,
-                                dropDuplicateIds: Boolean = false): Boolean = {
-    require(maxShare > 0.0 && maxShare <= 1.0,
-      s"maxShare must be in (0, 1], got $maxShare")
-    val worst = auditIvfIndex(spark, indexDir)
-      .agg(max(col("share"))).head().getDouble(0)
-    val skewed = worst > maxShare
-    if (skewed)
-      rebalanceIvfIndex(spark, indexDir, nlist, seed, sampleFraction,
-        dropDuplicateIds)
-    skewed
-  }
-
-  /** Compact the stored index's vectors layout after a run of
-    * [[appendToIvfIndex]] batches: each append adds a file set per
-    * touched cell directory, and probe-time scan cost is
-    * files-per-probed-cell, not bytes. Rewrites each cell directory to
-    * a single file (repartition on the partition column — one task
-    * writes each dir) via [[graft.sources.Sinks.compactParquetDir]]'s
-    * backup-swap. Takes the SAME indexDir lock as the appenders (the
-    * inner vectors-dir lock alone would not exclude a concurrent
-    * [[appendToIvfIndex]], whose freshly appended files the swap would
-    * silently drop); the centroid table is untouched. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String): Unit =
-    graft.sources.Sinks.withDirLock(spark, indexDir, "compactIvfIndex") {
-      graft.sources.Sinks.compactParquetDir(spark, s"$indexDir/vectors",
-        partitionCols = Seq("cell"))
-      // IVFPQ layouts carry a codes table beside the vectors — compact
-      // it under the same index lock when present
-      val codes = new org.apache.hadoop.fs.Path(s"$indexDir/codes")
-      if (codes.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(codes)) {
-        graft.sources.Sinks.compactParquetDir(spark, s"$indexDir/codes",
-          partitionCols = Seq("cell"))
-      }
-    }
-
-  /** Query the stored index: probe cells are ranked IN-ROW against the
-    * broadcast centroid table with the same fused [[cosine]] and the
-    * same tie rule as [[annJoinIvfStored]] (one tiny 1 × nlist plan —
-    * the single-query form of the batch join, not a separate
-    * driver-side loop); the collected probe set is ≤ nprobe values
-    * (the bounded-driver class), and the data scan reads ONLY those
-    * pruned partitions (PartitionFilters — asserted in the spec). */
-  def ivfCosineTopKStored(spark: org.apache.spark.sql.SparkSession,
-                          indexDir: String, queryId: Long, k: Int,
-                          nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
-    val q = vectors.filter(col("vec_id") === queryId)
-      .select(col("vec").as("qvec"))
-    val probeCells = q
-      .crossJoin(broadcast(spark.read.parquet(s"$indexDir/centroids")))
-      .select(col("cell"), cosine(col("qvec"), col("centroid")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cell"))
-      .limit(nprobe)
-      .select(col("cell")).collect().map(_.getInt(0))
-    vectors
-      .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
-      .filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(cosine(col("vec"), col("qvec")), roundTo).as("cos"),
-        col("cell"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
 
   /** Embedding-cosine near-duplicate pairs: hyperplane-LSH bucket all
     * vectors (projection), generate candidate pairs only within
@@ -555,8 +348,8 @@ object Similarity {
     * partition, connect pairs whose exact cosine clears `threshold`,
     * and label each connected group. Returns (idCol, component) for
     * EVERY input row — singletons label themselves — so callers can
-    * either drop duplicates ([[semanticDedup]]) or weight/inspect the
-    * groups.
+    * either drop duplicates (keep one row per component) or
+    * weight/inspect the groups.
     *
     * Two deliberate deviations from the paper, both scale-motivated:
     * the space partition is the engine's deterministic hyperplane-LSH
@@ -586,31 +379,15 @@ object Similarity {
       .select(col("node").as(idCol), col("component"))
   }
 
-  /** Semantic dedup, corpus-in corpus-out: keep ONE row per semantic
-    * group of [[semanticDedupClusters]] — the min-id representative —
-    * with the input schema unchanged (the [[graft.ops.Dedup
-    * .exactDedup]] contract, lifted from byte equality to embedding
-    * similarity). For quality-aware survivor selection, compose the
-    * clusters with an argmax the way q129 does. */
-  def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double = 0.95, bits: Int = 8,
-                    dim: Int = 64, bucketCap: Int = 1000): DataFrame = {
-    val comp = semanticDedupClusters(df, idCol, vecCol, threshold, bits,
-      dim, bucketCap)
-    val survivors = comp.groupBy(col("component"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(col(idCol))
-    df.join(survivors, Seq(idCol), "left_semi")
-  }
-
   /** Diversity-preserving subset selection — coverage-first sampling
     * over the embedding space: pick `k` rows such that every occupied
     * hyperplane-LSH bucket contributes its first (deterministic) pick
     * before any bucket contributes a second, then round-robin. A
     * uniform sample of a 90 %-near-duplicate corpus is 90 % near-dups;
     * this spreads the budget across semantic regions instead of
-    * following density — the KEEP-side complement of [[semanticDedup]]
-    * (which drops duplicates; this allocates a budget).
+    * following density — the KEEP-side complement of
+    * [[semanticDedupClusters]] (which finds duplicates; this allocates
+    * a budget).
     *
     * Deterministic end-to-end: buckets are sign-of-projection on the
     * fixed seeded planes ([[lshBucket]] — fused codegen), within-bucket
@@ -931,9 +708,8 @@ object Similarity {
   /** Materialize the IVF index layout from FIXED centroids — the
     * [[buildIvfIndex]] twin with [[assignCellsFixed]] in place of the
     * MLlib fit+transform. Same on-disk layout (cell-partitioned
-    * vectors + centroid table), so [[annJoinIvfStoredFixed]],
-    * [[appendToIvfIndex]], [[auditIvfIndex]] and [[compactIvfIndex]]
-    * all serve it unchanged. */
+    * vectors + centroid table), so [[annJoinIvfStoredFixed]] and
+    * [[appendToIvfIndex]] both serve it unchanged. */
   def buildIvfIndexFromCentroids(df: DataFrame, idCol: String,
                                  vecCol: String, indexDir: String,
                                  centroids: Seq[(Int, Seq[Double])],
@@ -1355,48 +1131,6 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$indexDir/codebooks")
     }
   }
-
-  /** Append new vectors to a stored IVFPQ index WITHOUT refitting —
-    * [[appendToIvfIndex]]'s incremental-ingest contract extended to
-    * the codes layout: each vector is assigned to its nearest STORED
-    * centroid (fused sq-euclidean argmin, ties to the lowest cell)
-    * and encoded against the STORED codebooks (non-residual, so a
-    * code never depends on its cell — appends can't skew quantization
-    * accuracy, only cell balance, which [[auditIvfIndex]]'s signal
-    * covers for both layouts since they share the vectors table).
-    * One pass feeds both partitioned appends; same lock, same
-    * non-idempotent-replay caveat as [[appendToIvfIndex]]. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String, df: DataFrame,
-                         idCol: String, vecCol: String): Unit =
-    graft.sources.Sinks.withDirLock(spark, indexDir, "appendToIvfPqIndex") {
-      val centroids = broadcast(spark.read.parquet(s"$indexDir/centroids"))
-      val codebooks = spark.read.parquet(s"$indexDir/codebooks")
-        .collect()  // bounded: m × ksub tiny rows
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map { case (_, rows) =>
-          rows.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray).toArray
-        }.toArray
-      val v = col(vecCol).cast("array<double>")
-      val assigned = df.select(col(idCol).as("vec_id"), v.as("vec"))
-        .crossJoin(centroids) // bounded: build side is nlist rows
-        .select(col("vec_id"), col("vec"), col("cell"),
-          sqEuclidean(col("vec"), col("centroid")).as("dist2"))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("cell"), col("vec")),
-          struct(col("dist2"), col("cell"))).as("__r"))
-        .select(col("vec_id"), col("__r.vec").as("vec"),
-          col("__r.cell").as("cell"),
-          graft.functions.GraftFunctions.pq_encode(col("__r.vec"), codebooks,
-            normalize = true).as("codes"))
-        .localCheckpoint(true)
-      assigned.select(col("vec_id"), col("vec"), col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexDir/vectors")
-      assigned.select(col("vec_id"), col("codes"), col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexDir/codes")
-    }
 
   /** Batch k-NN join through the stored IVFPQ index: probe cells are
     * picked in-row against the broadcast centroid table (the

@@ -56,8 +56,8 @@ object Sketches {
     * register), but the exact `n_rows` companion DOUBLE-COUNTS under
     * an at-least-once replay — untagged appends keep that historical
     * caveat. Passing `batchId` (unique per logical shard) retires it:
-    * rows carry a `batch_id` column and every read ([[mergedSketches]],
-    * [[mergedDistinct]], [[compactSketchSidecar]]) keeps ONE row per
+    * rows carry a `batch_id` column and every read ([[mergedDistinct]],
+    * [[compactSketchSidecar]]) keeps ONE row per
     * (batch_id, group) before aggregating. Replicas of a replayed
     * append carry identical exact counts and value-equal sketches
     * (the HLL register state is a pure function of the value SET;
@@ -128,8 +128,8 @@ object Sketches {
     * inclusion–exclusion, |A∩B| ≈ est(A) + est(B) − est(A∪B), and the
     * union sketch is the lossless `hll_union` of the two group
     * sketches. Input is one MERGED sketch row per group (the
-    * [[distinctSketches]] output, or [[mergedSketches]] over a
-    * sidecar); the pair join is a self-join on group < group —
+    * [[distinctSketches]] output, or a sidecar's rows merged per
+    * group); the pair join is a self-join on group < group —
     * |groups|² sketch pairs, each a KB-sized union, trivially
     * parallel and independent of corpus size.
     *
@@ -151,16 +151,6 @@ object Sketches {
         greatest(col("approx_a") + col("approx_b") - col("approx_union"),
           lit(0L)))
   }
-
-  /** Re-merge an append-accumulated sidecar into ONE sketch row per
-    * group (counts summed, sketches unioned) WITHOUT estimating —
-    * the input shape [[overlapMatrix]] wants. */
-  def mergedSketches(spark: SparkSession, sidecarDir: String,
-                     groupCols: Seq[String]): DataFrame =
-    dedupedSketchRows(spark.read.parquet(sidecarDir), groupCols)
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum(col("n_rows")).as("n_rows"),
-        hll_union_agg(col("sketch")).as("sketch"))
 
   /** Merge ALL accumulated sidecar rows (one per shard × group) into
     * per-group totals: exact row counts sum, sketches union, and the
@@ -246,14 +236,10 @@ object Sketches {
     * this family): UNTAGGED appends keep the historical
     * at-least-once caveat — a replayed shard double-counts its bins.
     * Passing `batchId` (unique per logical shard) retires it: rows
-    * carry a `batch_id` column and every read
-    * ([[mergedHistogram]], [[compactHistSidecar]]) collapses
+    * carry a `batch_id` column and [[mergedHistogram]] collapses
     * duplicate (batch_id, group, bin) rows first — replicas of a
     * replayed append are bit-identical deterministic recomputes, so
-    * keeping one is exact. Tagged-ness is fixed at the first append;
-    * compacted rows carry the `__compacted__` sentinel, so compact
-    * only after in-flight batches are resolved (the standing
-    * tagged-sidecar discipline). */
+    * keeping one is exact. Tagged-ness is fixed at the first append. */
   def writeHistSidecar(df: DataFrame, groupCols: Seq[String],
                        valueCol: String, sidecarDir: String,
                        lo: Double, hi: Double, bins: Int,
@@ -287,25 +273,6 @@ object Sketches {
     dedupedHist(spark.read.parquet(sidecarDir), groupCols)
       .groupBy((groupCols.map(col) :+ col("bin")): _*)
       .agg(sum(col("cnt")).as("cnt"))
-
-  /** Many appended partials → one summed row per (group, bin) via the
-    * shared backup-swap compaction; duplicate tagged appends collapse
-    * before the sum and the output carries the `__compacted__`
-    * sentinel (the [[graft.ops.Curation.compactTokenCountSidecar]]
-    * shape for histograms). */
-  def compactHistSidecar(spark: SparkSession, sidecarDir: String,
-                         groupCols: Seq[String]): Unit =
-    graft.sources.Sinks.compactParquetDir(spark, sidecarDir,
-      sortCol = Some("bin"),
-      transform = Some { raw =>
-        val summed = dedupedHist(raw, groupCols)
-          .groupBy((groupCols.map(col) :+ col("bin")): _*)
-          .agg(sum(col("cnt")).as("cnt"))
-        if (raw.schema.fieldNames.contains("batch_id"))
-          summed.withColumn("batch_id",
-            lit(graft.ops.LinearProbe.CompactedBatchId))
-        else summed
-      })
 
   /** Quantile estimates from a merged histogram: for each p, the
     * LOWER EDGE of the first bin whose cumulative count reaches
@@ -423,10 +390,7 @@ object Sketches {
     * Jaccard = shared/(na+nb-shared) is one IEEE division of exact
     * longs — replays anywhere; the grams ride as strings (the q113
     * exact-decontamination precedent), which is what makes the whole
-    * matrix oracle-checkable (q165). [[exactOverlapMatrixHashed]] is
-    * the same plan with 8-byte fused XXH64 gram hashes — the 100 TB
-    * path; collisions can only OVER-count overlap, the safe direction
-    * for a contamination screen. */
+    * matrix oracle-checkable (q165). */
   def exactOverlapMatrix(df: DataFrame, groupCol: String,
                          textCol: String, n: Int = 5): DataFrame = {
     val grams = df
@@ -434,21 +398,6 @@ object Sketches {
       .filter(size(col("ts")) >= n)
       .select(col("g"),
         explode(array_distinct(TextAnalysis.wordNgrams(col("ts"), n))).as("gram"))
-      .distinct()
-    exactOverlapFromGramSets(grams)
-  }
-
-  /** [[exactOverlapMatrix]] with fused-codegen hashed grams
-    * ([[graft.functions.HashedShingles]]: one zero-copy byte scan per
-    * doc, 8-byte keys on every shuffle instead of n-word strings) —
-    * the production form at corpus scale. SketchesSpec asserts matrix
-    * equality with the exact-string form on the test corpus. */
-  def exactOverlapMatrixHashed(df: DataFrame, groupCol: String,
-                               textCol: String, n: Int = 5): DataFrame = {
-    val grams = df
-      .select(col(groupCol).as("g"),
-        explode(graft.functions.GraftFunctions.hashed_shingles(col(textCol), n))
-          .as("gram"))
       .distinct()
     exactOverlapFromGramSets(grams)
   }

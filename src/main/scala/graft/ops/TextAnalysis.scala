@@ -223,19 +223,14 @@ object TextAnalysis {
     when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
   }
 
-  /** Order-sensitive rolling document fingerprint: rotate-left-5 XOR
-    * accumulation of per-token hashes — a content-AND-order signature,
-    * unlike the set-based dedup signatures in [[Dedup]]. Pure bit ops,
-    * so no ANSI overflow (a polynomial acc*31+h would throw under
-    * Spark 4's default ANSI mode). Runs as the fused one-scan codegen
-    * expression ([[graft.functions.RollingFingerprint]]); the HOF
-    * formulation is kept as [[fingerprintHof]] for the bit-identity
-    * property test. */
-  def fingerprint(text: Column): Column =
-    graft.functions.GraftFunctions.rolling_fingerprint(text)
-
-  /** Interpreted-HOF fingerprint (reference formulation, bit-identical
-    * to the fused expression). */
+  /** Order-sensitive rolling document fingerprint, interpreted-HOF
+    * reference formulation: rotate-left-5 XOR accumulation of
+    * per-token hashes — a content-AND-order signature, unlike the
+    * set-based dedup signatures in [[Dedup]]. Pure bit ops, so no ANSI
+    * overflow (a polynomial acc*31+h would throw under Spark 4's
+    * default ANSI mode). Bit-identical to the fused one-scan codegen
+    * expression ([[graft.functions.GraftFunctions.rolling_fingerprint]])
+    * that callers use; kept for the bit-identity property test. */
   def fingerprintHof(text: Column): Column =
     aggregate(tokens(text), lit(0L), (acc, t) =>
       shiftleft(acc, 5).bitwiseXOR(shiftrightunsigned(acc, 59))
@@ -248,8 +243,9 @@ object TextAnalysis {
     * replays it with plain signed-64-bit arithmetic. Runs as the fused
     * one-scan codegen expression
     * ([[graft.functions.RollingFingerprintMd5]]); [[fingerprintMd5Hof]]
-    * is the property-test twin. Use [[fingerprint]] (xxhash64, ~3×
-    * faster per token) when external replay isn't needed. */
+    * is the property-test twin. Use
+    * [[graft.functions.GraftFunctions.rolling_fingerprint]] (xxhash64,
+    * ~3× faster per token) when external replay isn't needed. */
   def fingerprintMd5(text: Column): Column =
     graft.functions.GraftFunctions.rolling_fingerprint_md5(text)
 

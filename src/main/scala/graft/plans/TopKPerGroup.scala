@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Exp
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Custom whole-operator: per-group top-k by a numeric score WITHOUT
   * sorting each partition.
@@ -22,7 +21,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   *
   * Ladder position (SURVEY.md §8.4): the (c) option — logical node +
   * planner strategy + physical exec, registered through
-  * SparkSessionExtensions — used here because no composition of
+  * [[graft.functions.GraftExtensions]] — used here because no composition of
   * built-ins avoids the sort.
   *
   * Tie semantics: with `tiebreak` set (an integral column, ascending,
@@ -156,8 +155,7 @@ object TopKPerGroup {
     * rank after every non-null score (ROW_NUMBER ... DESC NULLS LAST
     * parity). With `tiebreakCol` (an integral column; ascending,
     * nulls-first semantics) the selection is exactly
-    * `row_number() OVER (... ORDER BY score DESC, tiebreak ASC) <= k`.
-    * Registers the planner strategy on first use (idempotent). */
+    * `row_number() OVER (... ORDER BY score DESC, tiebreak ASC) <= k`. */
   def topKPerGroup(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
                    scoreCol: String, k: Int,
                    tiebreakCol: Option[String] = None): org.apache.spark.sql.DataFrame = {
@@ -165,10 +163,6 @@ object TopKPerGroup {
       "topKPerGroup needs at least one grouping key; for a global " +
         "top-k use orderBy(...).limit(k) (TakeOrderedAndProject)")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
     val analyzed = df.queryExecution.analyzed
     val resolve = analyzed.outputSet.toSeq.map(a => a.name -> a).toMap
     val keyExprs = keys.map(resolve(_))
@@ -189,12 +183,4 @@ object TopKPerGroup {
     org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
       TopKPerGroup(keyExprs, scoreExpr, tieExpr, k, analyzed))
   }
-}
-
-/** Planner-strategy injection for shared deployments
-  * (spark.sql.extensions): makes TopKPerGroup plannable in any session
-  * built with [[graft.functions.GraftExtensions]]-style wiring. */
-class TopKExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    e.injectPlannerStrategy((_: SparkSession) => TopKStrategy)
 }

@@ -35,7 +35,7 @@ object AdvancedQueries {
 
   /** Batch sessionization (gaps-and-islands): sessions split on
     * >30 min inactivity per user, via lag + running sum — one shuffle
-    * on user_id, oracle-checkable unlike the streaming variant. */
+    * on user_id, oracle-checkable. */
   val q19Sessionize = QueryDef(
     "q19_sessionize",
     """WITH g AS (

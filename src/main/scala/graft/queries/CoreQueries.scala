@@ -288,9 +288,7 @@ object CoreQueries {
       .orderBy(col("c_custkey"))
   }
 
-  /** Tumbling-hour aggregation over the events table — the batch twin
-    * of the Structured Streaming windowed aggregation in
-    * [[graft.streaming.EventStreams]]. */
+  /** Tumbling-hour aggregation over the events table. */
   val q14EventsHourly = QueryDef(
     "q14_events_hourly",
     """SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS hour, event_type, COUNT(*) AS n,

@@ -1632,9 +1632,9 @@ object CurationQueries {
     "2 * ((SELECT max(doc_id) + 1 FROM documents) // 3)"
 
   /** Round-15: finalize-at-ANY-boundary — the operational property
-    * [[graft.streaming.EventStreams.runCurationShards]]'s scaladoc
-    * claims and q221 does NOT prove (q221 certifies only the FINAL
-    * boundary). The corpus arrives as q221's three monotone shards;
+    * an incremental [[graft.ops.CurationPipeline]] needs (its
+    * `finalizePipeline` at ANY shard boundary, not just the last) and
+    * q221 does NOT prove (q221 certifies only the FINAL boundary). The corpus arrives as q221's three monotone shards;
     * after shard 1 the pipeline is finalized MID-STREAM (the curated
     * corpus a team would train on while shards keep arriving), then
     * shard 2 is ingested and the pipeline finalized again. Output is

@@ -347,8 +347,8 @@ object DataQueries {
     * exact fold with `list_reduce` over plain signed-64-bit ops. Still
     * one fused codegen scan per document on the Spark side
     * ([[graft.functions.RollingFingerprintMd5]]); the xxhash64 variant
-    * ([[TextAnalysis.fingerprint]]) stays property-tested for
-    * pipelines that don't need external replay. */
+    * ([[graft.functions.GraftFunctions.rolling_fingerprint]]) stays
+    * property-tested for pipelines that don't need external replay. */
   val q28Fingerprint = QueryDef(
     "q28_fingerprint",
     """SELECT doc_id,

@@ -873,8 +873,7 @@ object ExtendedQueries {
   }
 
   /** Latest record per key (CDC-style compaction): the newest order
-    * per customer, full row, deterministic tiebreak — the batch twin
-    * of the streaming foreachBatch upsert. */
+    * per customer, full row, deterministic tiebreak. */
   val q95LatestPerKey = QueryDef(
     "q95_latest_per_key",
     """SELECT o_custkey, o_orderkey, o_totalprice FROM (

@@ -62,7 +62,7 @@ object LoanQueries {
     * reading the same CSV. Means go through exact decimal sums. */
   val q32LoanImputeMeans = QueryDef(
     "q32_loan_impute_means",
-    """SELECT
+    s"""SELECT
       | CAST(SUM(CAST(rate_of_interest AS DECIMAL(28,8))) AS DOUBLE)/COUNT(rate_of_interest) AS mean_roi,
       | COUNT(*) - COUNT(rate_of_interest) AS nulls_roi,
       | CAST(SUM(CAST(property_value AS DECIMAL(28,2))) AS DOUBLE)/COUNT(property_value) AS mean_pv,
@@ -71,7 +71,7 @@ object LoanQueries {
       | COUNT(*) - COUNT(income) AS nulls_income,
       | CAST(SUM(CAST(LTV AS DECIMAL(28,8))) AS DOUBLE)/COUNT(LTV) AS mean_ltv,
       | COUNT(*) - COUNT(LTV) AS nulls_ltv
-      |FROM read_csv_auto('/root/reference/Loan_Default.csv', header=true)""".stripMargin) { (s, _) =>
+      |FROM read_csv_auto('$csv', header=true)""".stripMargin) { (s, _) =>
     val df = Tables.loan(s)
     def nulls(c: String) = (count(lit(1)) - count(col(c)))
     df.agg(
@@ -95,7 +95,7 @@ object LoanQueries {
     * reference's rand(42). */
   val q33LoanVizChain = QueryDef(
     "q33_loan_viz_chain",
-    """WITH s AS (SELECT * FROM read_csv_auto('/root/reference/Loan_Default.csv', header=true)
+    s"""WITH s AS (SELECT * FROM read_csv_auto('$csv', header=true)
       |           ORDER BY md5(CAST(ID AS VARCHAR)) LIMIT 100)
       |SELECT CAST(ID AS INT) AS id, CAST(loan_amount AS INT) AS loan_amount,
       | CASE WHEN rate_of_interest > 0 THEN rate_of_interest ELSE 0.1 END AS rate_clamped,

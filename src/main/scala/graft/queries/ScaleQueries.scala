@@ -1147,12 +1147,12 @@ object ScaleQueries {
     curationPipeline(docs, dir).orderBy(col("doc_id"))
   }
 
-  /** The STREAMING curation pipeline's per-batch body
-    * ([[graft.streaming.EventStreams.curateBatch]]), oracled: one
-    * micro-batch over a fresh pipeline dir runs near-dup signature
+  /** The incremental curation pipeline's per-batch body
+    * ([[graft.ops.Curation.curateBatch]]), oracled: one
+    * batch over a fresh pipeline dir runs near-dup signature
     * computation + sidecar append (a no-drop stage against the empty
     * sidecar — the cross-batch drop semantics are spec-proven by
-    * EventStreamsSpec's two-batch == one-shot equality), the per-row
+    * CurationSpec's two-batch == one-shot equality), the per-row
     * quality gate, the per-source rolling token budget (the
     * running-cum-≤-budget rule — rejected rows still count), and
     * packing from the persisted zero offset. DuckDB replays the
@@ -1201,7 +1201,7 @@ object ScaleQueries {
       s"target/tmp/q143_pipeline_$sf"
     }
     graft.sources.Sinks.wipeForRebuild(s, dir)
-    graft.streaming.EventStreams.curateBatch(
+    graft.ops.Curation.curateBatch(
       Tables.documents(s, d), "text", "doc_id", "source", dir,
       shingleK = 2, numHashes = 64, bands = 8, nearDupThreshold = 0.7,
       minQuality = 0.5, tokensPerSource = 300L, seqTokens = 256L)
@@ -1209,7 +1209,7 @@ object ScaleQueries {
   }
 
   /** q143's body with the round-8 per-source DOC CAP binding instead
-    * of the token budget ([[graft.streaming.EventStreams.curateBatch]]
+    * of the token budget ([[graft.ops.Curation.curateBatch]]
     * `docsPerSource`): the budget is loose (10k tokens) so every cut
     * in the output is the arrival-prefix doc cap's (rn ≤ 10 within
     * source, rejected rows still counted — the same running-prefix
@@ -1257,7 +1257,7 @@ object ScaleQueries {
       s"target/tmp/q169_pipeline_$sf"
     }
     graft.sources.Sinks.wipeForRebuild(s, dir)
-    graft.streaming.EventStreams.curateBatch(
+    graft.ops.Curation.curateBatch(
       Tables.documents(s, d), "text", "doc_id", "source", dir,
       shingleK = 2, numHashes = 64, bands = 8, nearDupThreshold = 0.7,
       minQuality = 0.5, tokensPerSource = 10000L, seqTokens = 256L,

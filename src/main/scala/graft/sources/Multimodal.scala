@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column handling for training-data pipelines: image /
@@ -202,9 +201,6 @@ object Multimodal {
           try Some((src, pcm.readAllBytes())) finally pcm.close()
         } finally in.close()
       } catch { case _: Exception => None }
-
-    def pcm16le(payload: Array[Byte]): Option[Array[Byte]] =
-      pcm16leWithFormat(payload).map(_._2)
 
     /** Decode + downmix in one seam: payload → the canonical MONO
       * 16-bit sample stream (per time step, the truncating integer
@@ -633,26 +629,6 @@ object Multimodal {
       }
     })
   }
-
-  /** Frame sampling plumbing: slice `n` evenly-spaced byte windows
-    * from the payload — pure Catalyst `substring` on binary, standing
-    * in for keyframe extraction; the array-of-binary shape is what a
-    * real frame sampler produces. */
-  def frameSample(df: DataFrame, payloadCol: String, n: Int,
-                  frameBytes: Int = 16): DataFrame = {
-    val payload = col(payloadCol)
-    val span = greatest(length(payload) - frameBytes, lit(0))
-    df.withColumn("frames",
-      transform(sequence(lit(0), lit(n - 1)), i => {
-        val offset = (i * span) / lit(math.max(n - 1, 1)) + 1
-        call_function("substring", payload, offset, lit(frameBytes))
-      }))
-  }
-
-  /** Resize is metadata-only at the plumbing level: record the target
-    * dims; the pixel work happens inside the codec seam. */
-  def withResizeTarget(df: DataFrame, w: Int, h: Int): DataFrame =
-    df.withColumn("resize_target", struct(lit(w).as("w"), lit(h).as("h")))
 
   /** Deterministic 8×8 PNG payload: pixel colors are a pure function
     * of (id, x, y), encoded losslessly — so the DECODED raster (and

@@ -24,32 +24,6 @@ object Sinks {
     Tables.loan(spark, destPath)
   }
 
-  /** Plain parquet sink. `codec` matters at scale: zstd trades ~10%
-    * write CPU for ~30% smaller files than snappy — at 100 TB that is
-    * 30 TB less scan I/O on every downstream read. */
-  def writeParquet(df: DataFrame, path: String,
-                   codec: String = "snappy"): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("compression", codec)
-      .parquet(path)
-
-  /** Size-bounded parquet sink: caps rows per output file so a
-    * skewed final partition can't emit one giant file (file-level
-    * parallelism on read = number of files for non-splittable work). */
-  def writeParquetSized(df: DataFrame, path: String,
-                        maxRecordsPerFile: Long): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
-
-  /** Incremental batch ingestion: read only files modified after the
-    * given timestamp — the poor-man's CDC for landing zones written by
-    * an external producer (the streaming file source is the
-    * continuous twin). Timestamp format: yyyy-MM-dd'T'HH:mm:ss. */
-  def readParquetModifiedAfter(spark: SparkSession, path: String,
-                               modifiedAfter: String): DataFrame =
-    spark.read.option("modifiedAfter", modifiedAfter).parquet(path)
-
   /** Hive-style partitioned parquet: one directory per distinct value
     * of `partitionCol`. Read-side filters on that column prune whole
     * directories (PartitionFilters in explain). Choose low-cardinality
@@ -74,47 +48,6 @@ object Sinks {
     * parquet). */
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
-
-  /** Bucketed + sorted managed table: `buckets` files per partition,
-    * rows routed by hash(bucketCol). Joins/groupBys on bucketCol
-    * between tables bucketed the same way need no shuffle. Requires
-    * saveAsTable (bucket metadata lives in the catalog). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int = 8): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
-
-  /** Layout audit of a parquet directory — the operational pre-check
-    * that decides a [[compactParquetDir]] run: recursive data-file
-    * count and byte sizes (min/avg/max). At scale the small-files tax
-    * is one object-store request per file on EVERY read, so the ratio
-    * file_count / (total_bytes / target_file_bytes) is the compaction
-    * signal. One driver-side listing (bounded by file count — the same
-    * class as the appenders' own commit listings); returns a 1-row
-    * DataFrame. */
-  def auditParquetDir(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var n = 0L; var bytes = 0L
-    var min = Long.MaxValue; var max = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        n += 1; bytes += f.getLen
-        if (f.getLen < min) min = f.getLen
-        if (f.getLen > max) max = f.getLen
-      }
-    }
-    Seq((n, bytes, if (n == 0) 0L else min, max,
-      if (n == 0) 0.0 else bytes.toDouble / n))
-      .toDF("file_count", "total_bytes", "min_file_bytes", "max_file_bytes",
-        "avg_file_bytes")
-  }
 
   /** Single-writer ENFORCEMENT for append-maintained directories (the
     * dedup fingerprint/minhash sidecars, sketch sidecars, IVF index,

@@ -65,8 +65,7 @@ object Tables {
   }
 
   /** Normalize an events DataFrame's `ts` to TimestampType whatever
-    * the storage encoding produced (see [[events]] for the contract).
-    * Shared by the batch reader and the streaming file source. */
+    * the storage encoding produced (see [[events]] for the contract). */
   def normalizeEventTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType => // legacy INT64 TIMESTAMP(NANOS) read as long

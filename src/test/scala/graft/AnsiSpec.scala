@@ -24,7 +24,7 @@ class AnsiSpec extends SparkSpec {
     }
     // rotate-XOR fingerprint runs the same magnitudes without overflow
     val fp = Seq("a b c d e f g h").toDF("text")
-      .select(graft.ops.TextAnalysis.fingerprint(col("text"))).collect()
+      .select(graft.functions.GraftFunctions.rolling_fingerprint(col("text"))).collect()
     assert(fp.length == 1)
   }
 }

@@ -15,7 +15,6 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Dedup.exactDedup(emptyDocs, "text", "doc_id").count() === 0)
     assert(Dedup.minhashDedupPairs(emptyDocs, "text", "doc_id",
       shingleK = 2, numHashes = 16, bands = 4).count() === 0)
-    assert(Dedup.simhashDedupPairs(emptyDocs, "text", "doc_id").count() === 0)
   }
 
   test("topKPerGroup on empty input yields empty output") {

@@ -80,12 +80,6 @@ class DedupSpec extends SparkSpec {
     assert(hammingFar > hamming, "unrelated doc closer than near-dup")
   }
 
-  test("simhashDedupPairs finds the exact-dup pair") {
-    val pairs = Dedup.simhashDedupPairs(docs, "text", "doc_id", maxHamming = 3)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 4L)))
-  }
-
   test("duplicateSpans: repeated chunks flagged, unique docs at zero") {
     // 4-token chunks; doc 1 and 2 share their first 4-token chunk
     // exactly; doc 3 shares nothing; doc 4 == doc 1 entirely.
@@ -236,31 +230,6 @@ class DedupSpec extends SparkSpec {
     val s2 = Dedup.dedupAgainstSidecar(batch, "text", "doc_id", sidecar)
       .select("doc_id").as[Long].collect().toSet
     assert(s2 === Set(2L, 3L))
-  }
-
-  test("dedupAgainstSidecarTo: sink-first ordering makes a crash between " +
-      "the writes re-emit survivors instead of losing them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sidecar-to").toString
-    val (sidecar, out) = (s"$dir/fp", s"$dir/corpus")
-    val batch = Seq((1L, "doc a"), (2L, "doc b")).toDF("doc_id", "text")
-
-    // simulate the crash window: survivors reached the sink but the
-    // fingerprint append never happened (exactly what the sink-first
-    // ordering makes possible — and the reverse ordering cannot recover)
-    Dedup.sidecarSurvivors(batch, "text", "doc_id", sidecar)
-      .drop("__fp").write.mode("append").parquet(out)
-    assert(!new java.io.File(sidecar).exists)
-
-    // at-least-once replay: the batch re-runs in full
-    Dedup.dedupAgainstSidecarTo(batch, "text", "doc_id", sidecar, out)
-    val rows = spark.read.parquet(out).select("doc_id").as[Long].collect().toSeq
-    // duplicates — the recoverable outcome; nothing lost
-    assert(rows.sorted === Seq(1L, 1L, 2L, 2L))
-    assert(spark.read.parquet(sidecar).count() === 2L)
-
-    // a replay of the now fully-committed batch contributes nothing
-    Dedup.dedupAgainstSidecarTo(batch, "text", "doc_id", sidecar, out)
-    assert(spark.read.parquet(out).count() === 4L)
   }
 
   test("nearDupAgainstSidecar: exact and near dups of the corpus drop, " +
@@ -461,37 +430,6 @@ class DedupSpec extends SparkSpec {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("must be castable to BIGINT")),
       s"unexpected error: $e")
-  }
-
-  test("dedupAgainstSidecarTo with bloom prefilter: same sink contents as " +
-      "the plain path, bloom folds the batch's fingerprints forward") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scbTo").toString
-    val plainSc = s"$dir/plain"; val plainOut = s"$dir/plain_out"
-    val bloomSc = s"$dir/bloom"; val bloomOut = s"$dir/bloom_out"
-    val seed = Seq((1L, "seeded doc")).toDF("doc_id", "text")
-    val batch = Seq((10L, "seeded doc"), (11L, "fresh doc"))
-      .toDF("doc_id", "text")
-    Dedup.writeFingerprintSidecar(seed, "text", plainSc)
-    Dedup.writeFingerprintSidecar(seed, "text", bloomSc)
-    Dedup.writeSidecarBloom(spark, bloomSc)
-    Dedup.dedupAgainstSidecarTo(batch, "text", "doc_id", plainSc, plainOut)
-    Dedup.dedupAgainstSidecarTo(batch, "text", "doc_id", bloomSc, bloomOut,
-      bloomPrefilter = true)
-    def out(p: String) = spark.read.parquet(p)
-      .select("doc_id").as[Long].collect().toSet
-    assert(out(plainOut) === Set(11L))
-    assert(out(bloomOut) === out(plainOut))
-    // fold-forward: the batch's new fingerprint is now in the bloom,
-    // so a replay's prefilter routes it to the exact join (might=true)
-    val bloom = Dedup.loadSidecarBloom(spark, bloomSc).get
-    val fp = batch.filter($"doc_id" === 11L)
-      .select(md5($"text")).as[String].head()
-    assert(graft.functions.BloomMightContain.compute(
-      org.apache.spark.unsafe.types.UTF8String.fromString(fp), bloom))
-    // and the replay itself yields zero new survivors
-    Dedup.dedupAgainstSidecarTo(batch, "text", "doc_id", bloomSc, bloomOut,
-      bloomPrefilter = true)
-    assert(out(bloomOut) === Set(11L))
   }
 
   test("writeFingerprintSidecar seeds the sidecar from an existing corpus") {

@@ -149,6 +149,31 @@ class LinearProbeSpec extends SparkSpec {
     assert(e.getMessage.contains("batch-tagged"))
   }
 
+  test("Gram sidecar: weights fitted after two tagged appends are " +
+      "bit-equal to a from-scratch fit over everything ingested") {
+    val sidecar = s"target/tmp/probe_two_batch_spec_${System.nanoTime()}"
+    graft.sources.Sinks.wipeForRebuild(spark, sidecar)
+    // per-row [0,1] features (the LinearProbe convergence contract);
+    // deterministic synthetic rows so the fit is non-trivial
+    val rows = (1L to 60L).map { i =>
+      (i, (i % 7).toDouble / 7.0, (i % 3).toDouble / 3.0,
+        if (i % 2 == 0) 1L else 0L)
+    }
+    val (b1, b2) = rows.splitAt(25)
+    Seq(b1 -> "b0", b2 -> "b1").foreach { case (b, tag) =>
+      val scaled = LinearProbe.scaled(b.toDF("id", "fa", "fb", "y"),
+        Seq("fa", "fb"), col("y"))
+      LinearProbe.writeGramSidecar(scaled, 3, sidecar, Some(tag))
+    }
+    LinearProbe.compactGramSidecar(spark, sidecar, 3)
+    val twoBatch = LinearProbe.fitFromSidecar(spark, sidecar, 3, iters = 24)
+    val oneShot = LinearProbe.fit(rows.toDF("id", "fa", "fb", "y"),
+      Seq("fa", "fb"), $"y", iters = 24)
+    assert(twoBatch.toSeq === oneShot.toSeq)
+    // compaction left exactly one moment row
+    assert(spark.read.parquet(sidecar).count() === 1L)
+  }
+
   test("divergence is loud: out-of-contract feature magnitudes raise") {
     // features must be in [0,1]; constant 1000.0 gives Hessian trace
     // ~1e6 so lr=1/4 explodes — the |theta| <= 32 guard must fire,

@@ -188,91 +188,4 @@ class PqSpec extends SparkSpec {
     val overlap = (key(pruned) & key(full)).size.toDouble / key(full).size
     assert(overlap >= 0.5, s"nprobe=2 overlap with full probe = $overlap")
   }
-
-  test("appendToIvfPqIndex: appended vectors get stored-codebook codes " +
-      "and are served by the stored-index queries") {
-    val dirA = java.nio.file.Files.createTempDirectory("ivfpq_append").toString
-    val half = emb.filter(expr("vec_id % 2 = 0"))
-    val rest = emb.filter(expr("vec_id % 2 = 1"))
-    Similarity.buildIvfPqIndex(half, "vec_id", "embedding", dirA,
-      nlist = 8, m = 8, ksub = 16)
-    Similarity.appendToIvfPqIndex(spark, dirA, rest, "vec_id", "embedding")
-    // every appended row's codes must equal pq_encode under the STORED
-    // codebooks (read back independently here)
-    val storedCb = spark.read.parquet(s"$dirA/codebooks")
-      .collect().groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rs) =>
-        rs.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray).toArray
-      }.toArray
-    val appended = spark.read.parquet(s"$dirA/codes")
-      .filter(expr("vec_id % 2 = 1"))
-    assert(appended.count() === rest.count())
-    val mismatches = appended
-      .join(rest.select(col("vec_id"),
-        GraftFunctions.pq_encode(col("embedding").cast("array<double>"),
-          storedCb, normalize = true).as("want")), "vec_id")
-      .filter(expr("codes != want")).count()
-    assert(mismatches === 0L)
-    // the appended index serves queries and they see appended neighbors
-    val res = Similarity.annJoinIvfPqStored(spark, dirA,
-      emb.filter(expr("vec_id % 100 = 0")), "vec_id", "embedding",
-      k = 5, nprobe = 8, refine = 10)
-    val neighbors = res.select("neighbor_id").collect()
-      .map(_.getLong(0)).toSet
-    assert(res.count() > 0 && neighbors.exists(_ % 2 == 1),
-      "no appended vector ever ranked")
-    // compaction covers both layouts: one file per cell dir in vectors
-    // AND codes, query results identical
-    val before = res.orderBy("query_id", "rnk").collect().map(_.toString).toSeq
-    Similarity.compactIvfIndex(spark, dirA)
-    Seq("vectors", "codes").foreach { t =>
-      val cells = new java.io.File(s"$dirA/$t").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      assert(cells.nonEmpty)
-      cells.foreach { c =>
-        val files = c.listFiles().filter(_.getName.endsWith(".parquet"))
-        assert(files.length === 1, s"$t/${c.getName}: ${files.length} files")
-      }
-    }
-    val after = Similarity.annJoinIvfPqStored(spark, dirA,
-        emb.filter(expr("vec_id % 100 = 0")), "vec_id", "embedding",
-        k = 5, nprobe = 8, refine = 10)
-      .orderBy("query_id", "rnk").collect().map(_.toString).toSeq
-    assert(after === before)
-  }
-
-  test("rebalanceIvfIndex on an IVFPQ layout: codes move cells with " +
-      "their vectors, bytes unchanged, full-probe results invariant") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_rebal").toString
-    // skewed construction: fit cells on a quarter, append the rest
-    Similarity.buildIvfPqIndex(emb.filter(expr("vec_id % 4 = 0")),
-      "vec_id", "embedding", dir, nlist = 8, m = 8, ksub = 16)
-    Similarity.appendToIvfPqIndex(spark, dir,
-      emb.filter(expr("vec_id % 4 != 0")), "vec_id", "embedding")
-    val queries = emb.filter(expr("vec_id % 100 = 0"))
-    def fullProbe() = Similarity.annJoinIvfPqStored(spark, dir, queries,
-        "vec_id", "embedding", k = 5, nprobe = 8, refine = 10)
-      .orderBy("query_id", "rnk").collect().map(_.toString).toSeq
-    val beforeRes = fullProbe()
-    val beforeCodes = spark.read.parquet(s"$dir/codes")
-      .select("vec_id", "codes").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-
-    Similarity.rebalanceIvfIndex(spark, dir, nlist = 8)
-
-    // codes are non-residual: the rebalance must keep every row's
-    // bytes and only re-file it under its vector's new cell
-    val afterCodes = spark.read.parquet(s"$dir/codes")
-    assert(afterCodes.count() === beforeCodes.size.toLong)
-    assert(afterCodes.select("vec_id", "codes").collect()
-      .forall(r => beforeCodes(r.getLong(0)) == r.getSeq[Int](1)))
-    val misfiled = afterCodes.select(col("vec_id"), col("cell"))
-      .join(spark.read.parquet(s"$dir/vectors")
-        .select(col("vec_id"), col("cell").as("vcell")), "vec_id")
-      .filter(col("cell") =!= col("vcell")).count()
-    assert(misfiled === 0L)
-    // full probe scans every cell and re-ranks exactly, so results
-    // cannot depend on the cell layout
-    assert(fullProbe() === beforeRes)
-  }
 }

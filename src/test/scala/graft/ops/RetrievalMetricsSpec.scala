@@ -61,19 +61,6 @@ class RetrievalMetricsSpec extends SparkSpec {
     assert(r2.getDouble(9) === 1.0)      // dcg == idcg == 1.0
   }
 
-  test("summary macro-averages the per-query rows exactly") {
-    val got = RetrievalMetrics.rankingMetricsSummary(ranking, relevance, k = 3)
-      .collect()(0)
-    val per = RetrievalMetrics.rankingMetrics(ranking, relevance, k = 3)
-      .collect()
-    assert(got.getLong(0) === 3L)
-    assert(got.getLong(1) === per.map(_.getLong(2)).sum)
-    def mean(vals: Seq[Double]) = (vals.map(BigDecimal(_)).sum /
-      BigDecimal(3)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(got.getDouble(4) === mean(per.map(_.getDouble(6)).toSeq)) // MRR
-    assert(got.getDouble(5) === mean(per.map(_.getDouble(9)).toSeq))
-  }
-
   test("k caps the evaluated prefix: hits below rank k are ignored") {
     val got = RetrievalMetrics.rankingMetrics(ranking, relevance, k = 1)
       .orderBy($"query_id").collect()

@@ -64,25 +64,6 @@ class SimilaritySpec extends SparkSpec {
     assert((exact & ivf).size >= 3, s"recall too low: ${(exact & ivf).size}/10")
   }
 
-  test("stored IVF index: partition-pruned probes, same result as in-memory IVF") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
-    Similarity.buildIvfIndex(Tables.embeddings(spark, sf0001),
-      "vec_id", "embedding", dir, nlist = 8)
-    val stored = Similarity.ivfCosineTopKStored(spark, dir, queryId = 0L,
-      k = 10, nprobe = 4)
-    stored.collect()
-    // the probe filter must prune index directories, not scan them all
-    val scan = stored.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(scan.contains("PartitionFilters") && scan.contains("cell"),
-      scan.take(500))
-    val inMem = Similarity.ivfCosineTopK(Tables.embeddings(spark, sf0001),
-      "vec_id", "embedding", queryId = 0L, k = 10, nlist = 8, nprobe = 4)
-    // same seed -> same KMeans cells -> identical top-k
-    assert(stored.select("vec_id", "cos").collect().map(_.toString).toSeq ===
-      inMem.select("vec_id", "cos").collect().map(_.toString).toSeq)
-  }
-
   test("annJoinIvfStored: scan pruned to probed cells, parity with the " +
       "in-memory batch IVF join") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_index_batch").toString
@@ -187,130 +168,22 @@ class SimilaritySpec extends SparkSpec {
     assert(neighbors.exists(_ % 2 === 1), "no appended vector ever ranked")
   }
 
-  test("compactIvfIndex: one file per cell directory, stored-query results " +
-      "identical before and after") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_compact").toString
-    val emb = Tables.embeddings(spark, sf0001)
-    Similarity.buildIvfIndex(emb.filter($"vec_id" % 2 === 0),
-      "vec_id", "embedding", dir, nlist = 8)
-    Similarity.appendToIvfIndex(spark, dir,
-      emb.filter($"vec_id" % 2 === 1), "vec_id", "embedding")
-    val queries = emb.filter($"vec_id" % 100 === 0)
-    def run() = Similarity.annJoinIvfStored(spark, dir, queries,
-        "vec_id", "embedding", k = 5)
-      .orderBy($"query_id", $"rnk").collect().map(_.toString).toSeq
-    val before = run()
-    Similarity.compactIvfIndex(spark, dir)
-    // every cell directory holds exactly one data file after the rewrite
-    val cellDirs = new java.io.File(s"$dir/vectors").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-    assert(cellDirs.nonEmpty)
-    cellDirs.foreach { d =>
-      val n = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(n === 1, s"${d.getName} has $n files after compaction")
-    }
-    assert(run() === before)
-  }
-
-  test("auditIvfIndex + rebalanceIvfIndex: skewed appends detected, " +
-      "rebalance restores bounded cells, full-probe results stay exact") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_rebal").toString
-    val emb = Tables.embeddings(spark, sf0001)
-    // build on a quarter of the corpus, then append the rest — frozen
-    // centroids fit to the seed distribution go skewed
-    Similarity.buildIvfIndex(emb.filter($"vec_id" % 4 === 0),
-      "vec_id", "embedding", dir, nlist = 8)
-    Similarity.appendToIvfIndex(spark, dir,
-      emb.filter($"vec_id" % 4 =!= 0), "vec_id", "embedding")
-    val before = Similarity.auditIvfIndex(spark, dir).collect()
-    assert(before.length === 8)                       // one row per cell
-    assert(before.map(_.getAs[Long]("n_vectors")).sum === emb.count())
-    assert(math.abs(before.map(_.getAs[Double]("share")).sum - 1.0) < 1e-9)
-
-    Similarity.rebalanceIvfIndex(spark, dir, nlist = 8)
-    val after = Similarity.auditIvfIndex(spark, dir).collect()
-    assert(after.length === 8)
-    assert(after.map(_.getAs[Long]("n_vectors")).sum === emb.count())
-    // refit centroids on the FULL stored set bound the worst cell at
-    // least as tightly as the frozen seed-fit ones
-    assert(after.map(_.getAs[Long]("n_vectors")).max <=
-      before.map(_.getAs[Long]("n_vectors")).max)
-
-    // correctness is centroid-independent at full probe: nprobe = nlist
-    // probes every cell, so the rebalanced stored index must reproduce
-    // the brute-force join EXACTLY
-    val queries = emb.filter($"vec_id" % 100 === 0)
-    val stored = Similarity.annJoinIvfStored(spark, dir, queries,
-        "vec_id", "embedding", k = 5, nprobe = 8)
-      .select("query_id", "neighbor_id", "cos", "rnk")
-      .orderBy("query_id", "rnk").collect().map(_.toString).toSeq
-    val brute = Similarity.annJoinBruteForce(queries, emb,
-        "vec_id", "embedding", k = 5)
-      .orderBy("query_id", "rnk").collect().map(_.toString).toSeq
-    assert(stored === brute)
-  }
-
-  test("rebalanceIvfIndexIfSkewed: no-op on a healthy index, rebalances a " +
-      "planted hot cell") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_gate").toString
-    val emb = Tables.embeddings(spark, sf0001)
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nlist = 8)
-    // a fresh full-fit index is balanced: the gate must not rebuild it
-    assert(!Similarity.rebalanceIvfIndexIfSkewed(spark, dir,
-      maxShare = 0.9, nlist = 8))
-    // plant a hot cell: append many near-copies of one vector — frozen
-    // centroids funnel them into a single cell
-    val hot = emb.filter($"vec_id" === 0)
-      .crossJoin(spark.range(1, 1500).toDF("i"))
-      .select(($"vec_id" + $"i" * 1000 + 10000).as("vec_id"), $"embedding")
-    Similarity.appendToIvfIndex(spark, dir, hot, "vec_id", "embedding")
-    val worst = Similarity.auditIvfIndex(spark, dir)
-      .agg(max($"share")).head().getDouble(0)
-    assert(worst > 0.5, s"planted skew too mild: $worst")
-    assert(Similarity.rebalanceIvfIndexIfSkewed(spark, dir,
-      maxShare = 0.5, nlist = 8))
-    // the hot mass now spreads: the refit gives the near-dup blob its
-    // own cells instead of sharing one frozen cell with the seed data
-    assert(spark.read.parquet(s"$dir/vectors").count() === emb.count() + 1499)
-  }
-
-  test("rebalanceIvfIndex: dropDuplicateIds collapses replayed appends; " +
-      "sampleFraction trains on a deterministic subset") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_rebal_dup").toString
-    val emb = Tables.embeddings(spark, sf0001)
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nlist = 4)
-    // a replayed append: the same batch lands twice
-    val batch = emb.filter($"vec_id" < 50)
-    Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding")
-    Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding")
-    assert(spark.read.parquet(s"$dir/vectors").count() === emb.count() + 100)
-    Similarity.rebalanceIvfIndex(spark, dir, nlist = 4,
-      sampleFraction = 0.5, dropDuplicateIds = true)
-    val vecs = spark.read.parquet(s"$dir/vectors")
-    assert(vecs.count() === emb.count())
-    assert(vecs.select("vec_id").distinct().count() === emb.count())
-    // layout still serves queries
-    assert(Similarity.annJoinIvfStored(spark, dir,
-      emb.filter($"vec_id" === 0), "vec_id", "embedding", k = 3).count() === 3)
-  }
-
-  test("compactIvfIndex shares the appenders' indexDir lock: a concurrent " +
-      "append excludes it and vice versa") {
+  test("appendToIvfIndex takes the indexDir lock: a held lock excludes " +
+      "a concurrent append") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_lock").toString
     val emb = Tables.embeddings(spark, sf0001)
     Similarity.buildIvfIndex(emb.filter($"vec_id" < 100),
       "vec_id", "embedding", dir, nlist = 4)
     graft.sources.Sinks.withDirLock(spark, dir, "appending") {
       val e = intercept[IllegalStateException] {
-        Similarity.compactIvfIndex(spark, dir)
-      }
-      assert(e.getMessage.contains("locked by another writer"))
-      intercept[IllegalStateException] {
         Similarity.appendToIvfIndex(spark, dir,
           emb.filter($"vec_id" === 200), "vec_id", "embedding")
       }
+      assert(e.getMessage.contains("locked by another writer"))
     }
-    Similarity.compactIvfIndex(spark, dir) // released → proceeds
+    // released → proceeds
+    Similarity.appendToIvfIndex(spark, dir,
+      emb.filter($"vec_id" === 200), "vec_id", "embedding")
   }
 
   test("embeddingDedupPairs finds planted near-identical vectors, skips distant ones") {
@@ -423,8 +296,8 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.5, s"recall $recall")
   }
 
-  test("semanticDedup: planted scaled copies collapse to the original; " +
-      "unrelated vectors survive untouched") {
+  test("semanticDedupClusters: planted scaled copies share the original's " +
+      "component; unrelated vectors stay apart") {
     // same-direction copies (×2, ×0.5 — exact IEEE scalings) are
     // semantic dups of their original; orthogonal vectors are not
     val base = Seq(
@@ -442,10 +315,6 @@ class SimilaritySpec extends SparkSpec {
     assert(byComp(0L) === Set(0L, 10L))
     assert(byComp(1L) === Set(1L, 11L))
     assert(byComp(2L) === Set(2L, 12L))
-    val surv = Similarity.semanticDedup(corpus, "vec_id", "embedding",
-      threshold = 0.9, bits = 2, dim = 4)
-    assert(surv.columns.toSeq === corpus.columns.toSeq) // schema contract
-    assert(surv.select("vec_id").as[Long].collect().toSet === Set(0L, 1L, 2L))
   }
 
   test("diversitySample: coverage-first — a dense near-duplicate blob cannot " +

@@ -65,25 +65,6 @@ class SketchesSpec extends SparkSpec {
     assert(m(("B", "C")) <= 30, s"B∩C ${m(("B", "C"))}")
   }
 
-  test("overlapMatrix over a two-shard sidecar equals the single-shot " +
-      "matrix exactly (lossless union)") {
-    val docs = Tables.documents(spark, sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("ovl").toString + "/s"
-    Sketches.writeSketchSidecar(
-      docs.filter($"doc_id" % 2 === 0), Seq("source"), "text", dir)
-    Sketches.writeSketchSidecar(
-      docs.filter($"doc_id" % 2 === 1), Seq("source"), "text", dir)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select($"group_a", $"group_b", $"approx_overlap")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-    val fromSidecar = canon(Sketches.overlapMatrix(
-      Sketches.mergedSketches(spark, dir, Seq("source")), "source"))
-    val singleShot = canon(Sketches.overlapMatrix(
-      Sketches.distinctSketches(docs, Seq("source"), "text"), "source"))
-    assert(fromSidecar === singleShot)
-  }
-
   test("rollingDistinct: trailing-window estimates equal direct " +
       "computation over the same raw rows (sketches pre-aggregate " +
       "distinct exactly)") {
@@ -138,21 +119,8 @@ class SketchesSpec extends SparkSpec {
       ("b", "c", 8L, 4L, 0L)))
   }
 
-  test("exactOverlapMatrixHashed: same matrix as the exact-string form " +
-      "on the real documents table") {
-    val docs = Tables.documents(spark, sf0001)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy($"group_a", $"group_b")
-        .select($"group_a", $"group_b", $"n_a", $"n_b", $"n_shared", $"jaccard")
-        .collect().toSeq
-    val exact = canon(Sketches.exactOverlapMatrix(docs, "source", "text", 5))
-    val hashed = canon(Sketches.exactOverlapMatrixHashed(docs, "source", "text", 5))
-    assert(exact === hashed)
-  }
-
   test("batch-tagged histogram sidecar: a deliberately REPLAYED append " +
-      "inflates no bin at read or through compaction — the round-17 " +
-      "exactly-once contract") {
+      "inflates no bin at read — the round-17 exactly-once contract") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("hist_tagged")
       .toString + "/h"
@@ -170,12 +138,6 @@ class SketchesSpec extends SparkSpec {
       .select($"g", $"bin", $"cnt").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     val oneShot = canon(Sketches.histogram(all, Seq("g"), "v", lo, hi, bins))
-    assert(canon(Sketches.mergedHistogram(spark, dir, Seq("g"))) === oneShot)
-    // compaction collapses the duplicate before summing, carries the
-    // sentinel, and merged reads stay exact
-    Sketches.compactHistSidecar(spark, dir, Seq("g"))
-    assert(spark.read.parquet(dir).select($"batch_id").distinct()
-      .as[String].collect().toSeq === Seq(LinearProbe.CompactedBatchId))
     assert(canon(Sketches.mergedHistogram(spark, dir, Seq("g"))) === oneShot)
     // mixed tagged/untagged appends fail loud
     val e = intercept[IllegalArgumentException] {

@@ -54,7 +54,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("fingerprint is order-sensitive and deterministic") {
     val fps = Seq("a b c", "c b a", "a b c").toDF("t")
-      .select(TextAnalysis.fingerprint($"t")).as[Long].collect()
+      .select(graft.functions.GraftFunctions.rolling_fingerprint($"t")).as[Long].collect()
     assert(fps(0) === fps(2))
     assert(fps(0) !== fps(1))
   }

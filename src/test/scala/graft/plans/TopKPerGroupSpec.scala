@@ -44,4 +44,13 @@ class TopKPerGroupSpec extends SparkSpec {
     assert(plan.contains("Exchange hashpartitioning(o_custkey"), plan.take(800))
     assert(!plan.contains("Sort "), plan.take(800))
   }
+
+  test("the planner holds TopKStrategy exactly once after a topKPerGroup call") {
+    // GraftExtensions injects the strategy into every factory-built
+    // session; a call must not add a second copy
+    val df = Seq((1L, 1.0), (1L, 2.0)).toDF("k", "v")
+    TopKPerGroup.topKPerGroup(df, Seq("k"), "v", 1).collect()
+    assert(spark.sessionState.planner.strategies
+      .count(_ == TopKStrategy) === 1)
+  }
 }

@@ -26,16 +26,4 @@ class MetadataColumnsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(keys.distinct.length == keys.length, "provenance keys must be unique")
   }
-
-  test("provenanceId: unique, shuffle-free, reproducible across runs") {
-    import graft.ops.Relational.provenanceId
-    val df = provenanceId(Tables.customer(spark, sf0001))
-    val ids = df.select("provenance_id").collect().map(_.getLong(0))
-    assert(ids.distinct.length === ids.length)
-    val again = provenanceId(Tables.customer(spark, sf0001))
-      .select("provenance_id").collect().map(_.getLong(0))
-    assert(ids.sorted.sameElements(again.sorted), "must be run-stable")
-    assert(!df.queryExecution.executedPlan.toString.contains("Exchange"),
-      "id assignment must not shuffle")
-  }
 }

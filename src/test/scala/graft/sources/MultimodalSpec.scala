@@ -27,23 +27,6 @@ class MultimodalSpec extends SparkSpec {
     assert(a.feature.length === 8)
   }
 
-  test("frameSample slices n binary windows of the requested size") {
-    val got = Multimodal.frameSample(media.toDF(), "payload", 4, 16)
-      .select($"media_id", $"frames")
-      .collect()
-    got.foreach { r =>
-      val frames = r.getSeq[Array[Byte]](1)
-      assert(frames.length === 4)
-      assert(frames.forall(_.length === 16))
-    }
-  }
-
-  test("withResizeTarget attaches target dims without touching payload") {
-    val df = Multimodal.withResizeTarget(media.toDF(), 224, 224)
-    val r = df.select($"resize_target.w", $"resize_target.h").distinct().collect()
-    assert(r.length === 1 && r(0).getInt(0) === 224)
-  }
-
   test("batched decode == streaming decode, including at odd batch boundaries") {
     val m = Multimodal.syntheticMedia(spark, 101) // not a multiple of batchSize
     val streaming = Multimodal.decode(m).collect().map(_.media_id).sorted

@@ -53,43 +53,6 @@ class SinksSpec extends SparkSpec {
     assert(plan.contains("PushedFilters") && plan.contains("c_custkey"))
   }
 
-  test("zstd parquet is smaller than snappy, reads back identically") {
-    val df = Tables.lineitem(spark, sf0001)
-    val snappy = java.nio.file.Files.createTempDirectory("pq_snappy").toString
-    val zstd = java.nio.file.Files.createTempDirectory("pq_zstd").toString
-    Sinks.writeParquet(df, snappy)
-    Sinks.writeParquet(df, zstd, codec = "zstd")
-    def bytes(dir: String) = new java.io.File(dir).listFiles
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    assert(bytes(zstd) < bytes(snappy),
-      s"zstd ${bytes(zstd)} !< snappy ${bytes(snappy)}")
-    assert(spark.read.parquet(zstd).count() === df.count())
-  }
-
-  test("maxRecordsPerFile splits oversized output files") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_sized").toString
-    Sinks.writeParquetSized(
-      Tables.orders(spark, sf0001).coalesce(1), dir, maxRecordsPerFile = 400)
-    val files = new java.io.File(dir).listFiles
-      .count(_.getName.endsWith(".parquet"))
-    // 1500 orders / 400 per file -> 4 files despite the single partition
-    assert(files === 4, s"got $files files")
-  }
-
-  test("modifiedAfter reads only newly-landed files (incremental ingestion)") {
-    val land = java.nio.file.Files.createTempDirectory("landing").toString
-    Tables.region(spark, sf0001).write.parquet(s"$land/batch1")
-    val t1 = java.time.LocalDateTime.now().plusSeconds(2)
-      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
-    Thread.sleep(3000)
-    Tables.nation(spark, sf0001).select(col("n_nationkey").as("r_regionkey"),
-      col("n_name").as("r_name")).write.parquet(s"$land/batch2")
-    val incremental = Sinks.readParquetModifiedAfter(
-      spark, s"$land/batch*", t1)
-    assert(incremental.count() === 25) // only batch2's nation-shaped rows
-    assert(spark.read.parquet(s"$land/batch*").count() === 5 + 25)
-  }
-
   test("compactParquetDir auto-recovers a crash-stranded backup instead of deleting it") {
     val dir = Files.createTempDirectory("compact_rec").toString + "/side"
     val df = Tables.region(spark, sf0001)
@@ -114,22 +77,6 @@ class SinksSpec extends SparkSpec {
       Sinks.compactParquetDir(spark, dir)
     }
     assert(e.getMessage.contains("refusing"))
-  }
-
-  test("auditParquetDir: counts data files and bytes; compaction drives the " +
-      "file count to one") {
-    val dir = Files.createTempDirectory("audit").toString + "/side"
-    (0 until 3).foreach { i =>
-      Tables.region(spark, sf0001).write.mode("append").parquet(dir)
-    }
-    val before = Sinks.auditParquetDir(spark, dir).collect()(0)
-    assert(before.getAs[Long]("file_count") >= 3)
-    assert(before.getAs[Long]("total_bytes") > 0)
-    assert(before.getAs[Long]("min_file_bytes") <=
-      before.getAs[Long]("max_file_bytes"))
-    Sinks.compactParquetDir(spark, dir)
-    val after = Sinks.auditParquetDir(spark, dir).collect()(0)
-    assert(after.getAs[Long]("file_count") === 1L)
   }
 
   test("listDataFiles follows Spark's hidden-path rule: a `_col=value` " +
@@ -201,8 +148,11 @@ class SinksSpec extends SparkSpec {
 
   test("bucketed tables co-locate and drop the join exchange") {
     val o = Tables.orders(spark, sf0001)
-    Sinks.writeBucketed(o, "orders_bucketed", "o_custkey", buckets = 4)
-    val t = spark.table("orders_bucketed")
+    Bucketing.writeBucketedTable(o, "orders_bucketed",
+      Files.createTempDirectory("orders_bucketed").toString,
+      bucketCols = Seq("o_custkey"), numBuckets = 4,
+      sortCols = Seq("o_custkey"))
+    val t = Bucketing.table(spark, "orders_bucketed")
     val agg = t.groupBy(col("o_custkey")).agg(sum(col("o_totalprice")))
     // bucketed layout satisfies the aggregation's distribution: no Exchange
     val plan = agg.queryExecution.executedPlan.toString
