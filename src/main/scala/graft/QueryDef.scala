@@ -60,25 +60,31 @@ object QueryDef {
   def liveFitForced: Boolean =
     sys.env.get("SPARK_GRAFT_LIVE_FIT").contains("1")
 
-  /** Resolve a committed oracle fixture (fixtures/<name>) for
-    * embedding in DuckDB oracle SQL. The ADVICE-r15 trap: resolving
-    * against the bare process CWD makes the oracle silently depend on
-    * launching the driver from the repo root, surfacing only as an
-    * opaque read_csv failure at oracle time. Resolution order:
+  /** Resolve a committed fixture (fixtures/<name>) for embedding in
+    * DuckDB oracle SQL or for the engine to read. The ADVICE-r15 trap:
+    * resolving against the bare process CWD makes the oracle silently
+    * depend on launching the driver from the repo root, surfacing only
+    * as an opaque read_csv failure at oracle time. Resolution order:
     * SPARK_GRAFT_REPO_ROOT env, graft.repo.root system property, CWD
     * — and a MISSING fixture fails loud here with the regeneration
-    * hint, scoped to the requesting query's oracle access (call this
-    * only inside a by-name oracle argument — the ADVICE-r16 rule). */
-  def fixturePath(name: String): String = {
+    * hint, scoped to the requesting query (call this only where the
+    * fixture is used — inside a by-name oracle argument or when a
+    * table is read, never in an object initialiser — the ADVICE-r16
+    * rule).
+    *
+    * @param regenerate the command that rebuilds this fixture, named
+    *   in the error when it is missing. */
+  def fixturePath(name: String,
+      regenerate: String = "sbt \"runMain graft.FixtureDump\""): String = {
     val roots = Seq(sys.env.get("SPARK_GRAFT_REPO_ROOT"),
       sys.props.get("graft.repo.root"), Some(".")).flatten
     val candidates = roots.map(r =>
       new java.io.File(new java.io.File(r, "fixtures"), name))
     candidates.find(_.isFile).map(_.getAbsolutePath).getOrElse(
       throw new IllegalStateException(
-        s"oracle fixture fixtures/$name not found (tried " +
+        s"fixture fixtures/$name not found (tried " +
           candidates.map(_.getAbsolutePath).mkString(", ") +
           ") — launch from the repo root or set SPARK_GRAFT_REPO_ROOT; " +
-          "regenerate with `sbt \"runMain graft.FixtureDump\"`"))
+          s"regenerate with `$regenerate`"))
   }
 }

@@ -11,11 +11,15 @@ import org.apache.spark.sql.types.DecimalType
 /** Queries over the reference's loan table (SURVEY.md §1, §2.5, §2.6).
   * The ML queries (model fit/score) are not SQL-expressible → driver
   * rows-only check; the relational prep queries carry DuckDB oracles
-  * that read the same CSV via read_csv_auto.
+  * that read the same CSV via read_csv_auto — the reference's file
+  * where it exists, else the committed seeded stand-in
+  * ([[Tables.LoanCsvPath]]).
   */
 object LoanQueries {
 
-  private val csv = Tables.LoanCsvPath
+  /** Resolved per use, so a missing loan input fails only the loan
+    * query that reads it, not the registry's initialisation. */
+  private def csv = Tables.LoanCsvPath
 
   /** End-to-end reference pipeline (spark.py): impute → assemble →
     * scale → seeded split → LR → evaluate. Returns the metrics row the

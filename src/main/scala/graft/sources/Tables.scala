@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
   *  1. The driver-generated TPC-H-ish parquet tables (TESTDATA.md):
   *     `region nation customer supplier part orders lineitem events
   *     documents embeddings`, loaded per scale-factor directory.
-  *  2. The reference's loan table (`/root/reference/Loan_Default.csv`,
-  *     read-only), with the schema `inferSchema=True` produces at the
-  *     reference's `spark.py:29` — pinned here as an explicit
+  *  2. The loan table: the reference's `Loan_Default.csv`
+  *     ([[ReferenceLoanCsvPath]], read-only) where it exists, else the
+  *     committed seeded stand-in `fixtures/loan_default.csv`
+  *     ([[LoanCsvPath]]), with the schema `inferSchema=True` produces
+  *     at the reference's `spark.py:29` — pinned here as an explicit
   *     [[StructType]] so production reads are a single pass (no
   *     schema-inference double scan), with an `inferSchema` parity
   *     switch for faithfulness tests.
@@ -122,8 +124,31 @@ object Tables {
       case t => table(spark, sfDir, t).createOrReplaceTempView(t)
     }
 
-  /** Default location of the reference's loan dataset (read-only). */
-  val LoanCsvPath = "/root/reference/Loan_Default.csv"
+  /** Location of the reference's own loan dataset (read-only). */
+  val ReferenceLoanCsvPath = "/root/reference/Loan_Default.csv"
+
+  /** Default loan input, resolved on every call by [[resolveLoanCsv]]
+    * from [[ReferenceLoanCsvPath]]. A `def`, not a `val`: a failed
+    * resolution fails only the read that asks for the table, never
+    * the initialisation of this object or of the query registry. */
+  def LoanCsvPath: String = resolveLoanCsv(ReferenceLoanCsvPath)
+
+  /** The loan input: `referencePath` if that file exists, else the
+    * committed `fixtures/loan_default.csv` (FIXTURES.md §1), located by
+    * [[graft.QueryDef.fixturePath]]. The fixture is a seeded stand-in
+    * with the reference's 999 rows and pinned schema, written by
+    * perfbench's `write_loan(42, dir, rows=999)`. When neither exists
+    * the error names both locations and that command. */
+  def resolveLoanCsv(referencePath: String): String =
+    if (new java.io.File(referencePath).isFile) referencePath
+    else try graft.QueryDef.fixturePath("loan_default.csv",
+      "python3 -c \"import sys; sys.path.insert(0, 'perfbench'); " +
+        "import inputs; inputs.write_loan(42, '<dir>', rows=999)\" " +
+        "&& cp <dir>/loan.csv fixtures/loan_default.csv")
+    catch { case e: IllegalStateException =>
+      throw new IllegalStateException(
+        s"loan CSV $referencePath not found, and ${e.getMessage}", e)
+    }
 
   /** Pinned schema of `Loan_Default.csv` — exactly what
     * `inferSchema=True` yields on the 999-row file (FIXTURES.md §1).
