@@ -59,8 +59,9 @@ object FixtureDump {
     println(s"[fixture] wrote ${pcm.length} rows to ${out2.getPath}")
 
     // q124/q130's fit seam (round 17): the MLlib coarse-quantizer fit
-    // (k = 16, seed = 42, maxIter = 10 — buildIvfIndex's exact
-    // configuration) over each registered testdata SF's embeddings,
+    // (k = 16, seed = 42, maxIter = 10 —
+    // [[graft.ops.Similarity.fitIvfCentroids]], the engine's only
+    // coarse fit) over each registered testdata SF's embeddings,
     // dumped as (corpus_key, cell, j, x) rows keyed by the EXACT
     // integer corpus checksum ([[graft.ops.Similarity.ivfCorpusKey]])
     // so one committed fixture serves all three SFs (row counts can't
@@ -69,12 +70,11 @@ object FixtureDump {
     // in SQL). The
     // flipped queries SERVE from these frozen centroids with
     // SQL-replayable arithmetic ([[graft.ops.Similarity
-    // .annJoinIvfFixed]]); SimilaritySpec asserts the live fit still
+    // .annJoinIvf]]); SimilaritySpec asserts the live fit still
     // reproduces them (tolerance bounds float-reduction order), so an
     // MLlib drift fails a test instead of silently moving the answer.
     // Doubles print via Double.toString — shortest round-trip form,
     // parsed back exactly by DuckDB, Spark, and Scala.
-    import org.apache.spark.sql.functions.col
     val out3 = new java.io.File("fixtures/q130_centroids.csv")
     val w3 = new java.io.PrintWriter(out3, "UTF-8")
     try {
@@ -101,7 +101,7 @@ object FixtureDump {
     // coarse centroids. The flipped queries SERVE from these frozen
     // codebooks with rounded-distance arithmetic
     // ([[graft.ops.Similarity.annJoinPqRerank]] quantRound = 6 /
-    // [[graft.ops.Similarity.annJoinIvfPqStoredFixed]]);
+    // [[graft.ops.Similarity.annJoinIvfPqStored]]);
     // SimilaritySpec asserts the live fitPq still reproduces them.
     val out4 = new java.io.File("fixtures/q158_codebooks.csv")
     val w4 = new java.io.PrintWriter(out4, "UTF-8")

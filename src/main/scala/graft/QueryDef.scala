@@ -49,8 +49,8 @@ object QueryDef {
     new QueryDef(name, fn, None)
 
   /** `SPARK_GRAFT_LIVE_FIT=1` — set by the scale harness — forces the
-    * fixture-dispatching ANN queries (q124/q130/q158/q159) onto their
-    * live-fit paths even on corpora whose checksum matches a
+    * fixture-dispatching ANN queries (q124/q130/q158/q159) onto
+    * live-fit centroids/codebooks even on corpora whose checksum matches a
     * committed fixture. Without it a ScaleBench ratio would compare a
     * fixture-served BASE against a live-fit BLOWN corpus (the
     * checksum can only match the real testdata) and fabricate a

@@ -97,8 +97,9 @@ object ScaleBench {
     // memoized-artifact behavior, like q30's cached model)
     "q151_token_rarity", "q155_bpe_token_counts",
     // q157: corpus rewrite (two corpus-sized shuffles by design);
-    // q159: IVFPQ build + pruned code-scan query (the fit and encode
-    // run per invocation — the honest stored-index cost, like q130)
+    // q159: IVFPQ build + pruned code-scan query (assign, encode and
+    // writes run per invocation — the honest stored-index cost, like
+    // q130; the centroid and codebook fits are memoized per corpus)
     "q157_remove_dup_spans", "q159_knn_join_ivfpq_stored")
 
   /** Stored-index queries timed in two phases (round-9 verdict ask):

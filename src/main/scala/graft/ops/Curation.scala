@@ -442,8 +442,6 @@ object Curation {
       .limit(n)
   }
 
-  /** PII redaction patterns (RE2-subset — no lookarounds — so an
-    * external oracle can replicate them byte-for-byte). */
   /** Append one batch's exact token counts to a persisted sidecar —
     * the INCREMENTAL form of [[tokenRarity]]'s corpus-frequency table,
     * in the HLL-sidecar discipline ([[Sketches.writeSketchSidecar]]):
@@ -605,6 +603,8 @@ object Curation {
       .drop("__rn", "__n")
   }
 
+  /** PII redaction patterns (RE2-subset — no lookarounds — so an
+    * external oracle can replicate them byte-for-byte). */
   val EmailPattern = "[a-z0-9.]+@[a-z0-9.]+"
   val PhonePattern = "[0-9]{3}-[0-9]{4}"
 

@@ -115,8 +115,7 @@ object Retrieval {
   private def scoreFrom(post: DataFrame, dls: DataFrame,
                         queries: DataFrame,
                         dfCapRatio: Double,
-                        tokenizer: Column => Column =
-                          TextAnalysis.tokens(_)): DataFrame = {
+                        tokenizer: Column => Column): DataFrame = {
     // bounded 1-row totals ride a broadcast cross join (the q160
     // totals pattern), never a collect
     val totals = broadcast(

@@ -494,9 +494,9 @@ object SeededKMeans {
     * ([[Similarity.annJoinIvfStored]] twin, q175): probe cells picked
     * in-row against the broadcast micro-grid centroid table by exact
     * integer distance (asc, ties by cell), the scan statically pruned
-    * to the probed cells, exact cosine re-ranking. Identical plan
-    * shape to the MLlib-backed path — only the (deterministic) fit
-    * and probe metric differ. */
+    * to the probed cells, exact cosine re-ranking. The same stored
+    * layout and pruned-scan shape as the MLlib-backed path — only the
+    * (deterministic) fit and the probe metric differ. */
   def annJoinIvfSeededStored(spark: SparkSession, indexDir: String,
                              queries: DataFrame, idCol: String,
                              vecCol: String, k: Int, nprobe: Int,

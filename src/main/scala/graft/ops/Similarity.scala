@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.{Vector => MlVector}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -100,55 +99,44 @@ object Similarity {
   }
 
   /** IVF (inverted-file) approximate top-k: partition the corpus into
-    * `nlist` KMeans cells once, then answer queries by exact-cosine
-    * ranking inside only the `nprobe` cells whose centroids are
-    * nearest the query. The scan touches ~nprobe/nlist of the data —
-    * at 100 TB the cell assignment is a stored column and the probe
-    * set is a partition-pruned filter. Centroid selection is a
-    * driver-side computation over nlist tiny vectors. */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Long),
-      org.apache.spark.ml.clustering.KMeansModel]()
-
-  /** @param cacheKey when set (e.g. the table path), the trained cell
-    *   index is memoized per JVM — queries after the first skip the
-    *   KMeans fit, which is how a stored IVF index behaves. */
+    * `nlist` KMeans cells ([[fitIvfCentroids]]), then answer the query
+    * by exact-cosine ranking inside only the `nprobe` cells whose
+    * centroids are nearest it. The scan touches ~nprobe/nlist of the
+    * data — at 100 TB the cell assignment is a stored column and the
+    * probe set is a partition-pruned filter. Cells come from
+    * [[assignCells]]; probe selection is a driver-side computation
+    * over nlist tiny vectors (centroid cosine desc, ties to the
+    * lowest cell id).
+    *
+    * @param cacheKey when set (e.g. the table path), the centroid fit
+    *   is memoized per JVM — queries after the first skip the KMeans
+    *   fit, which is how a stored IVF index behaves. */
   def ivfCosineTopK(df: DataFrame, idCol: String, vecCol: String,
                     queryId: Long, k: Int, nlist: Int = 16, nprobe: Int = 4,
                     seed: Long = 42L, roundTo: Int = 6,
                     cacheKey: Option[String] = None): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    val base = df.select(col(idCol), v.as("vec"))
-      .withColumn("fv", array_to_vector(col("vec")))
-    // A coarse quantizer doesn't need full convergence: cell BOUNDARIES
-    // shift slightly with more iterations but recall is governed by
-    // nprobe, and 10 iterations is the standard IVF training budget.
-    def fit() = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-      .setFeaturesCol("fv").setPredictionCol("cell").fit(base)
-    val model = cacheKey match {
-      case Some(key) =>
-        ivfIndexCache.computeIfAbsent((key, nlist, seed), _ => fit())
-      case None => fit()
-    }
-    val assigned = model.transform(base)
-
-    val qVec: MlVector = assigned.filter(col(idCol) === queryId)
-      .select(col("fv")).head().getAs[MlVector](0)
-    def cos(a: MlVector, b: MlVector): Double = {
+    val centroids = fitIvfCentroids(df, idCol, vecCol, nlist, seed, cacheKey)
+    val q = df.filter(col(idCol) === queryId)
+      .select(col(vecCol).cast("array<double>").as("qvec"))
+    val qVec = q.head().getSeq[Double](0).toArray
+    def cos(a: Array[Double], b: Array[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
-      while (i < a.size) {
+      while (i < a.length) {
         dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
-    val probeCells = model.clusterCenters.zipWithIndex
-      .sortBy { case (c, _) => -cos(c, qVec) }
-      .take(nprobe).map(_._2)
+    val probed = centroids
+      .sortBy { case (_, c) => -cos(c.toArray, qVec) }
+      .take(nprobe).map(_._1)
 
-    val q = assigned.filter(col(idCol) === queryId).select(col("vec").as("qvec"))
-    assigned
-      .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
+    // materialized before the `cell IN (...)` filter, which would
+    // otherwise inline the assignment fold a second time, past the
+    // JIT limit (the [[annJoinIvf]] barrier)
+    assignCells(df, idCol, vecCol, centroids, roundTo)
+      .localCheckpoint()
+      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
       .filter(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .select(col(idCol),
@@ -185,8 +173,8 @@ object Similarity {
     // carries a cheap CONTENT fingerprint of the backing directory
     // (file count + total bytes + max mtime — one driver-side
     // listStatus, no Spark job) alongside the caller's string
-    // (ADVICE r17: a path-only key mis-dispatches fixture vs live-fit
-    // serving if a dir's contents are rewritten within one JVM —
+    // (ADVICE r17: a path-only key mis-picks fixture vs live-fit
+    // artifacts if a dir's contents are rewritten within one JVM —
     // regenerated testdata, a reused blown dir; the fingerprint turns
     // that stale-cache hazard into a cache miss).
     cacheKey match {
@@ -223,49 +211,46 @@ object Similarity {
         .nextOption().getOrElse("static")
     } catch { case _: java.io.IOException => "static" }
 
-  /** The MLlib coarse-quantizer fit alone — centroids as plain
-    * (cell, coordinates) rows. [[buildIvfIndex]]'s exact
-    * configuration, shared by the q130 fixture dump
-    * ([[graft.FixtureDump]]) and the SimilaritySpec
-    * fit-reproduces-fixture assertion. */
-  def fitIvfCentroids(df: DataFrame, idCol: String, vecCol: String,
-                      nlist: Int = 16, seed: Long = 42L)
-      : Seq[(Int, Seq[Double])] = {
-    val v = col(vecCol).cast("array<double>")
-    val base = df.select(col(idCol).as("vec_id"), v.as("vec"))
-      .withColumn("fv", array_to_vector(col("vec")))
-    val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-      .setFeaturesCol("fv").setPredictionCol("cell").fit(base)
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-  }
+  private val ivfCentroidCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Long),
+      Seq[(Int, Seq[Double])]]()
 
-  /** Materialized IVF index: cell assignments written as parquet
-    * PARTITIONED BY cell, centroids as a tiny side table. At query
-    * time the probe-set filter `cell IN (...)` prunes whole
-    * directories — the scan touches ~nprobe/nlist of the stored bytes
-    * with zero index-structure code, which is exactly how a stored
-    * ANN index should behave on an object store. */
-  def buildIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                    indexDir: String, nlist: Int = 16,
-                    seed: Long = 42L): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.withDirLock(spark, indexDir, "buildIvfIndex") {
+  /** The coarse-quantizer fit: MLlib KMeans (k = `nlist`) over the
+    * corpus, centroids returned as plain (cell, coordinates) rows in
+    * cell order. The only coarse KMeans fit in the engine: every
+    * IVF/IVFPQ operator takes centroids as an argument, either this
+    * fit's or the committed `fixtures/q130_centroids.csv`, which
+    * [[graft.FixtureDump]] writes with this fit and SimilaritySpec
+    * checks against it. A coarse quantizer doesn't need full
+    * convergence: cell BOUNDARIES shift slightly with more iterations
+    * but recall is governed by nprobe, and 10 iterations is the
+    * standard IVF training budget.
+    *
+    * @param cacheKey when set (e.g. the table path), the fit is
+    *   memoized per JVM on (key, nlist, seed) — the [[fitPq]]
+    *   pattern: centroids are a training ARTIFACT every later query
+    *   on the same corpus reuses. The key carries the backing
+    *   directory's content fingerprint, as [[ivfCorpusKey]]'s does,
+    *   so a corpus rewritten in place within one JVM is refitted. */
+  def fitIvfCentroids(df: DataFrame, idCol: String, vecCol: String,
+                      nlist: Int = 16, seed: Long = 42L,
+                      cacheKey: Option[String] = None)
+      : Seq[(Int, Seq[Double])] = {
+    def fit(): Seq[(Int, Seq[Double])] = {
       val v = col(vecCol).cast("array<double>")
       val base = df.select(col(idCol).as("vec_id"), v.as("vec"))
         .withColumn("fv", array_to_vector(col("vec")))
       val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
         .setFeaturesCol("fv").setPredictionCol("cell").fit(base)
-      model.transform(base)
-        .select(col("vec_id"), col("vec"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/vectors")
       model.clusterCenters.zipWithIndex
         .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/centroids")
+    }
+    cacheKey match {
+      case Some(key) =>
+        ivfCentroidCache.computeIfAbsent(
+          (s"$key@${dirFingerprint(df.sparkSession, key)}", nlist, seed),
+          _ => fit())
+      case None => fit()
     }
   }
 
@@ -273,8 +258,9 @@ object Similarity {
     * — the incremental-ingest half of index maintenance (a nightly
     * embedding batch must not re-cluster the whole corpus): each new
     * vector is assigned to its nearest STORED centroid — exact
-    * squared-euclidean argmin, ties to the lowest cell id, the same
-    * rule `KMeans.transform` applies — and appended to the
+    * squared-euclidean argmin, ties to the lowest cell id, the
+    * rule `KMeans.transform` applies (unrounded, unlike the build's
+    * [[assignCells]]) — and appended to the
     * cell-partitioned layout, where [[annJoinIvfStored]] sees it on
     * its next scan with no other change.
     *
@@ -623,31 +609,40 @@ object Similarity {
   }
 
   // ------------------------------------------------------------------
-  // FIXTURE-PINNED IVF serving (round 17 — the r16 verdict's #4 ask):
-  // the MLlib KMeans FIT is engine-seeded (k-means|| sampling depends
-  // on partition layout; centroid updates on float reduction order),
-  // which is why the q124/q130 family sat rows-only for sixteen
-  // rounds. The q202/q208 seam applies: commit the fitted centroids
-  // ONCE as a fixture, serve from them with arithmetic every step of
-  // which replays in ANSI SQL, and spec-assert the live fit still
-  // reproduces the fixture. Serving from FROZEN centroids is also the
-  // production shape — a stored index's centroids do not drift
-  // between fits, and [[appendToIvfIndex]] already assigns against
-  // stored centroids. The replayable serving rules (vs the MLlib
-  // path's): cell assignment = argmin of round(sqEuclidean, roundTo)
+  // IVF serving from GIVEN centroids. Every IVF/IVFPQ operator below
+  // takes its centroids (and, for PQ, its codebooks) as an argument,
+  // so a fit only produces artifacts and serving is one code path
+  // whether they come from a live fit ([[fitIvfCentroids]],
+  // [[fitPq]]) or from a committed fixture. The fixtures are the
+  // q202/q208 seam: the MLlib fit is engine-seeded (k-means||
+  // sampling depends on partition layout, centroid updates on float
+  // reduction order), so q124/q130/q158/q159 serve frozen artifacts
+  // and spec-assert the live fit still reproduces them. Serving from
+  // frozen centroids is also the production shape — a stored index's
+  // centroids do not drift between fits, and [[appendToIvfIndex]]
+  // assigns against stored centroids. The serving rules replay in
+  // ANSI SQL: cell assignment = argmin of round(sqEuclidean, roundTo)
   // with ties to the LOWEST cell id; probe selection = top-nprobe by
   // round(cosine, roundTo) DESC with ties to the lowest cell id. Both
-  // are IN-ROW folds over nlist literal centroid arrays — no fit, no
-  // shuffle, no driver loop; candidate ranking is the standing
-  // rounded-cosine rule.
+  // are IN-ROW folds over nlist literal centroid arrays — no shuffle,
+  // no driver loop; candidate ranking is the standing rounded-cosine
+  // rule.
 
-  /** In-row deterministic cell assignment against FIXED centroids:
+  /** In-row deterministic cell assignment against given centroids:
     * adds `cell` to (idCol, vec). One codegen'd projection — nlist
-    * fused [[sqEuclidean]] loops per row, no shuffle, no join. */
-  def assignCellsFixed(df: DataFrame, idCol: String, vecCol: String,
-                       centroids: Seq[(Int, Seq[Double])],
-                       roundTo: Int = 6): DataFrame = {
-    require(centroids.nonEmpty, "assignCellsFixed: empty centroid set")
+    * [[sqEuclidean]] distances per row, no shuffle, no join.
+    *
+    * JIT hazard: the fold is nlist inlined distance/round/struct terms
+    * (~4 KB of bytecode at nlist 16). A filter on `cell` — an explicit
+    * one or the `isnotnull` a join on `cell` infers — is pushed below
+    * the projection and inlines it again, and the doubled method
+    * exceeds HotSpot's 8000-byte JIT limit, so the stage runs
+    * interpreted. Callers that filter or join on `cell` materialize
+    * the assignment first ([[annJoinIvf]], [[ivfCosineTopK]]). */
+  def assignCells(df: DataFrame, idCol: String, vecCol: String,
+                  centroids: Seq[(Int, Seq[Double])],
+                  roundTo: Int = 6): DataFrame = {
+    require(centroids.nonEmpty, "assignCells: empty centroid set")
     val sorted = centroids.sortBy(_._1)
     val v = col(vecCol).cast("array<double>")
     val base = df.select(col(idCol), v.as("vec"))
@@ -667,32 +662,41 @@ object Similarity {
     * nearest by round(cosine, roundTo) DESC, ties to the lowest cell
     * id — as a sortable struct array (negated rounded cosine sorts
     * ascending), sliced and ready to explode. */
-  private def probeCellsFixed(qvec: Column,
-                              centroids: Seq[(Int, Seq[Double])],
-                              nprobe: Int, roundTo: Int): Column =
+  private def probeCells(qvec: Column,
+                         centroids: Seq[(Int, Seq[Double])],
+                         nprobe: Int, roundTo: Int): Column =
     slice(sort_array(array(centroids.sortBy(_._1).map { case (cell, c) =>
       struct(
         (-round(cosine(qvec, array(c.map(lit): _*)), roundTo)).as("negcos"),
         lit(cell).as("cell"))
     }: _*)), 1, nprobe)
 
-  /** Batch approximate k-NN join serving from FIXED centroids (the
-    * fixture-pinned twin of [[annJoinIvf]] — no fit anywhere): assign
-    * the corpus in-row, explode each query's probe cells, join on
-    * cell equality, rank by rounded cosine. Every step replays in
-    * ANSI SQL, which is what flips q124 to hash-oracled. */
-  def annJoinIvfFixed(queries: DataFrame, corpus: DataFrame,
-                      idCol: String, vecCol: String, k: Int,
-                      centroids: Seq[(Int, Seq[Double])],
-                      nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
-    val assigned = assignCellsFixed(corpus, idCol, vecCol, centroids,
-        roundTo)
+  /** Batch approximate k-NN join through the IVF cells — the
+    * cell-pruned twin of [[annJoinLsh]]: the corpus is assigned
+    * in-row ([[assignCells]]); each QUERY row picks its `nprobe` probe
+    * cells in-row ([[probeCells]] — no per-query driver loop, unlike
+    * the single-query [[ivfCosineTopK]], which is the point of the
+    * batch form); the probe explosion joins the corpus on cell
+    * EQUALITY (each query reads ~nprobe/nlist of the corpus); rounded
+    * cosine ranks. Every step replays in ANSI SQL (the q124
+    * oracle). */
+  def annJoinIvf(queries: DataFrame, corpus: DataFrame,
+                 idCol: String, vecCol: String, k: Int,
+                 centroids: Seq[(Int, Seq[Double])],
+                 nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
+    // materialized: the join's inferred `isnotnull(cell)` filter would
+    // inline the assignment fold a second time, past the JIT limit
+    // ([[assignCells]]; 10x sf0.1 corpus, 4 cores: 4.1 s → 0.9 s).
+    // Bounded: |corpus| rows; [[annJoinPq]]'s cluster-mode caveat
+    // applies.
+    val assigned = assignCells(corpus, idCol, vecCol, centroids, roundTo)
       .select(col(idCol).as("neighbor_id"), col("vec"), col("cell"))
+      .localCheckpoint()
     val probes = queries
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qvec"))
       .select(col("query_id"), col("qvec"),
-        explode(probeCellsFixed(col("qvec"), centroids, nprobe, roundTo)
+        explode(probeCells(col("qvec"), centroids, nprobe, roundTo)
           .getField("cell")).as("cell"))
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -705,20 +709,22 @@ object Similarity {
       .filter(col("rnk") <= k)
   }
 
-  /** Materialize the IVF index layout from FIXED centroids — the
-    * [[buildIvfIndex]] twin with [[assignCellsFixed]] in place of the
-    * MLlib fit+transform. Same on-disk layout (cell-partitioned
-    * vectors + centroid table), so [[annJoinIvfStoredFixed]] and
-    * [[appendToIvfIndex]] both serve it unchanged. */
-  def buildIvfIndexFromCentroids(df: DataFrame, idCol: String,
-                                 vecCol: String, indexDir: String,
-                                 centroids: Seq[(Int, Seq[Double])],
-                                 roundTo: Int = 6): Unit = {
+  /** Materialized IVF index: cell assignments ([[assignCells]] against
+    * the given centroids) written as parquet PARTITIONED BY cell,
+    * centroids as a tiny side table. At query time the probe-set
+    * filter `cell IN (...)` prunes whole directories — the scan
+    * touches ~nprobe/nlist of the stored bytes with zero
+    * index-structure code, which is exactly how a stored ANN index
+    * should behave on an object store. [[annJoinIvfStored]] and
+    * [[appendToIvfIndex]] both serve the layout. */
+  def buildIvfIndex(df: DataFrame, idCol: String,
+                    vecCol: String, indexDir: String,
+                    centroids: Seq[(Int, Seq[Double])],
+                    roundTo: Int = 6): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.sources.Sinks.withDirLock(spark, indexDir,
-      "buildIvfIndexFromCentroids") {
-      assignCellsFixed(df, idCol, vecCol, centroids, roundTo)
+    graft.sources.Sinks.withDirLock(spark, indexDir, "buildIvfIndex") {
+      assignCells(df, idCol, vecCol, centroids, roundTo)
         .select(col(idCol).as("vec_id"), col("vec"), col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$indexDir/vectors")
@@ -729,16 +735,24 @@ object Similarity {
     }
   }
 
-  /** Batch k-NN join against a stored fixed-centroid index: probe
-    * selection replays [[probeCellsFixed]]'s rounded rule from the
-    * stored centroid table (collected — nlist tiny rows, the bounded
-    * driver class), the scan is statically pruned to the probed
-    * cells, ranking is the rounded-cosine rule. The stored twin of
-    * [[annJoinIvfFixed]], and the q130 flip's probe side. */
-  def annJoinIvfStoredFixed(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String, queries: DataFrame,
-                            idCol: String, vecCol: String, k: Int,
-                            nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
+  /** Batch k-NN join through the MATERIALIZED IVF index
+    * ([[buildIvfIndex]]) — the production retrieval shape: a query
+    * TABLE against a persisted, cell-partitioned index, no fit at
+    * query time. Probe selection replays [[probeCells]]'s rounded rule
+    * from the stored centroid table (collected — nlist tiny rows, the
+    * bounded driver class) and rounded cosine ranks, so the result
+    * equals [[annJoinIvf]]'s over the same centroids.
+    *
+    * Partition pruning is GUARANTEED, not heuristic: the union of all
+    * probed cells (≤ nlist values) becomes a literal `cell IN (...)`
+    * filter on the scan, so only the probed directories are read —
+    * statically, independent of the DPP cost heuristic; the per-query
+    * cell equality join then narrows each query to ITS nprobe
+    * cells. */
+  def annJoinIvfStored(spark: org.apache.spark.sql.SparkSession,
+                       indexDir: String, queries: DataFrame,
+                       idCol: String, vecCol: String, k: Int,
+                       nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
     val centroids = spark.read.parquet(s"$indexDir/centroids")
       .collect().map(r =>
         (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
@@ -746,7 +760,7 @@ object Similarity {
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qvec"))
       .select(col("query_id"), col("qvec"),
-        explode(probeCellsFixed(col("qvec"), centroids, nprobe, roundTo)
+        explode(probeCells(col("qvec"), centroids, nprobe, roundTo)
           .getField("cell")).as("cell"))
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0))  // ≤ nlist values
@@ -756,113 +770,6 @@ object Similarity {
       .partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     probes.join(vectors, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(col("vec"), col("qvec")), roundTo).as("cos"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Batch approximate k-NN join through the IVF index — the stored-
-    * index twin of [[annJoinLsh]]: the corpus carries its KMeans cell
-    * assignment (a stored column in the materialized-index layout, see
-    * [[buildIvfIndex]]); each QUERY row picks its `nprobe` probe cells
-    * IN-ROW against the broadcast centroid table (nlist tiny rows —
-    * no per-query driver loop, unlike the single-query
-    * [[ivfCosineTopK]], which is the point of the batch form); the
-    * probe explosion joins the corpus on cell EQUALITY (each query
-    * reads ~nprobe/nlist of the corpus — with the cell-partitioned
-    * parquet layout that is literal partition pruning); exact cosine
-    * re-ranks. Probe selection matches [[ivfCosineTopK]]'s: centroids
-    * ranked by cosine to the query, ties by cell id. */
-  def annJoinIvf(queries: DataFrame, corpus: DataFrame,
-                 idCol: String, vecCol: String, k: Int,
-                 nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-                 roundTo: Int = 6,
-                 cacheKey: Option[String] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val v = col(vecCol).cast("array<double>")
-    val base = corpus.select(col(idCol).as("neighbor_id"), v.as("vec"))
-      .withColumn("fv", array_to_vector(col("vec")))
-    def fit() = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-      .setFeaturesCol("fv").setPredictionCol("cell").fit(base)
-    val model = cacheKey match {
-      case Some(key) =>
-        ivfIndexCache.computeIfAbsent((key, nlist, seed), _ => fit())
-      case None => fit()
-    }
-    val assigned = model.transform(base)
-      .select(col("neighbor_id"), col("vec"), col("cell"))
-    val centroids = broadcast(
-      model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("cell", "centroid"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cell"))
-    val probes = queries
-      .select(col(idCol).as("query_id"), v.as("qvec"))
-      .crossJoin(centroids)  // bounded: |queries| × nlist, build side nlist rows
-      .select(col("query_id"), col("qvec"), col("cell"),
-        cosine(col("qvec"), col("centroid")).as("ccos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("qvec"), col("cell"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    probes.join(assigned, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("vec"), col("qvec")), roundTo).as("cos"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Batch k-NN join through the MATERIALIZED IVF index
-    * ([[buildIvfIndex]]) — the production retrieval shape: a query
-    * TABLE against a persisted, cell-partitioned index, no KMeans fit
-    * at query time. Centroids broadcast from `$indexDir/centroids`
-    * (nlist tiny rows); each query row picks its `nprobe` probe cells
-    * IN-ROW with the same selection rule as [[annJoinIvf]] (centroid
-    * cosine desc, ties by cell id); the probe explosion joins
-    * `$indexDir/vectors` on cell EQUALITY and exact cosine re-ranks.
-    *
-    * Partition pruning is GUARANTEED, not heuristic: the union of all
-    * probed cells (≤ nlist values — the same bounded-driver class as
-    * the centroid collect) becomes a literal `cell IN (...)` filter on
-    * the scan, so only the probed directories are read — statically,
-    * independent of the DPP cost heuristic; the per-query cell
-    * equality join then narrows each query to ITS nprobe cells. A
-    * query batch therefore reads ~|∪probes|/nlist of the stored bytes,
-    * which is how a stored ANN index must behave on an object store. */
-  def annJoinIvfStored(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, queries: DataFrame,
-                       idCol: String, vecCol: String, k: Int,
-                       nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
-    val centroids = broadcast(spark.read.parquet(s"$indexDir/centroids"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cell"))
-    val probes = queries
-      .select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qvec"))
-      .crossJoin(centroids)  // bounded: |queries| × nlist, build side nlist rows
-      .select(col("query_id"), col("qvec"), col("cell"),
-        cosine(col("qvec"), col("centroid")).as("ccos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("qvec"), col("cell"))
-    val probedCells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))  // ≤ nlist values
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    probes
-      .join(vectors.filter(
-        col("cell").isin(probedCells.map(Integer.valueOf): _*)), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(cosine(col("vec"), col("qvec")), roundTo).as("cos"))
@@ -916,8 +823,8 @@ object Similarity {
     * in-memory slices; PQ codebooks are trained on a sample in
     * practice (quantizer quality needs thousands of points per
     * centroid, not the full corpus — set `sampleFraction` accordingly
-    * at real scale). `cacheKey` memoizes the fit per JVM (the stored
-    * [[ivfCosineTopK]] pattern): codebooks are a training ARTIFACT
+    * at real scale). `cacheKey` memoizes the fit per JVM (the
+    * [[fitIvfCentroids]] pattern): codebooks are a training ARTIFACT
     * every downstream encode/query reuses byte-identically.
     *
     * Cosine metric (`normalize = true`, the default — every consumer
@@ -962,7 +869,8 @@ object Similarity {
     cacheKey match {
       case Some(key) =>
         pqCodebookCache.computeIfAbsent(
-          (s"$key|norm=$normalize", m, ksub, seed), _ => fit())
+          (s"$key@${dirFingerprint(df.sparkSession, key)}|norm=$normalize",
+            m, ksub, seed), _ => fit())
       case None => fit()
     }
   }
@@ -1023,7 +931,7 @@ object Similarity {
     // bench-corpus-only (the committed-fixture dispatch never matches
     // a production corpus); external callers wanting rounded serving
     // at cluster scale should persist the codes to storage (the
-    // [[buildIvfPqIndexFromFixtures]] stored layout) instead of this
+    // [[buildIvfPqIndex]] stored layout) instead of this
     // in-memory barrier.
     val c = (if (quantRound >= 0) encoded.localCheckpoint() else encoded)
       .withColumnRenamed(idCol, "neighbor_id")
@@ -1079,161 +987,30 @@ object Similarity {
     * multiplicative IO cuts of the FAISS IVFPQ architecture — pulling
     * full-precision vectors only for the final re-rank candidates.
     *
-    * Codes quantize the NORMALIZED vector directly (non-residual PQ;
-    * residual encoding would couple every code to its cell centroid,
-    * complicating append/rebalance for accuracy this corpus shape
-    * doesn't need — the re-rank stage recovers it). Layout:
-    * `centroids` (cell, centroid), `codebooks` (j, c, centroid),
-    * `vectors/` and `codes/` both partitioned by cell. Same
-    * single-writer lock and overwrite semantics as [[buildIvfIndex]].
-    * `pqCacheKey` forwards to [[fitPq]]'s codebook memoization — the
-    * fit is a deterministic artifact of (corpus, m, ksub, seed), so a
-    * caller that already fit the same corpus (e.g. for an in-memory
-    * [[annJoinPq]]) reuses it instead of re-running the m subspace
-    * KMeans fits. */
-  def buildIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
-                      indexDir: String, nlist: Int = 16, m: Int = 8,
-                      ksub: Int = 64, seed: Long = 42L,
-                      pqCacheKey: Option[String] = None): Unit = {
+    * Cells come from [[assignCells]] over the given centroids, codes
+    * from the [[pqEncode]] expression over the given codebooks with
+    * `quantRound`-rounded subspace distances (`-1` leaves them
+    * unrounded, the live-fit setting; the committed fixtures serve
+    * with 6, so build → store → probe replays in ANSI SQL — the q159
+    * oracle). Codes quantize the NORMALIZED vector directly
+    * (non-residual PQ; residual encoding would couple every code to
+    * its cell centroid, complicating append/rebalance for accuracy
+    * this corpus shape doesn't need — the re-rank stage recovers it).
+    * Layout: `centroids` (cell, centroid), `codebooks` (j, c,
+    * centroid), `vectors/` and `codes/` both partitioned by cell. Same
+    * single-writer lock and overwrite semantics as
+    * [[buildIvfIndex]]. */
+  def buildIvfPqIndex(df: DataFrame, idCol: String,
+                      vecCol: String, indexDir: String,
+                      centroids: Seq[(Int, Seq[Double])],
+                      codebooks: Array[Array[Array[Double]]],
+                      quantRound: Int = 6,
+                      roundTo: Int = 6): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
     graft.sources.Sinks.withDirLock(spark, indexDir, "buildIvfPqIndex") {
-      val v = col(vecCol).cast("array<double>")
-      val base = df.select(col(idCol).as("vec_id"), v.as("vec"))
-        .withColumn("fv", array_to_vector(col("vec")))
-      val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-        .setFeaturesCol("fv").setPredictionCol("cell").fit(base)
-      val codebooks = fitPq(df, vecCol, m = m, ksub = ksub, seed = seed,
-        cacheKey = pqCacheKey)
       // one assignment+encode pass feeds both partitioned writes
-      val assigned = model.transform(base)
-        .select(col("vec_id"), col("vec"),
-          graft.functions.GraftFunctions.pq_encode(col("vec"), codebooks,
-            normalize = true).as("codes"),
-          col("cell"))
-        .localCheckpoint(true)
-      assigned.select(col("vec_id"), col("vec"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/vectors")
-      assigned.select(col("vec_id"), col("codes"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/codes")
-      model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/centroids")
-      codebooks.zipWithIndex.flatMap { case (book, j) =>
-        book.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
-      }.toSeq
-        .toDF("j", "c", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    }
-  }
-
-  /** Batch k-NN join through the stored IVFPQ index: probe cells are
-    * picked in-row against the broadcast centroid table (the
-    * [[annJoinIvfStored]] rule — centroid cosine desc, ties by cell
-    * id) and become a literal partition filter on the CODES scan;
-    * within probed cells, ADC over the per-query broadcast LUT
-    * proposes `k × refine` candidates (m array reads + m adds per
-    * row, no float IO); only those candidates' rows of `vectors/` are
-    * fetched — a candidate-bounded join, itself pruned to the probed
-    * cells — for the exact cosine re-rank.
-    *
-    * The codebook collect is bounded (m·ksub rows, KBs — the same
-    * driver class as the centroid collect). Output: (query_id,
-    * neighbor_id, cos, rnk ≤ k), deterministic for a fixed stored
-    * index. */
-  def annJoinIvfPqStored(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String, queries: DataFrame,
-                         idCol: String, vecCol: String, k: Int,
-                         nprobe: Int = 4, refine: Int = 4,
-                         roundTo: Int = 6): DataFrame = {
-    val centroids = broadcast(spark.read.parquet(s"$indexDir/centroids"))
-    val codebooks = spark.read.parquet(s"$indexDir/codebooks")
-      .collect()  // bounded: m × ksub tiny rows
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rows) =>
-        rows.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray).toArray
-      }.toArray
-    val ksub = codebooks(0).length
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cell"))
-    val probes = queries
-      .select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qvec"))
-      .crossJoin(centroids)  // bounded: |queries| × nlist
-      .select(col("query_id"), col("qvec"), col("cell"),
-        cosine(col("qvec"), col("centroid")).as("ccos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("qvec"),
-        graft.functions.GraftFunctions.pq_lut(col("qvec"), codebooks,
-          normalize = true).as("__qlut"),
-        col("cell"))
-      // MATERIALIZE the LUTs before the codes join: the probe side
-      // feeds the join inside one whole-stage-codegen pipeline, where
-      // a projected expression is evaluated lazily AT USE — and the
-      // use site (pq_adc) is inside the join's matched-row loop, so
-      // without a barrier the m·ksub·dsub LUT is recomputed PER
-      // CANDIDATE PAIR instead of per probe row. Invisible at bench
-      // SF; the round-8 100× scalebench caught one task burning 15+
-      // minutes in exactly this loop. The checkpoint is bounded:
-      // |queries|·nprobe rows of m·ksub doubles.
-      .localCheckpoint()
-    val probedCells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))  // ≤ nlist values
-    val cellLit = probedCells.map(Integer.valueOf)
-    val codes = spark.read.parquet(s"$indexDir/codes")
-      .filter(col("cell").isin(cellLit: _*))
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("neighbor_id"))
-    val cand = probes.join(codes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("qvec"),
-        col("vec_id").as("neighbor_id"),
-        graft.functions.GraftFunctions.pq_adc(
-          col("codes"), col("__qlut"), ksub).as("adc"))
-      .withColumn("arn", row_number().over(wAdc))
-      .filter(col("arn") <= k * refine)
-      .select(col("query_id"), col("qvec"), col("neighbor_id"))
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
-      .filter(col("cell").isin(cellLit: _*))
-      .select(col("vec_id").as("neighbor_id"), col("vec"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(vectors, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("vec"), col("qvec")), roundTo).as("cos"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Materialize the IVFPQ layout from FIXED artifacts — the
-    * [[buildIvfPqIndex]] twin with [[assignCellsFixed]] (rounded
-    * coarse argmin from the committed centroid fixture) in place of
-    * the MLlib fit and rounded-distance [[pqEncode]] (the committed
-    * PQ codebooks, `quantRound`-rounded subspace distances) in place
-    * of the live per-subspace fits. Same on-disk layout, so every
-    * stored-index consumer serves it unchanged; together with
-    * [[annJoinIvfPqStoredFixed]] the whole build→store→probe chain
-    * replays in ANSI SQL, which is what flips q159 to hash-oracled. */
-  def buildIvfPqIndexFromFixtures(df: DataFrame, idCol: String,
-                                  vecCol: String, indexDir: String,
-                                  centroids: Seq[(Int, Seq[Double])],
-                                  codebooks: Array[Array[Array[Double]]],
-                                  quantRound: Int = 6,
-                                  roundTo: Int = 6): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    graft.sources.Sinks.withDirLock(spark, indexDir,
-      "buildIvfPqIndexFromFixtures") {
-      val assigned = assignCellsFixed(df, idCol, vecCol, centroids, roundTo)
+      val assigned = assignCells(df, idCol, vecCol, centroids, roundTo)
         .select(col(idCol).as("vec_id"), col("vec"),
           graft.functions.GraftFunctions.pq_encode(col("vec"), codebooks,
             normalize = true, roundTo = quantRound).as("codes"),
@@ -1258,21 +1035,29 @@ object Similarity {
     }
   }
 
-  /** Batch k-NN join against a stored fixed-artifact IVFPQ index —
-    * the [[annJoinIvfPqStored]] twin under the committed-fixture
-    * serving rules: probe cells by ROUNDED centroid cosine (the
-    * [[annJoinIvfStoredFixed]] rule), the codes scan statically
-    * pruned to the probed cells, ADC candidates ranked by the ROUNDED
-    * sum of `quantRound`-rounded LUT entries (ascending j — sums of
-    * identically-rounded doubles are bit-identical cross-engine),
-    * exact rounded-cosine re-rank over candidate vectors only. Every
-    * step replays in ANSI SQL (the q158/q159 flip). */
-  def annJoinIvfPqStoredFixed(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, queries: DataFrame,
-                              idCol: String, vecCol: String, k: Int,
-                              nprobe: Int = 4, refine: Int = 4,
-                              quantRound: Int = 6,
-                              roundTo: Int = 6): DataFrame = {
+  /** Batch k-NN join through the stored IVFPQ index
+    * ([[buildIvfPqIndex]]): probe cells by ROUNDED centroid cosine
+    * (the [[annJoinIvfStored]] rule) become a literal partition filter
+    * on the CODES scan; within probed cells, ADC over the per-query
+    * broadcast LUT (`quantRound`-rounded entries, `-1` = unrounded —
+    * pass the build's value) proposes `k × refine` candidates ranked
+    * by the ADC sum rounded to 9 decimals (m array reads + m adds per
+    * row, no float IO; sums of identically-rounded doubles in
+    * ascending j are bit-identical cross-engine); only those
+    * candidates' rows of `vectors/` are fetched — a candidate-bounded
+    * join, itself pruned to the probed cells — for the exact
+    * rounded-cosine re-rank. Served from the committed fixtures, every
+    * step replays in ANSI SQL (the q159 oracle).
+    *
+    * The centroid and codebook collects are bounded (nlist and m·ksub
+    * rows, KBs). Output: (query_id, neighbor_id, cos, rnk ≤ k),
+    * deterministic for a fixed stored index. */
+  def annJoinIvfPqStored(spark: org.apache.spark.sql.SparkSession,
+                         indexDir: String, queries: DataFrame,
+                         idCol: String, vecCol: String, k: Int,
+                         nprobe: Int = 4, refine: Int = 4,
+                         quantRound: Int = 6,
+                         roundTo: Int = 6): DataFrame = {
     val centroids = spark.read.parquet(s"$indexDir/centroids")
       .collect().map(r =>
         (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq  // ≤ nlist rows
@@ -1289,11 +1074,17 @@ object Similarity {
       .select(col("query_id"), col("qvec"),
         graft.functions.GraftFunctions.pq_lut(col("qvec"), codebooks,
           normalize = true, roundTo = quantRound).as("__qlut"),
-        explode(probeCellsFixed(col("qvec"), centroids, nprobe, roundTo)
+        explode(probeCells(col("qvec"), centroids, nprobe, roundTo)
           .getField("cell")).as("cell"))
-      // materialize the LUTs before the codes join (the
-      // [[annJoinIvfPqStored]] barrier — without it the m·ksub·dsub
-      // LUT recomputes per candidate pair inside the join loop)
+      // MATERIALIZE the LUTs before the codes join: the probe side
+      // feeds the join inside one whole-stage-codegen pipeline, where
+      // a projected expression is evaluated lazily AT USE — and the
+      // use site (pq_adc) is inside the join's matched-row loop, so
+      // without a barrier the m·ksub·dsub LUT is recomputed PER
+      // CANDIDATE PAIR instead of per probe row. Invisible at bench
+      // SF; the round-8 100× scalebench caught one task burning 15+
+      // minutes in exactly this loop. The checkpoint is bounded:
+      // |queries|·nprobe rows of m·ksub doubles.
       .localCheckpoint()
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0))  // ≤ nlist values

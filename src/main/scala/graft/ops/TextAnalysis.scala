@@ -677,8 +677,7 @@ object TextAnalysis {
     * accordingly (filter on n_pairs downstream if that matters). */
   private def scoreAgainstLm(docs: DataFrame, idCol: String,
                              textCol: String, lm: DataFrame,
-                             tokenizer: Column => Column = tokens(_))
-      : DataFrame = {
+                             tokenizer: Column => Column): DataFrame = {
     val docBg = docs
       .select(col(idCol).as("id"), tokenizer(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= 2)

@@ -110,8 +110,8 @@ object PlanGuard {
     * as DATA, not deferred expressions (§9's rule). */
   def streamSideHazards(plan: org.apache.spark.sql.execution.SparkPlan)
       : Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
-      AttributeSet, Expression}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet,
+      Expression}
     import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, JoinType,
       LeftAnti, LeftSemi}
     import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}

@@ -506,6 +506,44 @@ object CorpusQueries {
     } finally src.close()
   }
 
+  /** The PQ codebooks q158/q159 serve from, with the `quantRound`
+    * they serve at: the committed fixture's at 6 (rounded subspace
+    * distances, replayed by the oracle), or — under
+    * [[graft.QueryDef.liveFitForced]], or on a corpus the fixture has
+    * no key for — the live [[Similarity.fitPq]], memoized per corpus,
+    * at -1 (unrounded). Either way the query runs the same serving
+    * code. */
+  private def pqArtifacts(emb: org.apache.spark.sql.DataFrame, d: String)
+      : (Array[Array[Array[Double]]], Int) = {
+    val cacheKey = Some(s"$d/embeddings")
+    (if (graft.QueryDef.liveFitForced) None
+     else pqFixture.get(Similarity.ivfCorpusKey(emb, cacheKey = cacheKey)))
+      .map(cb => (cb, 6))
+      .getOrElse((livePq(emb, d), -1))
+  }
+
+  private def livePq(emb: org.apache.spark.sql.DataFrame, d: String)
+      : Array[Array[Array[Double]]] =
+    Similarity.fitPq(emb, "embedding", m = PqM, ksub = PqKsub,
+      cacheKey = Some(s"$d/embeddings"))
+
+  /** q159's (centroids, codebooks, quantRound), decided once for both
+    * artifacts: the committed fixtures' at 6 only when BOTH fixtures
+    * hold this corpus's key, else both live fits at -1 — never frozen
+    * centroids with live codebooks, which would match neither the
+    * oracle nor the live-fit path. */
+  private def ivfPqArtifacts(emb: org.apache.spark.sql.DataFrame, d: String)
+      : (Seq[(Int, Seq[Double])], Array[Array[Array[Double]]], Int) = {
+    val key = if (graft.QueryDef.liveFitForced) None
+      else Some(Similarity.ivfCorpusKey(emb, cacheKey = Some(s"$d/embeddings")))
+    (for {
+      k <- key
+      cents <- ScaleQueries.ivfFixture.get(k)
+      cb <- pqFixture.get(k)
+    } yield (cents, cb, 6))
+      .getOrElse((ScaleQueries.liveIvfCentroids(emb, d), livePq(emb, d), -1))
+  }
+
   /** The shared normalize→encode→LUT→ADC oracle prefix over the
     * committed codebook fixture — the literal SQL twin of
     * [[graft.functions.PqEncode]]/[[graft.functions.PqLut]] in their
@@ -622,10 +660,10 @@ object CorpusQueries {
     * the literal SQL twin of the oracle above. SimilaritySpec asserts
     * the live fitPq still reproduces the fixture, so an MLlib drift
     * fails a test instead of silently moving the answer; corpora
-    * outside the fixture (the scale harness's blown dirs) fall back
-    * to the live-fit unrounded path, which is what the 10×/100× maps
-    * measure. PqSpec still pins the unrounded expression
-    * bit-identities and the recall gate. */
+    * outside the fixture (the scale harness's blown dirs) are served
+    * from live-fit codebooks, unrounded ([[pqArtifacts]]), which is
+    * what the 10×/100× maps measure. PqSpec still pins the unrounded
+    * expression bit-identities and the recall gate. */
   val q158KnnJoinPq = QueryDef(
     "q158_knn_join_pq",
     pqOraclePrefix("vec_id % 100 = 0") + pqOracleSuffix(
@@ -637,24 +675,12 @@ object CorpusQueries {
         |    FROM lutl l, codes co
         |    WHERE co.vec_id <> l.query_id""".stripMargin)) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    (if (graft.QueryDef.liveFitForced) None
-     else pqFixture.get(Similarity.ivfCorpusKey(emb,
-       cacheKey = Some(s"$d/embeddings")))) match {
-      case Some(cb) =>
-        Similarity.annJoinPqRerank(
-            queries = emb.filter(expr("vec_id % 100 = 0")), corpus = emb,
-            idCol = "vec_id", vecCol = "embedding", k = PqK, cb,
-            refine = PqRefine, quantRound = 6)
-          .orderBy(col("query_id"), col("rnk"))
-      case None =>
-        val cb = Similarity.fitPq(emb, "embedding", m = PqM, ksub = PqKsub,
-          cacheKey = Some(s"$d/embeddings"))
-        Similarity.annJoinPqRerank(
-            queries = emb.filter(expr("vec_id % 100 = 0")), corpus = emb,
-            idCol = "vec_id", vecCol = "embedding", k = PqK, cb,
-            refine = PqRefine)
-          .orderBy(col("query_id"), col("rnk"))
-    }
+    val (cb, quantRound) = pqArtifacts(emb, d)
+    Similarity.annJoinPqRerank(
+        queries = emb.filter(expr("vec_id % 100 = 0")), corpus = emb,
+        idCol = "vec_id", vecCol = "embedding", k = PqK, cb,
+        refine = PqRefine, quantRound = quantRound)
+      .orderBy(col("query_id"), col("rnk"))
   }
 
   /** Batch k-NN join through the STORED IVFPQ index
@@ -665,11 +691,12 @@ object CorpusQueries {
     * only for the ADC candidates' re-rank. PqSpec pins partition
     * pruning and full-probe equality with the non-IVF PQ join. The
     * index dir is wiped per run (the q130 discipline — a stale
-    * layout from older params would change cells/codes); the PQ
-    * codebook fit shares q158's memoized artifact (same corpus and
-    * params — the q154 discipline), so the timing covers the index
-    * BUILD (cell fit + assign/encode + partitioned writes) and the
-    * pruned query, not a refit q158 already times. */
+    * layout from older params would change cells/codes); live-fit
+    * centroids and codebooks are memoized per corpus and the
+    * codebooks are q158's artifact (same corpus and params — the q154
+    * discipline), so the timing covers the index BUILD (the first
+    * run's fits + assign/encode + partitioned writes) and the pruned
+    * query, not a refit q158 already times. */
   /** q159 split into build vs probe (the q130Parts pattern): the 100×
     * scale entry for this query was build-dominated by design (the
     * one-time cell fit + encode is corpus-linear), which meant a
@@ -681,49 +708,27 @@ object CorpusQueries {
       s"target/tmp/q159_ivfpq_index_$sf"
     }
     val emb = Tables.embeddings(s, d)
-    // fixture dispatch decided ONCE here, outside the thunks (the
-    // q130Parts discipline): the fixed path needs BOTH committed
-    // artifacts — the coarse centroids (q130's fixture) and the PQ
-    // codebooks (q158's) — under the same corpus key
-    val fixed = if (graft.QueryDef.liveFitForced) None else {
-      val key = Similarity.ivfCorpusKey(emb,
-        cacheKey = Some(s"$d/embeddings"))
-      for {
-        cents <- ScaleQueries.ivfFixture.get(key)
-        cb <- pqFixture.get(key)
-      } yield (cents, cb)
-    }
+    // both artifacts — the coarse centroids (q130's) and the PQ
+    // codebooks (q158's) — are picked (the corpus checksum) or fitted
+    // inside build, the one-time index cost (the q130Parts
+    // discipline); the probe phase only reads the stored index and
+    // the build's quantRound
+    lazy val (centroids, codebooks, quantRound) = ivfPqArtifacts(emb, d)
     val build = () => {
       graft.sources.Sinks.wipeForRebuild(s, dir)
-      fixed match {
-        case Some((cents, cb)) =>
-          Similarity.buildIvfPqIndexFromFixtures(
-            emb, "vec_id", "embedding", dir, cents, cb)
-        case None =>
-          Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
-            nlist = 16, m = PqM, ksub = PqKsub,
-            pqCacheKey = Some(s"$d/embeddings"))
-      }
-      ()
+      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
+        centroids, codebooks, quantRound)
     }
     // copy-0-pinned probe batch (ScaleQueries.ProbeBatchFilter): on
     // real testdata dirs this is every 100th vector unchanged; on a
     // ScaleBench blow-up it pins the query COUNT so the split's probe
     // ratio certifies probe-cost-vs-corpus at a fixed workload
-    val probe = () =>
-      (if (fixed.isDefined)
-        Similarity.annJoinIvfPqStoredFixed(s, dir,
-          queries = emb.filter(
-            expr("vec_id % 100 = 0 AND vec_id < 8589934592")),
-          idCol = "vec_id", vecCol = "embedding", k = PqK, nprobe = 4,
-          refine = PqRefine)
-      else
-        Similarity.annJoinIvfPqStored(s, dir,
-          queries = emb.filter(
-            expr("vec_id % 100 = 0 AND vec_id < 8589934592")),
-          idCol = "vec_id", vecCol = "embedding", k = PqK, nprobe = 4,
-          refine = PqRefine))
-        .orderBy(col("query_id"), col("rnk"))
+    val probe = () => Similarity.annJoinIvfPqStored(s, dir,
+        queries = emb.filter(
+          expr("vec_id % 100 = 0 AND vec_id < 8589934592")),
+        idCol = "vec_id", vecCol = "embedding", k = PqK, nprobe = 4,
+        refine = PqRefine, quantRound = quantRound)
+      .orderBy(col("query_id"), col("rnk"))
     (build, probe)
   }
 
@@ -763,14 +768,14 @@ object CorpusQueries {
   /** HASH-ORACLED since round 17, exactly like [[q158KnnJoinPq]] plus
     * the IVF layer from q124/q130's centroid fixture: the stored
     * layout is built from BOTH frozen artifacts
-    * ([[Similarity.buildIvfPqIndexFromFixtures]]) and served by the
-    * rounded probe/ADC/re-rank rules
-    * ([[Similarity.annJoinIvfPqStoredFixed]]), so
+    * ([[Similarity.buildIvfPqIndex]]) and served by the rounded
+    * probe/ADC/re-rank rules ([[Similarity.annJoinIvfPqStored]]), so
     * build → store → probe replays end-to-end in SQL: candidates are
     * restricted to each query's nprobe = 4 probed cells (partition-
     * pruned on the Spark side, a cell-equality join in the oracle),
     * ranked by ADC over the frozen codebooks, re-ranked by exact
-    * rounded cosine. Blown corpora fall back to the live-fit path. */
+    * rounded cosine. Blown corpora are served from live-fit
+    * centroids and codebooks. */
   val q159KnnJoinIvfPqStored = QueryDef(
     "q159_knn_join_ivfpq_stored",
     pqOraclePrefix("vec_id % 100 = 0 AND vec_id < 8589934592") +

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.{Curation, CurationPipeline, Dedup, LinearProbe, Relational, TextAnalysis}
+import graft.ops.{Curation, CurationPipeline, LinearProbe, Relational, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1156,9 +1156,10 @@ object CurationQueries {
     * engine has individually proven:
     *
     *   1. normalized exact dedup (q153's op on the real corpus —
-    *      [[TextAnalysis.normalizeText]] + [[Dedup.exactDedup]], keep
-    *      the min doc_id per normalized digest; the eval holdout
-    *      `doc_id % 19 = 0` never enters the corpus),
+    *      [[TextAnalysis.normalizeText]] +
+    *      [[graft.ops.Dedup.exactDedup]], keep the min doc_id per
+    *      normalized digest; the eval holdout `doc_id % 19 = 0`
+    *      never enters the corpus),
     *   2. duplicated-span removal (q157 — 10-token chunks, corpus-wide
     *      keep-first on the replayable md5 chunk key, docs reassembled
     *      from surviving chunks; empty rewrites drop),

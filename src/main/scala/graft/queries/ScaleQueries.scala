@@ -198,12 +198,31 @@ object ScaleQueries {
     } finally src.close()
   }
 
+  /** The coarse centroids q124/q130/q159 serve from: the committed
+    * fixture's for this corpus, or — under
+    * [[graft.QueryDef.liveFitForced]], or on a corpus the fixture has
+    * no key for (the scale harness's blown dirs) — the live
+    * [[Similarity.fitIvfCentroids]] (nlist 16), memoized per corpus.
+    * Either way the query runs the same serving code. */
+  private[graft] def ivfCentroids(emb: org.apache.spark.sql.DataFrame,
+      d: String): Seq[(Int, Seq[Double])] = {
+    (if (graft.QueryDef.liveFitForced) None
+     else ivfFixture.get(Similarity.ivfCorpusKey(emb,
+       cacheKey = Some(s"$d/embeddings"))))
+      .getOrElse(liveIvfCentroids(emb, d))
+  }
+
+  private[graft] def liveIvfCentroids(emb: org.apache.spark.sql.DataFrame,
+      d: String): Seq[(Int, Seq[Double])] =
+    Similarity.fitIvfCentroids(emb, "vec_id", "embedding",
+      nlist = 16, cacheKey = Some(s"$d/embeddings"))
+
   /** The shared q124/q130 fixture oracle: select the corpus' centroid
     * rows by replaying the exact checksum, assign every vector by the
     * rounded-sqEuclidean argmin (ties to the lowest cell), pick probe
     * cells by rounded cosine DESC (ties to the lowest cell), rank
     * candidates by the standing rounded cosine — every step the
-    * literal SQL twin of [[Similarity.annJoinIvfFixed]]'s
+    * literal SQL twin of [[Similarity.annJoinIvf]]'s
     * expressions. */
   private def ivfFixedOracle(queryFilter: String): String = {
     val fp = graft.QueryDef.fixturePath("q130_centroids.csv")
@@ -261,47 +280,36 @@ object ScaleQueries {
     * the only non-replayable step, so it is committed ONCE as the
     * centroid fixture (the q202/q208 seam) and the query SERVES from
     * the frozen centroids with fully SQL-replayable arithmetic
-    * ([[Similarity.annJoinIvfFixed]] — rounded-sqEuclidean argmin
+    * ([[Similarity.annJoinIvf]] — rounded-sqEuclidean argmin
     * assignment, rounded-cosine probe selection, rounded-cosine
     * ranking). Serving from frozen centroids is the production
     * stored-index shape; SimilaritySpec asserts the live MLlib fit
     * still reproduces the fixture, so a fit drift fails a test
     * instead of silently moving the answer. On corpora OUTSIDE the
-    * fixture (the scale harness's blown dirs) the query falls back to
-    * the live-fit [[Similarity.annJoinIvf]] — the pre-flip rows-only
-    * behavior, which is also what the 10×/100× maps should measure. */
+    * fixture (the scale harness's blown dirs) the same code serves
+    * live-fit centroids ([[ivfCentroids]]) — rows-only there, which
+    * is also what the 10×/100× maps should measure. */
   val q124AnnJoinIvf = QueryDef(
     "q124_knn_join_ivf",
     ivfFixedOracle(QueryFilter)) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    (if (graft.QueryDef.liveFitForced) None
-     else ivfFixture.get(Similarity.ivfCorpusKey(emb,
-       cacheKey = Some(s"$d/embeddings")))) match {
-      case Some(cents) =>
-        Similarity.annJoinIvfFixed(
-            queries = emb.filter(expr(QueryFilter)), corpus = emb,
-            idCol = "vec_id", vecCol = "embedding", k = 5,
-            centroids = cents, nprobe = 4)
-          .orderBy(col("query_id"), col("rnk"))
-      case None =>
-        Similarity.annJoinIvf(
-            queries = emb.filter(expr(QueryFilter)), corpus = emb,
-            idCol = "vec_id", vecCol = "embedding", k = 5,
-            nlist = 16, nprobe = 4, cacheKey = Some(s"$d/embeddings"))
-          .orderBy(col("query_id"), col("rnk"))
-    }
+    Similarity.annJoinIvf(
+        queries = emb.filter(expr(QueryFilter)), corpus = emb,
+        idCol = "vec_id", vecCol = "embedding", k = 5,
+        centroids = ivfCentroids(emb, d), nprobe = 4)
+      .orderBy(col("query_id"), col("rnk"))
   }
 
   /** Batch k-NN join through the STORED IVF index
     * ([[Similarity.buildIvfIndex]] + [[Similarity.annJoinIvfStored]]):
     * the index is materialized cell-partitioned to parquet, then the
-    * query batch runs against it with NO KMeans fit at query time —
-    * probe cells picked in-row vs the broadcast centroid table, the
-    * scan statically pruned to the probed cells. Rows-only (the KMeans
-    * fit is not SQL-expressible); SimilaritySpec pins parity with the
-    * in-memory [[Similarity.annJoinIvf]] and asserts the partition
-    * pruning. The index dir is wiped per run (buildIvfIndex overwrites
-    * but a stale layout from an older nlist would change cells). */
+    * query batch runs against it with NO fit at query time — probe
+    * cells picked in-row from the stored centroid table, the scan
+    * statically pruned to the probed cells. SimilaritySpec pins
+    * parity with the in-memory [[Similarity.annJoinIvf]] and asserts
+    * the partition pruning. The index dir is wiped per run
+    * (buildIvfIndex overwrites but a stale layout from an older nlist
+    * would change cells). */
   /** q130 split into its two phases so the scale bench can time the
     * one-time index BUILD (corpus-linear by design) separately from
     * the per-batch PROBE (nprobe/nlist-pruned) — a probe-side
@@ -313,41 +321,28 @@ object ScaleQueries {
       s"target/tmp/q130_ivf_index_$sf"
     }
     val emb = Tables.embeddings(s, d)
-    // fixture dispatch decided ONCE here, outside the thunks — the
-    // probe phase must stay free of the corpus-checksum aggregation
-    // (its scale certificate is probe cost vs corpus size)
-    val fixed = if (graft.QueryDef.liveFitForced) None
-      else ivfFixture.get(Similarity.ivfCorpusKey(emb,
-        cacheKey = Some(s"$d/embeddings")))
+    // the centroids are picked (the corpus checksum) or fitted inside
+    // build, the one-time index cost; the probe phase reads them from
+    // the stored index (its scale certificate is probe cost vs corpus
+    // size)
     val build = () => {
       graft.sources.Sinks.wipeForRebuild(s, dir)
-      fixed match {
-        case Some(cents) => Similarity.buildIvfIndexFromCentroids(
-          emb, "vec_id", "embedding", dir, cents)
-        case None =>
-          Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir,
-            nlist = 16)
-      }
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir,
+        ivfCentroids(emb, d))
     }
-    val probe = () =>
-      (if (fixed.isDefined)
-        Similarity.annJoinIvfStoredFixed(s, dir,
-          queries = emb.filter(expr(ProbeBatchFilter)),
-          idCol = "vec_id", vecCol = "embedding", k = 5, nprobe = 4)
-      else
-        Similarity.annJoinIvfStored(s, dir,
-          queries = emb.filter(expr(ProbeBatchFilter)),
-          idCol = "vec_id", vecCol = "embedding", k = 5, nprobe = 4))
-        .orderBy(col("query_id"), col("rnk"))
+    val probe = () => Similarity.annJoinIvfStored(s, dir,
+        queries = emb.filter(expr(ProbeBatchFilter)),
+        idCol = "vec_id", vecCol = "embedding", k = 5, nprobe = 4)
+      .orderBy(col("query_id"), col("rnk"))
     (build, probe)
   }
 
   /** HASH-ORACLED since round 17, exactly like [[q124AnnJoinIvf]] (the
     * shared fixture + the shared oracle; the stored layout is built
-    * FROM the frozen centroids via [[Similarity
-    * .buildIvfIndexFromCentroids]] and served by the rounded probe
-    * rule, so build → store → probe replays end-to-end in SQL; blown
-    * corpora fall back to the live-fit path). */
+    * FROM the frozen centroids via [[Similarity.buildIvfIndex]] and
+    * served by the rounded probe rule, so build → store → probe
+    * replays end-to-end in SQL; blown corpora are served from
+    * live-fit centroids). */
   val q130AnnJoinIvfStored = QueryDef(
     "q130_knn_join_ivf_stored",
     ivfFixedOracle(ProbeBatchFilter)) { (s, d) =>
@@ -916,8 +911,10 @@ object ScaleQueries {
     * the index is built from the even-vec_id half, the odd half is
     * APPENDED (nearest-stored-centroid assignment, no refit), and the
     * full query batch runs through the appended index — the nightly
-    * embedding-ingest shape. Rows-only (KMeans fit); SimilaritySpec
-    * pins the assignment rule and stored-path visibility. */
+    * embedding-ingest shape. Rows-only (the build's centroids are a
+    * live [[Similarity.fitIvfCentroids]] over the even half);
+    * SimilaritySpec pins the assignment rule and stored-path
+    * visibility. */
   /** q132 split (the q130Parts pattern): build = initial fit over the
     * even half + incremental APPEND of the odd half; probe = the
     * pruned batch query. The append is the nightly-ingest cost — it
@@ -931,8 +928,10 @@ object ScaleQueries {
     val emb = Tables.embeddings(s, d)
     val build = () => {
       graft.sources.Sinks.wipeForRebuild(s, dir)
-      Similarity.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", dir, nlist = 16)
+      val seedHalf = emb.filter(col("vec_id") % 2 === 0)
+      Similarity.buildIvfIndex(seedHalf, "vec_id", "embedding", dir,
+        Similarity.fitIvfCentroids(seedHalf, "vec_id", "embedding",
+          nlist = 16))
       Similarity.appendToIvfIndex(s, dir, emb.filter(col("vec_id") % 2 === 1),
         "vec_id", "embedding")
       ()

@@ -152,11 +152,15 @@ class PqSpec extends SparkSpec {
   test("stored IVFPQ: codes scan pruned to probed cells; full-probe " +
       "results equal the non-IVF PQ re-rank join") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_index").toString
+    val cb64 = Similarity.fitPq(emb, "embedding", m = 8, ksub = 64,
+      cacheKey = Some(s"$sf0001/embeddings"))
     Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", dir,
-      nlist = 8, m = 8, ksub = 64)
+      Similarity.fitIvfCentroids(emb, "vec_id", "embedding", nlist = 8),
+      cb64, quantRound = -1)
     val queries = emb.filter(expr("vec_id % 100 = 0"))
     val pruned = Similarity.annJoinIvfPqStored(spark, dir, queries,
-      "vec_id", "embedding", k = 5, nprobe = 2, refine = 10)
+      "vec_id", "embedding", k = 5, nprobe = 2, refine = 10,
+      quantRound = -1)
     pruned.collect()
     val scan = pruned.queryExecution.executedPlan.collectLeaves()
       .map(_.toString).mkString("\n")
@@ -174,9 +178,8 @@ class PqSpec extends SparkSpec {
     // probing EVERY cell makes the candidate set identical to plain PQ
     // over the same codebooks (seed-deterministic), so results match
     val full = Similarity.annJoinIvfPqStored(spark, dir, queries,
-      "vec_id", "embedding", k = 5, nprobe = 8, refine = 10)
-    val cb64 = Similarity.fitPq(emb, "embedding", m = 8, ksub = 64,
-      cacheKey = Some(s"$sf0001/embeddings"))
+      "vec_id", "embedding", k = 5, nprobe = 8, refine = 10,
+      quantRound = -1)
     val plain = Similarity.annJoinPqRerank(
       queries, emb, "vec_id", "embedding", k = 5, cb64, refine = 10)
     assert(full.orderBy("query_id", "rnk").collect().map(_.toString).toSeq ===

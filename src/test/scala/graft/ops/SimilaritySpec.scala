@@ -66,24 +66,42 @@ class SimilaritySpec extends SparkSpec {
 
   test("annJoinIvfStored: scan pruned to probed cells, parity with the " +
       "in-memory batch IVF join") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index_batch").toString
     val emb = Tables.embeddings(spark, sf0001)
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nlist = 8)
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val stored = Similarity.annJoinIvfStored(spark, dir, queries,
-      "vec_id", "embedding", k = 5, nprobe = 4)
-    stored.collect()
-    // the probed-cell literal filter must prune index directories
-    val scan = stored.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(scan.contains("PartitionFilters") && scan.contains("cell"),
-      scan.take(500))
-    // same seed/nlist/data -> same KMeans cells -> identical output
-    val inMem = Similarity.annJoinIvf(queries, emb, "vec_id", "embedding",
-      k = 5, nlist = 8, nprobe = 4)
-    assert(stored.orderBy("query_id", "rnk").collect().map(_.toString).toSeq ===
-      inMem.orderBy("query_id", "rnk").collect().map(_.toString).toSeq)
-    assert(stored.count() > 0)
+    // live-fit centroids and the committed q130 fixture's run the
+    // same serving code
+    val live = Similarity.fitIvfCentroids(emb, "vec_id", "embedding",
+      nlist = 8)
+    val fixture = graft.queries.ScaleQueries
+      .ivfFixture(Similarity.ivfCorpusKey(emb))
+    Seq(live, fixture).foreach { cents =>
+      val dir = java.nio.file.Files.createTempDirectory("ivf_index_batch")
+        .toString
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, cents)
+      val stored = Similarity.annJoinIvfStored(spark, dir, queries,
+        "vec_id", "embedding", k = 5, nprobe = 4)
+      stored.collect()
+      // the probed-cell literal filter must prune index directories
+      val scan = stored.queryExecution.executedPlan.collectLeaves()
+        .map(_.toString).mkString("\n")
+      assert(scan.contains("PartitionFilters") && scan.contains("cell"),
+        scan.take(500))
+      // same centroids -> same cells -> identical output
+      val inMem = Similarity.annJoinIvf(queries, emb, "vec_id", "embedding",
+        k = 5, centroids = cents, nprobe = 4)
+      assert(stored.orderBy("query_id", "rnk").collect().map(_.toString).toSeq ===
+        inMem.orderBy("query_id", "rnk").collect().map(_.toString).toSeq)
+      assert(stored.count() > 0)
+    }
+  }
+
+  test("fitIvfCentroids cacheKey memoizes: the second call returns the " +
+      "same object") {
+    val emb = Tables.embeddings(spark, sf0001)
+    def fit() = Similarity.fitIvfCentroids(emb, "vec_id", "embedding",
+      nlist = 8, cacheKey = Some(s"$sf0001/embeddings"))
+    val first = fit()
+    assert(fit() eq first)
   }
 
   test("q130 centroid fixture: the live MLlib fit still reproduces the " +
@@ -106,35 +124,14 @@ class SimilaritySpec extends SparkSpec {
     assert(maxDelta < 1e-6, s"live fit drifted from fixture: $maxDelta")
   }
 
-  test("annJoinIvfFixed == annJoinIvfStoredFixed (fixture-centroid " +
-      "serving parity), and the stored scan is pruned to probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_fixed").toString
-    val emb = Tables.embeddings(spark, sf0001)
-    val cents = graft.queries.ScaleQueries
-      .ivfFixture(Similarity.ivfCorpusKey(emb))
-    Similarity.buildIvfIndexFromCentroids(emb, "vec_id", "embedding",
-      dir, cents)
-    val queries = emb.filter($"vec_id" % 100 === 0)
-    val stored = Similarity.annJoinIvfStoredFixed(spark, dir, queries,
-      "vec_id", "embedding", k = 5, nprobe = 4)
-    val inMem = Similarity.annJoinIvfFixed(queries, emb,
-      "vec_id", "embedding", k = 5, centroids = cents, nprobe = 4)
-    assert(stored.orderBy("query_id", "rnk").collect().map(_.toString).toSeq
-      === inMem.orderBy("query_id", "rnk").collect().map(_.toString).toSeq)
-    assert(stored.count() > 0)
-    val scan = stored.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(scan.contains("PartitionFilters") && scan.contains("cell"),
-      scan.take(500))
-  }
-
   test("appendToIvfIndex: appended vectors land in their nearest stored " +
       "cell and are served by the stored-index queries") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_append").toString
     val emb = Tables.embeddings(spark, sf0001)
     val seedHalf = emb.filter($"vec_id" % 2 === 0)
     val newHalf = emb.filter($"vec_id" % 2 === 1)
-    Similarity.buildIvfIndex(seedHalf, "vec_id", "embedding", dir, nlist = 8)
+    Similarity.buildIvfIndex(seedHalf, "vec_id", "embedding", dir,
+      Similarity.fitIvfCentroids(seedHalf, "vec_id", "embedding", nlist = 8))
     Similarity.appendToIvfIndex(spark, dir, newHalf, "vec_id", "embedding")
     val stored = spark.read.parquet(s"$dir/vectors")
     assert(stored.count() === emb.count())
@@ -172,8 +169,9 @@ class SimilaritySpec extends SparkSpec {
       "a concurrent append") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_lock").toString
     val emb = Tables.embeddings(spark, sf0001)
-    Similarity.buildIvfIndex(emb.filter($"vec_id" < 100),
-      "vec_id", "embedding", dir, nlist = 4)
+    val head = emb.filter($"vec_id" < 100)
+    Similarity.buildIvfIndex(head, "vec_id", "embedding", dir,
+      Similarity.fitIvfCentroids(head, "vec_id", "embedding", nlist = 4))
     graft.sources.Sinks.withDirLock(spark, dir, "appending") {
       val e = intercept[IllegalStateException] {
         Similarity.appendToIvfIndex(spark, dir,
@@ -282,7 +280,8 @@ class SimilaritySpec extends SparkSpec {
         "vec_id", "embedding", k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivf = Similarity.annJoinIvf(queries, emb, "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 4)
+        k = 5, centroids = Similarity.fitIvfCentroids(emb, "vec_id",
+          "embedding", nlist = 8), nprobe = 4)
       .collect()
     assert(ivf.nonEmpty)
     ivf.groupBy(_.getLong(0)).foreach { case (_, rs) =>
@@ -294,6 +293,28 @@ class SimilaritySpec extends SparkSpec {
     val got = ivf.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (got intersect exact).size.toDouble / exact.size
     assert(recall >= 0.5, s"recall $recall")
+  }
+
+  test("annJoinIvf, ivfCosineTopK, assignCells: every generated method " +
+      "stays under HotSpot's 8000-byte JIT limit at nlist 16") {
+    // the assignment fold inlines every centroid; a filter on `cell`
+    // pushed below it inlines it twice, and a method past the limit
+    // never leaves the interpreter (Similarity.assignCells)
+    val emb = Tables.embeddings(spark, sf0001)
+    val cents = Similarity.fitIvfCentroids(emb, "vec_id", "embedding")
+    Seq(
+      Similarity.assignCells(emb, "vec_id", "embedding", cents),
+      Similarity.annJoinIvf(emb.filter($"vec_id" % 100 === 0), emb,
+        "vec_id", "embedding", k = 5, centroids = cents),
+      Similarity.ivfCosineTopK(emb, "vec_id", "embedding", 0L, 5)
+    ).foreach { df =>
+      df.collect()
+      val sizes = org.apache.spark.sql.execution.debug
+        .codegenStringSeq(df.queryExecution.executedPlan)
+        .map(_._3.maxMethodCodeSize)
+      assert(sizes.nonEmpty)
+      assert(sizes.max <= 8000, sizes)
+    }
   }
 
   test("semanticDedupClusters: planted scaled copies share the original's " +
@@ -504,10 +525,10 @@ class SimilaritySpec extends SparkSpec {
     val key = Similarity.ivfCorpusKey(emb)
     val cents = graft.queries.ScaleQueries.ivfFixture(key)
     val cb = graft.queries.CorpusQueries.pqFixture(key)
-    Similarity.buildIvfPqIndexFromFixtures(emb, "vec_id", "embedding",
+    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
       dir, cents, cb)
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val stored = Similarity.annJoinIvfPqStoredFixed(spark, dir, queries,
+    val stored = Similarity.annJoinIvfPqStored(spark, dir, queries,
       "vec_id", "embedding", k = 5, nprobe = 4, refine = 10)
     val got = stored.collect()
     // every query serves exactly k candidates (probed cells hold
