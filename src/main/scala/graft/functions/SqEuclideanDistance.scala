@@ -9,9 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Native Catalyst expression for the squared euclidean distance of
   * two `array<double>` columns — the IVF cell-assignment hot loop
   * ([[graft.ops.Similarity.assignCells]] runs it per vector × nlist
-  * centroids at index build and query time,
-  * [[graft.ops.Similarity.appendToIvfIndex]] at index-ingest
-  * time).
+  * centroids at index build, append and query time).
   *
   * Rationale (scale/perf, the [[CosineSimilarity]] template): the HOF
   * formulation `aggregate(zip_with(v, c, (a,b) => (a-b)*(a-b)), 0.0,

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** Corpus-curation operators for training-data pipelines — the steps
   * between "raw crawl" and "training shards" that SURVEY.md §8.3's
@@ -138,6 +139,11 @@ object Curation {
     * functionally dependent on doc_id, so the two-level aggregation
     * (doc×word counts, then per-doc) stays a single shuffle chain with
     * map-side partials and needs no join back.
+    *
+    * Contract: one output row per input row with non-null text, each a
+    * function of that row alone. `doc_id` is carried, never used as a
+    * key, so rows sharing a `doc_id` each keep their own row and
+    * values; making `doc_id` unique is the caller's job.
     */
   def repetitionSignals(docs: DataFrame): DataFrame =
     docs.select(col("doc_id") +: repetitionSignalCols(col("text")): _*)
@@ -451,23 +457,10 @@ object Curation {
     * is one batch-local aggregation (map-side combine; the shuffle
     * moves the batch's distinct tokens, not occurrences) written as
     * (w, cnt) rows; single writer per sidecar via the dir lock, like
-    * every appender.
-    *
-    * Replay safety (round 16, the additive-sidecar family's
-    * representative flip): UNTAGGED appends keep the historical
-    * at-least-once caveat — a replayed batch double-counts. Passing
-    * `batchId` (unique per logical batch) retires it: rows carry a
-    * `batch_id` column and every read ([[mergedTokenCounts]],
-    * [[compactTokenCountSidecar]]) collapses duplicate
-    * (batch_id, w) rows first — replicas of a replayed append are
-    * bit-identical deterministic recomputes, so keeping one is exact
-    * and the contract becomes EXACTLY-ONCE by construction
-    * (CurationSpec's deliberate double-append proves counts no
-    * longer inflate). Tagged-ness is fixed at the first append;
-    * compacted rows carry the `__compacted__` sentinel, so compact
-    * only after in-flight batches are resolved (the
-    * [[graft.ops.CurationPipeline.compactState]] discipline where a
-    * manifest exists).
+    * every appender. `batchId` makes it exactly-once
+    * ([[graft.sources.TaggedSidecar]]; replay key w, merge: sum of
+    * cnt); CurationSpec's deliberate double-append proves counts no
+    * longer inflate.
     *
     * `tokenizer` (round 18 — the token statistics reachable from the
     * multilingual path): the token stream being counted. Legacy
@@ -484,55 +477,30 @@ object Curation {
                              batchId: Option[String] = None,
                              tokenizer: org.apache.spark.sql.Column =>
                                org.apache.spark.sql.Column =
-                               TextAnalysis.tokens(_)): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      batch.sparkSession, sidecarDir, batchId.isDefined,
-      "writeTokenCountSidecar")
-    graft.sources.Sinks.withDirLock(
-      batch.sparkSession, sidecarDir, "writeTokenCountSidecar") {
-      val counts = batch
-        .select(explode(tokenizer(col(textCol))).as("w"))
+                               TextAnalysis.tokens(_)): Unit =
+    TaggedSidecar.append(batch.sparkSession, sidecarDir, batchId,
+        "writeTokenCountSidecar") {
+      batch.select(explode(tokenizer(col(textCol))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      batchId.foldLeft(counts)(
-          (df, id) => df.withColumn("batch_id", lit(id)))
-        .write.mode("append").parquet(sidecarDir)
     }
-  }
 
-  /** Duplicate-replay collapse for tagged count sidecars: one
-    * (batch_id, w) row survives per key; untagged dirs pass through
-    * (the pre-round-16 at-least-once contract). */
-  private def dedupedCounts(raw: DataFrame): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id", "w")
-    else raw
+  private def sumCounts(counts: DataFrame): DataFrame =
+    counts.groupBy(col("w")).agg(sum(col("cnt")).as("cnt"))
 
   /** Merged corpus token frequencies from a sidecar: one sum per
-    * token over the appended partials (duplicate tagged appends
-    * collapsed first). Output (w, cnt) — exactly the `tf` table
-    * [[tokenRarity]] computes from raw text, without re-reading the
-    * corpus. */
+    * token over the appended partials (tagged replays collapsed
+    * first). Output (w, cnt) — exactly the `tf` table [[tokenRarity]]
+    * computes from raw text, without re-reading the corpus. */
   def mergedTokenCounts(spark: SparkSession, sidecarDir: String): DataFrame =
-    dedupedCounts(spark.read.parquet(sidecarDir))
-      .groupBy(col("w")).agg(sum(col("cnt")).as("cnt"))
+    sumCounts(TaggedSidecar.collapse(spark.read.parquet(sidecarDir), "w"))
 
-  /** Many small appends → one summed row per token, via the shared
-    * backup-swap compaction ([[graft.sources.Sinks.compactParquetDir]]
-    * — its lock and crash-restore; the merge rides as the transform).
-    * Counts are unchanged by construction (additive; duplicate tagged
-    * appends collapse before the sum). */
+  /** Many small appends → one summed row per token
+    * ([[graft.sources.TaggedSidecar.compact]]). Counts are unchanged
+    * by construction (additive). */
   def compactTokenCountSidecar(spark: SparkSession,
                                sidecarDir: String): Unit =
-    graft.sources.Sinks.compactParquetDir(spark, sidecarDir,
-      sortCol = Some("w"),
-      transform = Some { raw =>
-        val summed = dedupedCounts(raw)
-          .groupBy(col("w")).agg(sum(col("cnt")).as("cnt"))
-        if (raw.schema.fieldNames.contains("batch_id"))
-          summed.withColumn("batch_id",
-            lit(graft.ops.LinearProbe.CompactedBatchId))
-        else summed
-      })
+    TaggedSidecar.compact(spark, sidecarDir, Seq("w"),
+      sortCol = Some("w"))(sumCounts)
 
   /** Score documents against a token-count SIDECAR instead of
     * re-aggregating the corpus — [[tokenRarity]] with the frequency

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** The six-stage pre-training curation pipeline (q218) in its two
   * production forms:
@@ -267,7 +268,7 @@ object CurationPipeline {
     // be re-ingested — the retraction removed the commit row but its
     // `__del__:` marker and negated Gram row remain, so a new ingest
     // under the old id would pass the committed check while
-    // dedupedMoments keeps an arbitrary one of the old/new same-tag
+    // the replay collapse keeps an arbitrary one of the old/new same-tag
     // rows and the lingering negation still subtracts: net Gram
     // contribution ~zero, silently. Ids are permanently retired;
     // replays of a crashed RETRACTION reuse the id through
@@ -477,8 +478,8 @@ object CurationPipeline {
     // sidecar and is preserved unmerged through compaction, so the
     // summed read stays total − shard)
     val retracted = retractedShards(manifest)
-    val known = manifest ++ retracted + LinearProbe.CompactedBatchId
-    val inFlight = LinearProbe.gramBatchIds(spark, dirs.gram)
+    val known = manifest ++ retracted + TaggedSidecar.CompactedBatchId
+    val inFlight = TaggedSidecar.batchIds(spark, dirs.gram)
       .filterNot(known.contains)
     require(inFlight.isEmpty,
       s"$op: uncommitted shard(s) " +

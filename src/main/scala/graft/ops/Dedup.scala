@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** Deduplication operators for training-data pipelines, in increasing
   * fuzziness:
@@ -409,19 +410,14 @@ object Dedup {
     * sidecar. Output keeps the internal `__fp` column (null for
     * null-text rows).
     *
-    * `excludeBatchIds` (round 16 — the crash-replay contract; round
-    * 17 — a SET, the retraction-tombstone contract): when the sidecar
-    * is batch-tagged, membership IGNORES rows whose `batch_id` is in
-    * the given set. Two callers rely on it: a replay of a crashed
-    * ingest excludes ITS OWN id, so a crashed attempt's partial
-    * appends are invisible and the replay reproduces the first
+    * `excludeBatchIds`: tagged rows of these ids are invisible to
+    * membership ([[graft.sources.TaggedSidecar.exclude]]). A replay of
+    * a crashed ingest hides its OWN id, so it reproduces the first
     * attempt's keep decisions instead of dropping the whole batch
-    * against its own digests; and the composed pipeline excludes the
+    * against its own digests; the composed pipeline also hides the
     * RETRACTED shard tags ([[graft.ops.CurationPipeline
-    * .retractShard]]'s O(1) tombstones), whose physical rows are
-    * dropped only at the next cadenced compaction. The set is
-    * bounded by retractions-ever + 1, and an already-dropped tag's
-    * exclusion is a no-op, so the filter never needs trimming. */
+    * .retractShard]]'s O(1) tombstones) until the next compaction
+    * drops their rows. */
   private[graft] def sidecarSurvivors(batch: DataFrame, textCol: String,
                                       idCol: String, sidecarDir: String,
                                       bloomPrefilter: Boolean = false,
@@ -445,16 +441,9 @@ object Dedup {
     val fpRows = withFp.filter(col("__fp").isNotNull)
     val bloom =
       if (bloomPrefilter) loadSidecarBloom(spark, sidecarDir) else None
-    def sidecarFps: DataFrame = {
-      val raw = graft.sources.Sinks.readParquet(spark, sidecarDir)
-      val visible =
-        if (excludeBatchIds.nonEmpty &&
-            raw.schema.fieldNames.contains("batch_id"))
-          raw.filter(!coalesce(
-            col("batch_id").isin(excludeBatchIds.toSeq: _*), lit(false)))
-        else raw
-      visible.select(col("fp"))
-    }
+    def sidecarFps: DataFrame = TaggedSidecar.exclude(
+        graft.sources.Sinks.readParquet(spark, sidecarDir), excludeBatchIds)
+      .select(col("fp"))
     val unseen =
       if (!fs.exists(path)) fpRows
       else bloom match {
@@ -535,25 +524,20 @@ object Dedup {
 
   /** The digest sidecar's append half, shared by [[dedupAgainstSidecar]]
     * and the crash-ordered callers that sink survivors FIRST (the
-    * [[graft.ops.CurationPipeline]] ingest protocol). When `batchId` is
-    * set the rows carry a `batch_id` column: a replayed append writes
-    * duplicate (fp, batch_id) rows — a semantic no-op for set
-    * membership, collapsed by [[compactSidecar]] — and the replay's
-    * OWN read excludes them ([[sidecarSurvivors]]'s `excludeBatchId`),
-    * so crash-at-any-point plus whole-batch retry converges on the
-    * no-crash state. Tagged-ness is fixed at the first append
-    * ([[graft.sources.Sinks.assertBatchTagConsistent]]). */
+    * [[graft.ops.CurationPipeline]] ingest protocol). `batchId` tags
+    * the rows ([[graft.sources.TaggedSidecar]]; replay key fp, set
+    * semantics, no merge): a replayed append's duplicate rows are a
+    * no-op for membership and the replay's own read excludes them
+    * ([[sidecarSurvivors]]), so crash-at-any-point plus whole-batch
+    * retry converges on the no-crash state. */
   private[graft] def appendDigestFps(spark: org.apache.spark.sql.SparkSession,
                                      newFps: DataFrame, sidecarDir: String,
                                      bloomPrefilter: Boolean,
                                      batchId: Option[String],
                                      op: String): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      spark, sidecarDir, batchId.isDefined, op)
+    TaggedSidecar.assertConsistent(spark, sidecarDir, batchId.isDefined, op)
     graft.sources.Sinks.withDirLock(spark, sidecarDir, op) {
-      val tagged = batchId.foldLeft(newFps)(
-        (df, id) => df.withColumn("batch_id", lit(id)))
-      tagged.sortWithinPartitions(col("fp"))
+      TaggedSidecar.tag(newFps, batchId).sortWithinPartitions(col("fp"))
         .write.mode("append").parquet(sidecarDir)
       if (bloomPrefilter) loadSidecarBloom(spark, sidecarDir).foreach { loaded =>
         // zero = the loaded bloom: partitions OR their items into copies
@@ -627,36 +611,21 @@ object Dedup {
     * Rewrites to `coalesceTo` fp-sorted files (row-group min/max stats
     * prune later merge reads) via [[graft.sources.Sinks
     * .compactParquetDir]]'s backup-swap; run between ingests under the
-    * same single-writer contract as [[dedupAgainstSidecar]]. */
-  /** `dropBatchIds` (round 17 — the retraction-tombstone drop): tags
-    * whose rows are physically removed during the rewrite.
-    * [[graft.ops.CurationPipeline.retractShard]] tombstones a shard
-    * in O(1) (reads exclude the tag) and defers the physical drop to
-    * HERE — the cadenced compaction that rewrites the directory
-    * anyway — so a takedown never pays a corpus-proportional rewrite
-    * of its own. */
+    * same single-writer contract as [[dedupAgainstSidecar]].
+    *
+    * Unlike the additive sidecars' compaction, tags SURVIVE (per-batch
+    * identity is what the retraction tombstones filter on): the
+    * collapse is a distinct over all columns, never a re-tag.
+    * `dropBatchIds` are tags whose rows are physically removed here:
+    * [[graft.ops.CurationPipeline.retractShard]] tombstones a shard in
+    * O(1) and defers the drop to this rewrite, which runs anyway. */
   def compactSidecar(spark: org.apache.spark.sql.SparkSession,
                      sidecarDir: String, coalesceTo: Int = 1,
                      dropBatchIds: Set[String] = Set.empty): Unit =
     graft.sources.Sinks.compactParquetDir(spark, sidecarDir,
       coalesceTo = coalesceTo, sortCol = Some("fp"),
-      // distinct over ALL columns: appends are new-fps-only so the
-      // normal flow has nothing to collapse, but a crash-replayed
-      // tagged append duplicates its (fp, batch_id) rows — and the
-      // tag must SURVIVE compaction (per-batch identity is what
-      // the retraction tombstones filter on), so the collapse is
-      // distinct, never a drop of batch_id
-      transform = Some(raw => dropTagged(raw, dropBatchIds).distinct()))
-
-  /** Physical drop of tombstoned tags during a compaction rewrite —
-    * the shared half of [[compactSidecar]] /
-    * [[compactChunkKeySidecar]]. Untagged sidecars pass through. */
-  private def dropTagged(raw: DataFrame, dropBatchIds: Set[String])
-      : DataFrame =
-    if (dropBatchIds.nonEmpty && raw.schema.fieldNames.contains("batch_id"))
-      raw.filter(!coalesce(
-        col("batch_id").isin(dropBatchIds.toSeq: _*), lit(false)))
-    else raw
+      transform = Some(raw =>
+        TaggedSidecar.exclude(raw, dropBatchIds).distinct()))
 
   /** Guarded id→long cast for the minhash-sidecar family, whose
     * stored layout keys documents by BIGINT id: a silently nulled cast
@@ -1107,16 +1076,9 @@ object Dedup {
     val chunked = TextAnalysis.chunk(batch, textCol, chunkTokens, 0,
         idCol +: carry: _*)
       .withColumn("__k", md5(col("chunk_text")))
-    def sidecarKeys: DataFrame = {
-      val raw = graft.sources.Sinks.readParquet(spark, sidecarDir)
-      val visible =
-        if (excludeBatchIds.nonEmpty &&
-            raw.schema.fieldNames.contains("batch_id"))
-          raw.filter(!coalesce(
-            col("batch_id").isin(excludeBatchIds.toSeq: _*), lit(false)))
-        else raw
-      visible.select(col("ck"))
-    }
+    def sidecarKeys: DataFrame = TaggedSidecar.exclude(
+        graft.sources.Sinks.readParquet(spark, sidecarDir), excludeBatchIds)
+      .select(col("ck"))
     val withSeen =
       if (!fs.exists(path)) chunked.withColumn("__seen", lit(false))
       else chunked
@@ -1148,12 +1110,9 @@ object Dedup {
                                      newKeys: DataFrame, sidecarDir: String,
                                      batchId: Option[String],
                                      op: String): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      spark, sidecarDir, batchId.isDefined, op)
+    TaggedSidecar.assertConsistent(spark, sidecarDir, batchId.isDefined, op)
     graft.sources.Sinks.withDirLock(spark, sidecarDir, op) {
-      batchId.foldLeft(newKeys)(
-          (df, id) => df.withColumn("batch_id", lit(id)))
-        .sortWithinPartitions(col("ck"))
+      TaggedSidecar.tag(newKeys, batchId).sortWithinPartitions(col("ck"))
         .write.mode("append").parquet(sidecarDir)
     }
   }
@@ -1169,7 +1128,8 @@ object Dedup {
                              dropBatchIds: Set[String] = Set.empty): Unit =
     graft.sources.Sinks.compactParquetDir(spark, sidecarDir,
       sortCol = Some("ck"),
-      transform = Some(raw => dropTagged(raw, dropBatchIds).distinct()))
+      transform = Some(raw =>
+        TaggedSidecar.exclude(raw, dropBatchIds).distinct()))
 
   /** n-gram Jaccard pairs via a capped inverted index: explode
     * shingles, drop shingles appearing in more than `dfCap` docs (the

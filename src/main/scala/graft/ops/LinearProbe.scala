@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** Trained linear quality probe — the step that turns the composed
   * quality-signal feature table (q209) into an actual quality FILTER:
@@ -147,16 +148,12 @@ object LinearProbe {
       row: org.apache.spark.sql.Row,
       schema: org.apache.spark.sql.types.StructType,
       sidecarDir: String, batchId: Option[String]): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      spark, sidecarDir, batchId.isDefined, "writeGramSidecar")
+    TaggedSidecar.assertConsistent(spark, sidecarDir, batchId.isDefined,
+      "writeGramSidecar")
     graft.sources.Sinks.withDirLock(
       spark, sidecarDir, "writeGramSidecar") {
-      // the tag is a non-null string column, as `lit(id)` makes it
-      val (taggedRow, taggedSchema) = batchId.fold((row, schema)) { id =>
-        (org.apache.spark.sql.Row.fromSeq(row.toSeq :+ id),
-          schema.add("batch_id", org.apache.spark.sql.types.StringType,
-            nullable = false))
-      }
+      val (taggedRow, taggedSchema) =
+        TaggedSidecar.tagRow(row, schema, batchId)
       graft.sources.Sinks.appendRowDriverSide(
         spark, sidecarDir, taggedSchema, taggedRow)
     }
@@ -209,31 +206,16 @@ object LinearProbe {
     * upstream feature pipeline; this sidecar accumulates the trainer
     * state over its output. Single writer via the dir lock. One row
     * (~d² decimals) per append — sidecar IO is O(batches), never
-    * data-sized.
-    *
-    * `batchId` (round 16) retires the at-least-once caveat above for
-    * callers that can name their batches: the moment row carries a
-    * `batch_id` column, and every summed read ([[fitFromSidecar]],
-    * [[compactGramSidecar]]) first collapses duplicate batch ids to
-    * one row — a crash-replayed append of the same batch (identical
-    * moments, deterministic recompute) becomes a detectable no-op, so
-    * the contract is EXACTLY-ONCE by construction. Ids must be unique
-    * per logical batch and never reused for different rows; a tagged
-    * sidecar is tagged from its first append
-    * ([[graft.sources.Sinks.assertBatchTagConsistent]]). */
+    * data-sized. `batchId` makes it exactly-once
+    * ([[graft.sources.TaggedSidecar]]; replay key: the batch id alone,
+    * one row per batch; merge: sum of every moment). */
   def writeGramSidecar(scaledBatch: DataFrame, d: Int,
                        sidecarDir: String,
-                       batchId: Option[String] = None): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      scaledBatch.sparkSession, sidecarDir, batchId.isDefined,
-      "writeGramSidecar")
-    graft.sources.Sinks.withDirLock(
-      scaledBatch.sparkSession, sidecarDir, "writeGramSidecar") {
-      batchId.foldLeft(gramAggDf(scaledBatch, d))(
-          (df, id) => df.withColumn("batch_id", lit(id)))
-        .write.mode("append").parquet(sidecarDir)
+                       batchId: Option[String] = None): Unit =
+    TaggedSidecar.append(scaledBatch.sparkSession, sidecarDir, batchId,
+        "writeGramSidecar") {
+      gramAggDf(scaledBatch, d)
     }
-  }
 
   /** Exact unlearning append — the DELETION twin of
     * [[writeGramSidecar]] (the takedown / right-to-erasure lifecycle
@@ -253,23 +235,17 @@ object LinearProbe {
     * and deletes nothing anyway). Single writer via the dir lock; one
     * ~d²-decimal row per deletion, IO never data-sized.
     *
-    * Retry safety (the ADVICE-r15 item — deletions are LIKELIER to be
-    * retried than appends; takedown tooling re-invokes on any
-    * ambiguous failure): untagged deletions are AT-MOST-ONCE by
-    * contract — a caller that re-invokes after a failure between the
-    * parquet write's partial commit and its acknowledgement appends
-    * the negation twice and silently over-forgets. Passing `batchId`
-    * (a unique id per LOGICAL deletion, conventionally
-    * `"__del__:<what>"` and distinct from every append id) retires
-    * the caveat: duplicate deletion rows collapse at read exactly
-    * like duplicate appends, so retrying the same deletion is a
-    * no-op and the lifecycle is exactly-once by construction. */
+    * `batchId` makes a deletion exactly-once like an append
+    * ([[graft.sources.TaggedSidecar]]): a unique id per LOGICAL
+    * deletion, `"__del__:<what>"` by convention and distinct from
+    * every append id. Deletions are likelier to be retried than
+    * appends (takedown tooling re-invokes on any ambiguous failure),
+    * and an untagged retry over-forgets. */
   def writeGramDeletion(scaledBatch: DataFrame, d: Int,
                         sidecarDir: String,
                         batchId: Option[String] = None): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      scaledBatch.sparkSession, sidecarDir, batchId.isDefined,
-      "writeGramDeletion")
+    TaggedSidecar.assertConsistent(scaledBatch.sparkSession, sidecarDir,
+      batchId.isDefined, "writeGramDeletion")
     graft.sources.Sinks.withDirLock(
       scaledBatch.sparkSession, sidecarDir, "writeGramDeletion") {
       val agg = gramAggDf(scaledBatch, d)
@@ -277,9 +253,7 @@ object LinearProbe {
         case "n" => (-col("n")).cast("long").as("n")
         case c => (-col(c)).cast("decimal(38,0)").as(c)
       }
-      val negDf0 = agg.select(neg.toSeq: _*)
-      val negDf = batchId.foldLeft(negDf0)(
-        (df, id) => df.withColumn("batch_id", lit(id)))
+      val negDf = TaggedSidecar.tag(agg.select(neg.toSeq: _*), batchId)
       // ONE row by construction (a global aggregate) — collect it
       // once, gate on n, and write the literal row back: one job,
       // not an isEmpty probe plus a recompute
@@ -291,111 +265,36 @@ object LinearProbe {
     }
   }
 
-  /** Sentinel batch id of a compacted moment row. There is at most
-    * one such row at a time (compaction rewrites the whole dir), so
-    * the duplicate-collapse at read never merges two generations. */
-  val CompactedBatchId = "__compacted__"
-
-  /** Duplicate-append collapse for TAGGED sidecars: one row per
-    * batch_id (replicas of a replayed append are bit-identical —
-    * deterministic decimal recompute — so keeping any one is exact).
-    * Untagged sidecars pass through unchanged (the pre-round-16
-    * at-least-once contract). */
-  private def dedupedMoments(raw: DataFrame): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id")
-    else raw
-
-  /** Batch ids currently present in a TAGGED Gram sidecar (empty for
-    * untagged/missing dirs) — the in-flight-shard probe
-    * [[graft.ops.CurationPipeline.compactState]] guards compaction
-    * with: compacting an UNCOMMITTED batch's row would merge away the
-    * per-batch identity its crash-replay depends on. Bounded driver
-    * collect: one short string per append ever made. */
-  def gramBatchIds(spark: org.apache.spark.sql.SparkSession,
-                   sidecarDir: String): Seq[String] = {
-    // driver-side read (optimization round 18): the sidecar holds one
-    // short row per append ever made, and this probe runs before every
-    // compaction/finalize — a Spark job (scan + distinct + collect)
-    // paid whole-job overhead for KBs of metadata. An untagged sidecar
-    // (no batch_id in the schema, fixed at first append) stays Nil
-    // exactly as before.
-    val p = new org.apache.hadoop.fs.Path(sidecarDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Nil
-    val out = scala.collection.mutable.HashSet[String]()
-    // _temporary/dot-prefixed components skipped at EVERY level, and
-    // taggedness decided from the FIRST data file with every later
-    // file REQUIRED to agree (both ADVICE r18): the old mid-scan
-    // `return Nil` on any untagged file silently disabled the
-    // in-flight/uncommitted-shard guard on exactly the mixed-schema
-    // dir the tag guard exists to catch.
-    val files = graft.sources.Sinks.listDataFiles(fs, p)
-    var tagged: Option[Boolean] = None
-    for (f <- files) {
-      val (schema, rows) = graft.sources.Sinks.readParquetRows(spark, f.getPath)
-      val hasTag = schema.containsField("batch_id")
-      tagged match {
-        case None => tagged = Some(hasTag)
-        case Some(t) => require(t == hasTag,
-          s"LinearProbe.gramBatchIds: $sidecarDir mixes tagged and " +
-            s"untagged parquet files (${f.getPath} is " +
-            s"${if (hasTag) "tagged" else "untagged"}) — a sidecar " +
-            "carries batch_id from its first append or never")
-      }
-      if (hasTag) out ++= rows.map(_.getString("batch_id", 0))
-    }
-    out.toSeq
-  }
-
   /** Sentinel prefix of a DELETION append's batch id (the
     * [[writeGramDeletion]] convention, shared with
     * [[graft.ops.CurationPipeline]]'s manifest markers). */
   val DeletionBatchPrefix = "__del__:"
 
-  /** Many appended moment rows → one summed row via the shared
-    * backup-swap compaction; summation makes compaction idempotent
-    * over its own output. Tagged sidecars collapse duplicate batch
-    * ids first and the output row carries [[CompactedBatchId]], so
-    * replayed appends stay harmless across compactions — PROVIDED no
-    * uncommitted batch is merged away (callers that can still replay
-    * a batch must gate on [[gramBatchIds]]; the pipeline's
-    * [[graft.ops.CurationPipeline.compactState]] does). Untagged
-    * sidecars keep the pre-round-16 contract: idempotent over
-    * compaction's own output, NOT over a replayed append.
+  /** Many appended moment rows → one summed row
+    * ([[graft.sources.TaggedSidecar.compact]]); summation makes
+    * compaction idempotent over its own output. Callers that can
+    * still replay a batch must not compact it away (the pipeline's
+    * [[graft.ops.CurationPipeline.compactState]] guards on
+    * [[graft.sources.TaggedSidecar.batchIds]]).
     *
-    * `__del__:`-tagged DELETION rows are preserved UNMERGED (ADVICE
-    * r16): a retraction's advertised idempotency is "run it again
-    * after a crash", and deletions are exactly the appends retries
-    * are LIKELIEST to follow a cadenced compaction (takedown tooling
-    * re-invokes on any ambiguous failure). Merging a negation into
-    * the [[CompactedBatchId]] sentinel would destroy the batch-id
-    * evidence a retried [[writeGramDeletion]] collapses against —
-    * silent double-subtraction. Kept rows are bounded at ONE ~d²-
-    * decimal row per deletion ever made; the summed READ is unchanged
-    * (compacted row = Σ non-deletion rows, deletions ride beside it,
-    * total identical by additivity). */
+    * `__del__:`-tagged DELETION rows are carried through UNMERGED
+    * (ADVICE r16): deletions are the appends retries are likeliest to
+    * follow a cadenced compaction, and merging a negation into the
+    * compacted sentinel would destroy the batch-id evidence a retried
+    * [[writeGramDeletion]] collapses against — silent
+    * double-subtraction. Kept rows are bounded at ONE ~d²-decimal row
+    * per deletion ever made; the summed READ is unchanged (compacted
+    * row = Σ non-deletion rows, deletions ride beside it, total
+    * identical by additivity). */
   def compactGramSidecar(spark: org.apache.spark.sql.SparkSession,
                          sidecarDir: String, d: Int): Unit = {
     val sums = (for (i <- 0 until d; j <- i until d)
       yield sum(col(s"g_${i}_$j")).as(s"g_${i}_$j")) ++
       (0 until d).map(i => sum(col(s"b_$i")).as(s"b_$i"))
-    graft.sources.Sinks.compactParquetDir(spark, sidecarDir,
-      sortCol = None,
-      transform = Some { raw =>
-        if (raw.schema.fieldNames.contains("batch_id")) {
-          val deduped = dedupedMoments(raw)
-          val isDel = col("batch_id").startsWith(DeletionBatchPrefix)
-          val summed = deduped.filter(!isDel)
-            .agg(sum(col("n")).as("n"), sums: _*)
-            .withColumn("batch_id", lit(CompactedBatchId))
-          // column order must match for the union; deletions keep
-          // their own batch ids
-          summed.unionByName(
-            deduped.filter(isDel).select(summed.columns.map(col).toSeq: _*))
-        } else raw.agg(sum(col("n")).as("n"), sums: _*)
-      })
+    TaggedSidecar.compact(spark, sidecarDir, Nil,
+      carryPrefix = Some(DeletionBatchPrefix)) {
+      _.agg(sum(col("n")).as("n"), sums: _*)
+    }
   }
 
   /** Fit FROM the sidecar — the corpus is never re-read: the summed
@@ -450,10 +349,9 @@ object LinearProbe {
     // `_temporary/...` whose leaves look like ordinary parts)
     for (f <- graft.sources.Sinks.listDataFiles(fs, p);
          grp <- graft.sources.Sinks.readParquetRows(spark, f.getPath)._2) {
-      val tagged = grp.getType.containsField("batch_id")
       // duplicate-tag collapse: replicas of a replayed append are
       // bit-identical, so keeping the first seen is exact
-      val skip = tagged && !seen.add(grp.getString("batch_id", 0))
+      val skip = TaggedSidecar.rowTag(grp).exists(!seen.add(_))
       if (!skip) {
         nTotal += grp.getLong("n", 0)
         (gNames ++ bNames).foreach { name =>

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** Ranked retrieval over the document corpus: an inverted index
   * (postings + per-doc lengths + corpus totals) and BM25 scoring on
@@ -333,20 +334,12 @@ object Retrieval {
   // the corpus' postings is IDENTICAL to the from-scratch path (the
   // backing query proves it against the shared oracle). Batches must
   // partition the corpus by DOCUMENT (the q123/q133 contract): a doc
-  // split across appends would carry partial tf/dl rows.
-  //
-  // Replay safety (round 17 — the exactly-once rollout reaching this
-  // family): UNTAGGED appends keep the historical at-least-once
-  // caveat — a replayed batch double-appends, and a double-appended
-  // doclen row FANS OUT every candidate row for that doc at scoring
-  // time. Passing `batchId` retires it: rows carry a `batch_id`
-  // column and every read and compaction collapses duplicate
-  // (batch_id, key) rows first — replicas of a replayed append are
-  // bit-identical deterministic recomputes, so keeping one is exact.
-  // Tagged-ness is fixed at the first append; compacted rows carry
-  // the `__compacted__` sentinel, so compact only after in-flight
-  // batches are resolved (the compactState discipline where a
-  // manifest exists).
+  // split across appends would carry partial tf/dl rows. `batchId`
+  // makes both tables exactly-once ([[graft.sources.TaggedSidecar]]):
+  // postings replay key (term, doc_id), merge: sum of tf; doclen
+  // replay key doc_id, no merge. An untagged replay double-appends,
+  // and a doubled doclen row FANS OUT every candidate row of its doc
+  // at scoring time.
 
   /** Append one document batch's postings + doc lengths. Two tables
     * under one root: `<dir>/postings` (term, doc_id, tf) and
@@ -360,61 +353,31 @@ object Retrieval {
                            tokenizer: Column => Column =
                              TextAnalysis.tokens(_)): Unit = {
     val spark = batch.sparkSession
-    graft.sources.Sinks.assertBatchTagConsistent(
-      spark, s"$sidecarDir/postings", batchId.isDefined,
-      "writePostingsSidecar")
-    graft.sources.Sinks.assertBatchTagConsistent(
-      spark, s"$sidecarDir/doclen", batchId.isDefined,
-      "writePostingsSidecar")
-    def tag(df: DataFrame): DataFrame =
-      batchId.foldLeft(df)((d, id) => d.withColumn("batch_id", lit(id)))
+    TaggedSidecar.assertConsistent(spark, s"$sidecarDir/postings",
+      batchId.isDefined, "writePostingsSidecar")
+    TaggedSidecar.assertConsistent(spark, s"$sidecarDir/doclen",
+      batchId.isDefined, "writePostingsSidecar")
     graft.sources.Sinks.withDirLock(
       spark, sidecarDir, "writePostingsSidecar") {
-      tag(postings(batch, idCol, textCol, tokenizer))
+      TaggedSidecar.tag(postings(batch, idCol, textCol, tokenizer), batchId)
         .write.mode("append").parquet(s"$sidecarDir/postings")
-      tag(docLengths(batch, idCol, textCol, tokenizer))
+      TaggedSidecar.tag(docLengths(batch, idCol, textCol, tokenizer), batchId)
         .write.mode("append").parquet(s"$sidecarDir/doclen")
     }
   }
 
-  /** Duplicate-replay collapse for a tagged postings table: under the
-    * doc-disjoint batch contract a (term, doc_id) lives in exactly
-    * one batch, so one row per (batch_id, term, doc_id) is the
-    * no-replay state. Untagged tables pass through (the historical
-    * at-least-once contract). The tag column is dropped after the
-    * collapse — readers see the legacy shape. */
-  private def dedupedPostings(raw: DataFrame): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id", "term", "doc_id").drop("batch_id")
-    else raw
-
-  /** [[dedupedPostings]]' doclen twin: one row per (batch_id, doc_id). */
-  private def dedupedDoclens(raw: DataFrame): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id", "doc_id").drop("batch_id")
-    else raw
-
-  /** Many small appends → one file per table via the shared
-    * backup-swap compaction (its lock and crash-restore). Postings
-    * re-aggregate by (term, doc_id) — a no-op sum under the
-    * disjoint-batch contract; duplicate TAGGED appends collapse
-    * first, and compacted rows carry the `__compacted__` sentinel
-    * (compact only after in-flight batches are resolved — the
-    * standing tagged-sidecar discipline). */
+  /** Many small appends → one file per table
+    * ([[graft.sources.TaggedSidecar.compact]], one lock per table).
+    * Postings re-aggregate by (term, doc_id) — a no-op sum under the
+    * disjoint-batch contract. */
   def compactPostingsSidecar(spark: org.apache.spark.sql.SparkSession,
                              sidecarDir: String): Unit = {
-    def sentinel(raw: DataFrame, out: DataFrame): DataFrame =
-      if (raw.schema.fieldNames.contains("batch_id"))
-        out.withColumn("batch_id", lit(LinearProbe.CompactedBatchId))
-      else out
-    graft.sources.Sinks.compactParquetDir(spark, s"$sidecarDir/postings",
-      sortCol = Some("term"),
-      transform = Some(raw => sentinel(raw,
-        dedupedPostings(raw).groupBy(col("term"), col("doc_id"))
-          .agg(sum(col("tf")).as("tf")))))
-    graft.sources.Sinks.compactParquetDir(spark, s"$sidecarDir/doclen",
-      sortCol = Some("doc_id"),
-      transform = Some(raw => sentinel(raw, dedupedDoclens(raw))))
+    TaggedSidecar.compact(spark, s"$sidecarDir/postings",
+        Seq("term", "doc_id"), sortCol = Some("term")) {
+      _.groupBy(col("term"), col("doc_id")).agg(sum(col("tf")).as("tf"))
+    }
+    TaggedSidecar.compact(spark, s"$sidecarDir/doclen", Seq("doc_id"),
+      sortCol = Some("doc_id"))(identity)
   }
 
   /** BM25 scores computed FROM the sidecar — the corpus is never
@@ -429,8 +392,10 @@ object Retrieval {
                             tokenizer: Column => Column =
                               TextAnalysis.tokens(_)): DataFrame =
     scoreFrom(
-      dedupedPostings(spark.read.parquet(s"$sidecarDir/postings")),
-      dedupedDoclens(spark.read.parquet(s"$sidecarDir/doclen")),
+      TaggedSidecar.collapse(spark.read.parquet(s"$sidecarDir/postings"),
+        "term", "doc_id"),
+      TaggedSidecar.collapse(spark.read.parquet(s"$sidecarDir/doclen"),
+        "doc_id"),
       queries, dfCapRatio, tokenizer)
 
   /** Per-query top-k from the sidecar — [[bm25TopK]]'s ranking over

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** Deterministic, externally-replayable KMeans — the oracled twin of
   * the MLlib fits behind the ANN index family ([[Similarity]]).
@@ -394,13 +395,12 @@ object SeededKMeans {
           quantize(col(vecCol)).as("__q"))
         .withColumn("cell", assignCell(col("__q"), model.centroids))
         .select(col("vec_id"), col("vec"), col("cell"))
-      // batchId opts the index into the TAGGED lifecycle (round 18):
-      // the base rows carry the tag so every later append can be
-      // schema-checked consistent, and replayed append batches
-      // collapse at read/compaction. Untagged (legacy) indexes keep
-      // the at-least-once append caveat and the round-9 byte-identical
-      // rebuild property (q175) byte-for-byte.
-      batchId.foldLeft(base)((d, id) => d.withColumn("batch_id", lit(id)))
+      // batchId opts the index into the tagged lifecycle
+      // (graft.sources.TaggedSidecar): the base rows carry the tag so
+      // every later append can be schema-checked consistent. Untagged
+      // indexes keep the round-9 byte-identical rebuild property
+      // (q175) byte-for-byte.
+      TaggedSidecar.tag(base, batchId)
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$indexDir/vectors")
       model.centroids.zipWithIndex
@@ -424,28 +424,18 @@ object SeededKMeans {
     * — which is exactly what q182's oracle replays (unlike q132, where
     * the MLlib fit keeps the maintenance op rows-only).
     *
-    * Replay safety (round 18 — the exactly-once rollout reaching the
-    * incremental ANN ingest): an UNTAGGED append keeps the historical
-    * at-least-once caveat — a crash-recovery replay appends the
-    * batch's vectors twice, and a duplicated vector can occupy TWO of
-    * the k neighbor slots in stored-index answers. Passing `batchId`
-    * (unique per logical batch; requires an index built with a
-    * `batchId` so the vectors table is tagged — the schema-consistency
-    * assert fails loud on a mismatch) retires it: rows carry the tag,
-    * and [[annJoinIvfSeededStored]] / [[compactIvfVectorsSeeded]] keep
-    * ONE row per (batch_id, vec_id) before use. Replicas of a replayed
-    * append are bit-identical deterministic recomputes (the assignment
-    * is a pure argmin against STORED centroids), so keeping one is
-    * exact. */
+    * `batchId` makes it exactly-once ([[graft.sources.TaggedSidecar]];
+    * replay key vec_id, no merge) and needs an index built with a
+    * `batchId`. An untagged replay appends the batch's vectors twice,
+    * and a duplicated vector can fill two of the k neighbor slots. */
   def appendToIvfIndexSeeded(spark: SparkSession, indexDir: String,
                              df: DataFrame, idCol: String,
                              vecCol: String,
                              batchId: Option[String] = None): Unit =
     graft.sources.Sinks.withDirLock(spark, indexDir,
       "appendToIvfIndexSeeded") {
-      graft.sources.Sinks.assertBatchTagConsistent(
-        spark, s"$indexDir/vectors", batchId.isDefined,
-        "appendToIvfIndexSeeded")
+      TaggedSidecar.assertConsistent(spark, s"$indexDir/vectors",
+        batchId.isDefined, "appendToIvfIndexSeeded")
       val centroids = broadcast(spark.read.parquet(s"$indexDir/centroids"))
       val assigned = df.select(col(idCol).as("vec_id"),
           col(vecCol).cast("array<double>").as("vec"),
@@ -458,37 +448,19 @@ object SeededKMeans {
           struct(col("d2"), col("cell"))).as("__r"))
         .select(col("vec_id"), col("__r.vec").as("vec"),
           col("__r.cell").as("cell"))
-      batchId.foldLeft(assigned)((d, id) => d.withColumn("batch_id", lit(id)))
+      TaggedSidecar.tag(assigned, batchId)
         .write.mode("append").partitionBy("cell")
         .parquet(s"$indexDir/vectors")
     }
 
-  /** Duplicate-replay collapse for a tagged seeded-IVF vectors table:
-    * one row per (batch_id, vec_id) survives; untagged (legacy)
-    * indexes pass through. The tag is dropped after the collapse so
-    * probe plans see the legacy shape. */
-  private def dedupedVectors(raw: DataFrame): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id", "vec_id").drop("batch_id")
-    else raw
-
   /** Physically collapse replayed append duplicates and the
-    * small-files tax of many appends: one file set per cell,
-    * one row per (batch_id, vec_id) — re-tagged with the
-    * `__compacted__` sentinel — via the shared backup-swap compaction,
-    * cell partitioning preserved (probe plans keep pruning). Untagged
-    * indexes just get the file compaction. Run it on the ingest
-    * cadence, after in-flight batches are resolved (the
-    * standing tagged-sidecar discipline). */
+    * small-files tax of many appends: one file set per cell
+    * ([[graft.sources.TaggedSidecar.compact]]), cell partitioning
+    * preserved (probe plans keep pruning). Run it on the ingest
+    * cadence. */
   def compactIvfVectorsSeeded(spark: SparkSession, indexDir: String): Unit =
-    graft.sources.Sinks.compactParquetDir(spark, s"$indexDir/vectors",
-      partitionCols = Seq("cell"),
-      transform = Some { raw =>
-        if (raw.schema.fieldNames.contains("batch_id"))
-          dedupedVectors(raw).withColumn("batch_id",
-            lit(graft.ops.LinearProbe.CompactedBatchId))
-        else raw
-      })
+    TaggedSidecar.compact(spark, s"$indexDir/vectors", Seq("vec_id"),
+      partitionCols = Seq("cell"))(identity)
 
   /** Batch k-NN join through the stored seeded-IVF index
     * ([[Similarity.annJoinIvfStored]] twin, q175): probe cells picked
@@ -501,7 +473,8 @@ object SeededKMeans {
                              queries: DataFrame, idCol: String,
                              vecCol: String, k: Int, nprobe: Int,
                              roundTo: Int = 6): DataFrame = {
-    val vectors = dedupedVectors(spark.read.parquet(s"$indexDir/vectors"))
+    val vectors = TaggedSidecar.collapse(
+      spark.read.parquet(s"$indexDir/vectors"), "vec_id")
     val centroids = broadcast(spark.read.parquet(s"$indexDir/centroids"))
     val wProbe = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))

@@ -257,21 +257,18 @@ object Similarity {
   /** Append new vectors to a materialized IVF index WITHOUT refitting
     * — the incremental-ingest half of index maintenance (a nightly
     * embedding batch must not re-cluster the whole corpus): each new
-    * vector is assigned to its nearest STORED centroid — exact
-    * squared-euclidean argmin, ties to the lowest cell id, the
-    * rule `KMeans.transform` applies (unrounded, unlike the build's
-    * [[assignCells]]) — and appended to the
-    * cell-partitioned layout, where [[annJoinIvfStored]] sees it on
-    * its next scan with no other change.
+    * vector is assigned to its nearest STORED centroid by the build's
+    * own rule ([[assignCells]] at its default rounding: argmin of the
+    * distance rounded to 6 decimals, ties to the lowest cell id), so a
+    * vector lands in the cell a build over the same centroids would
+    * give it, and [[annJoinIvfStored]] sees it on its next scan with
+    * no other change.
     *
-    * Shape at scale: candidates come from a broadcast nested loop
-    * against the nlist-row centroid table (bounded build side), the
-    * per-vector × per-centroid distance is the FUSED codegen
-    * [[sqEuclidean]] expression (no interpreted HOF lambdas in the
-    * ingest hot path), and the argmin is a map-side-combining `min_by`
-    * — one narrow shuffle row per vector. Centroids drift as the
-    * corpus grows; rebuild with [[buildIvfIndex]] when cell-size skew
-    * warrants, serving reads from the appended index meanwhile. Same
+    * Shape at scale: the centroid table is collected (nlist rows, the
+    * bounded driver class) and the assignment is one in-row projection
+    * — no join, no shuffle. Centroids drift as the corpus grows;
+    * rebuild with [[buildIvfIndex]] when cell-size skew warrants,
+    * serving reads from the appended index meanwhile. Same
     * single-writer contract as
     * the dedup sidecar ([[graft.ops.Dedup.dedupAgainstSidecar]]),
     * ENFORCED by the `.lock` marker ([[graft.sources.Sinks
@@ -283,17 +280,8 @@ object Similarity {
                        indexDir: String, df: DataFrame,
                        idCol: String, vecCol: String): Unit =
     graft.sources.Sinks.withDirLock(spark, indexDir, "appendToIvfIndex") {
-      val centroids = broadcast(spark.read.parquet(s"$indexDir/centroids"))
-      val v = col(vecCol).cast("array<double>")
-      df.select(col(idCol).as("vec_id"), v.as("vec"))
-        .crossJoin(centroids) // bounded: build side is nlist rows
-        .select(col("vec_id"), col("vec"), col("cell"),
-          sqEuclidean(col("vec"), col("centroid")).as("dist2"))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("cell"), col("vec")),
-          struct(col("dist2"), col("cell"))).as("__r"))
-        .select(col("vec_id"), col("__r.vec").as("vec"),
-          col("__r.cell").as("cell"))
+      assignCells(df, idCol, vecCol, storedCentroids(spark, indexDir))
+        .select(col(idCol).as("vec_id"), col("vec"), col("cell"))
         .write.mode("append").partitionBy("cell")
         .parquet(s"$indexDir/vectors")
     }
@@ -735,6 +723,12 @@ object Similarity {
     }
   }
 
+  /** A stored index's centroid table, collected (nlist rows). */
+  private def storedCentroids(spark: org.apache.spark.sql.SparkSession,
+                              indexDir: String): Seq[(Int, Seq[Double])] =
+    spark.read.parquet(s"$indexDir/centroids")
+      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
+
   /** Batch k-NN join through the MATERIALIZED IVF index
     * ([[buildIvfIndex]]) — the production retrieval shape: a query
     * TABLE against a persisted, cell-partitioned index, no fit at
@@ -753,9 +747,7 @@ object Similarity {
                        indexDir: String, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .collect().map(r =>
-        (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
+    val centroids = storedCentroids(spark, indexDir)
     val probes = queries
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qvec"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** Mergeable sketch sidecars: bounded-size summaries written per shard
   * at ingest time and combined WITHOUT rescanning the data to answer
@@ -49,47 +50,20 @@ object Sketches {
     * contract as the other appenders ([[Dedup.dedupAgainstSidecar]]),
     * enforced by the `.lock` marker ([[graft.sources.Sinks
     * .withDirLock]]) — a concurrent second writer fails loud.
-    *
-    * Replay safety (round 18 — the last additive sidecar family to
-    * join the exactly-once rollout): the HLL estimates were always
-    * duplicate-insensitive (re-unioning a replayed sketch changes no
-    * register), but the exact `n_rows` companion DOUBLE-COUNTS under
-    * an at-least-once replay — untagged appends keep that historical
-    * caveat. Passing `batchId` (unique per logical shard) retires it:
-    * rows carry a `batch_id` column and every read ([[mergedDistinct]],
-    * [[compactSketchSidecar]]) keeps ONE row per
-    * (batch_id, group) before aggregating. Replicas of a replayed
-    * append carry identical exact counts and value-equal sketches
-    * (the HLL register state is a pure function of the value SET;
-    * serialized bytes may order sparse coupons differently, which the
-    * estimate is insensitive to), so keeping one is exact for
-    * `n_rows` AND estimate-exact for the sketch. Tagged-ness is fixed
-    * at the first append; compacted rows carry the `__compacted__`
-    * sentinel, so compact only after in-flight batches are resolved
-    * (the standing tagged-sidecar discipline). */
+    * `batchId` makes it exactly-once ([[graft.sources.TaggedSidecar]];
+    * replay key: the group columns; merge: sum of `n_rows`, union of
+    * sketches). The HLL estimate was always replay-insensitive; the
+    * exact `n_rows` is what an untagged replay double-counts. Replicas
+    * carry equal counts and value-equal sketches (serialized bytes may
+    * order sparse coupons differently, which the estimate ignores). */
   def writeSketchSidecar(df: DataFrame, groupCols: Seq[String],
                          valueCol: String, sidecarDir: String,
                          lgConfigK: Int = 12,
-                         batchId: Option[String] = None): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      df.sparkSession, sidecarDir, batchId.isDefined, "writeSketchSidecar")
-    graft.sources.Sinks.withDirLock(
-      df.sparkSession, sidecarDir, "writeSketchSidecar") {
-      batchId.foldLeft(distinctSketches(df, groupCols, valueCol, lgConfigK))(
-          (d, id) => d.withColumn("batch_id", lit(id)))
-        .write.mode("append").parquet(sidecarDir)
+                         batchId: Option[String] = None): Unit =
+    TaggedSidecar.append(df.sparkSession, sidecarDir, batchId,
+        "writeSketchSidecar") {
+      distinctSketches(df, groupCols, valueCol, lgConfigK)
     }
-  }
-
-  /** Duplicate-replay collapse for a tagged sketch sidecar: one row
-    * per (batch_id, group) survives; untagged dirs pass through (the
-    * pre-round-18 at-least-once contract). The tag is dropped after
-    * the collapse — readers see the legacy shape. */
-  private def dedupedSketchRows(raw: DataFrame,
-                                groupCols: Seq[String]): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id" +: groupCols).drop("batch_id")
-    else raw
 
   /** Per-period sketch table: one row per (`periodCol` value) with the
     * exact row count and the HLL sketch of `valueCol` — the
@@ -158,7 +132,8 @@ object Sketches {
     * the sidecar itself. */
   def mergedDistinct(spark: SparkSession, sidecarDir: String,
                      groupCols: Seq[String]): DataFrame = {
-    val side = dedupedSketchRows(spark.read.parquet(sidecarDir), groupCols)
+    val side = TaggedSidecar.collapse(spark.read.parquet(sidecarDir),
+      groupCols: _*)
     val aggs = Seq(
       sum(col("n_rows")).as("n_rows"),
       hll_sketch_estimate(hll_union_agg(col("sketch")))
@@ -168,25 +143,16 @@ object Sketches {
   }
 
   /** Many appended sketch rows → one merged row per group (counts
-    * summed, sketches unioned — lossless at equal precision) via the
-    * shared backup-swap compaction; duplicate tagged appends collapse
-    * BEFORE the merge and compacted rows carry the `__compacted__`
-    * sentinel (the [[graft.ops.Curation.compactTokenCountSidecar]]
-    * shape for sketches). */
+    * summed, sketches unioned — lossless at equal precision) via
+    * [[graft.sources.TaggedSidecar.compact]]. */
   def compactSketchSidecar(spark: SparkSession, sidecarDir: String,
                            groupCols: Seq[String]): Unit =
-    graft.sources.Sinks.compactParquetDir(spark, sidecarDir,
-      sortCol = groupCols.headOption,
-      transform = Some { raw =>
-        val merged = dedupedSketchRows(raw, groupCols)
-          .groupBy(groupCols.map(col): _*)
-          .agg(sum(col("n_rows")).as("n_rows"),
-            hll_union_agg(col("sketch")).as("sketch"))
-        if (raw.schema.fieldNames.contains("batch_id"))
-          merged.withColumn("batch_id",
-            lit(graft.ops.LinearProbe.CompactedBatchId))
-        else merged
-      })
+    TaggedSidecar.compact(spark, sidecarDir, groupCols,
+        sortCol = groupCols.headOption) {
+      _.groupBy(groupCols.map(col): _*)
+        .agg(sum(col("n_rows")).as("n_rows"),
+          hll_union_agg(col("sketch")).as("sketch"))
+    }
 
   /** Equi-width histogram of `valueCol` per group: one row per
     * (group, bin) with the EXACT count of values in that bin — the
@@ -230,47 +196,25 @@ object Sketches {
     * [[writeSketchSidecar]] lifecycle with exact additive counts.
     * (lo, hi, bins) MUST match across every appender of one sidecar:
     * bin ids are a function of all three (the same parameter contract
-    * as the minhash sidecar's band keys).
-    *
-    * Replay safety (round 17 — the exactly-once rollout reaching
-    * this family): UNTAGGED appends keep the historical
-    * at-least-once caveat — a replayed shard double-counts its bins.
-    * Passing `batchId` (unique per logical shard) retires it: rows
-    * carry a `batch_id` column and [[mergedHistogram]] collapses
-    * duplicate (batch_id, group, bin) rows first — replicas of a
-    * replayed append are bit-identical deterministic recomputes, so
-    * keeping one is exact. Tagged-ness is fixed at the first append. */
+    * as the minhash sidecar's band keys). `batchId` makes it
+    * exactly-once ([[graft.sources.TaggedSidecar]]; replay key: the
+    * group columns and `bin`; merge: sum of `cnt`). */
   def writeHistSidecar(df: DataFrame, groupCols: Seq[String],
                        valueCol: String, sidecarDir: String,
                        lo: Double, hi: Double, bins: Int,
-                       batchId: Option[String] = None): Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      df.sparkSession, sidecarDir, batchId.isDefined, "writeHistSidecar")
-    graft.sources.Sinks.withDirLock(
-      df.sparkSession, sidecarDir, "writeHistSidecar") {
-      batchId.foldLeft(histogram(df, groupCols, valueCol, lo, hi, bins))(
-          (d, id) => d.withColumn("batch_id", lit(id)))
-        .write.mode("append").parquet(sidecarDir)
+                       batchId: Option[String] = None): Unit =
+    TaggedSidecar.append(df.sparkSession, sidecarDir, batchId,
+        "writeHistSidecar") {
+      histogram(df, groupCols, valueCol, lo, hi, bins)
     }
-  }
-
-  /** Duplicate-replay collapse for a tagged histogram sidecar: one
-    * row per (batch_id, group, bin); untagged dirs pass through (the
-    * pre-round-17 at-least-once contract). The tag is dropped after
-    * the collapse — readers see the legacy shape. */
-  private def dedupedHist(raw: DataFrame,
-                          groupCols: Seq[String]): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id" +: groupCols :+ "bin")
-        .drop("batch_id")
-    else raw
 
   /** Merged per-group histogram from a sidecar: exact long sums per
     * (group, bin) — equal to a from-scratch build by additivity
-    * (duplicate tagged appends collapsed first). */
+    * (tagged replays collapsed first). */
   def mergedHistogram(spark: SparkSession, sidecarDir: String,
                       groupCols: Seq[String]): DataFrame =
-    dedupedHist(spark.read.parquet(sidecarDir), groupCols)
+    TaggedSidecar.collapse(spark.read.parquet(sidecarDir),
+        groupCols :+ "bin": _*)
       .groupBy((groupCols.map(col) :+ col("bin")): _*)
       .agg(sum(col("cnt")).as("cnt"))
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.TaggedSidecar
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, token counting, quality scoring, language ID, and
@@ -705,68 +706,39 @@ object TextAnalysis {
     * everything ingested, and the LM derived from it is BIT-EQUAL to
     * the from-scratch LM (q204 proves it against q196's oracle).
     * Batches must partition the corpus by DOCUMENT. Single writer via
-    * the dir lock.
-    *
-    * Replay safety (round 16, the batch-key discipline): untagged
-    * appends keep the historical at-least-once caveat — a replayed
-    * batch double-counts. Passing `batchId` (unique per logical
-    * batch) retires it: rows carry `batch_id` and every read
-    * ([[mergedBigramCounts]], [[compactBigramSidecar]]) collapses
-    * duplicate (batch_id, w1, w2) rows before summing — replicas of a
-    * replayed append are bit-identical deterministic recomputes, so
-    * the contract becomes exactly-once by construction (the
-    * token-count sidecar's q168 pattern; TextAnalysisSpec's
-    * deliberate double-append proves the LM no longer moves). */
+    * the dir lock. `batchId` makes it exactly-once
+    * ([[graft.sources.TaggedSidecar]]; replay key (w1, w2), merge: sum
+    * of c12); TextAnalysisSpec's deliberate double-append proves the
+    * LM no longer moves. */
   def writeBigramCountSidecar(batch: DataFrame, textCol: String,
                               sidecarDir: String,
                               batchId: Option[String] = None,
                               tokenizer: Column => Column = tokens(_))
-      : Unit = {
-    graft.sources.Sinks.assertBatchTagConsistent(
-      batch.sparkSession, sidecarDir, batchId.isDefined,
-      "writeBigramCountSidecar")
-    graft.sources.Sinks.withDirLock(
-      batch.sparkSession, sidecarDir, "writeBigramCountSidecar") {
-      batchId.foldLeft(corpusBigramCounts(batch, textCol, tokenizer))(
-          (df, id) => df.withColumn("batch_id", lit(id)))
-        .write.mode("append").parquet(sidecarDir)
+      : Unit =
+    TaggedSidecar.append(batch.sparkSession, sidecarDir, batchId,
+        "writeBigramCountSidecar") {
+      corpusBigramCounts(batch, textCol, tokenizer)
     }
-  }
 
-  /** Duplicate-replay collapse for tagged bigram sidecars (untagged
-    * dirs pass through — the pre-round-16 contract). */
-  private def dedupedC12(raw: DataFrame): DataFrame =
-    if (raw.schema.fieldNames.contains("batch_id"))
-      raw.dropDuplicates("batch_id", "w1", "w2")
-    else raw
+  private def sumC12(c12: DataFrame): DataFrame =
+    c12.groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
 
   /** Merged corpus bigram counts from the sidecar — one summed row
-    * per (w1, w2) over the appended partials, duplicates of tagged
-    * replays collapsed first. Safe on compacted AND uncompacted
-    * sidecars (the sum is the identity after compaction). */
+    * per (w1, w2) over the appended partials, tagged replays
+    * collapsed first. Safe on compacted AND uncompacted sidecars (the
+    * sum is the identity after compaction). */
   def mergedBigramCounts(spark: org.apache.spark.sql.SparkSession,
                          sidecarDir: String): DataFrame =
-    dedupedC12(spark.read.parquet(sidecarDir))
-      .select(col("w1"), col("w2"), col("c12"))
-      .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
+    sumC12(TaggedSidecar.collapse(spark.read.parquet(sidecarDir), "w1", "w2"))
 
-  /** Many small appends → one summed table via the shared backup-swap
-    * compaction; re-aggregation by (w1, w2) makes compaction converge
-    * even after an accidental double-append of the same batch (and
-    * tagged duplicates collapse BEFORE the sum — the exactly-once
-    * read discipline; compacted rows carry the sentinel tag). */
+  /** Many small appends → one summed table
+    * ([[graft.sources.TaggedSidecar.compact]]); re-aggregation by
+    * (w1, w2) makes compaction converge even after an accidental
+    * double-append of the same batch. */
   def compactBigramSidecar(spark: org.apache.spark.sql.SparkSession,
                            sidecarDir: String): Unit =
-    graft.sources.Sinks.compactParquetDir(spark, sidecarDir,
-      sortCol = Some("w1"),
-      transform = Some { raw =>
-        val summed = dedupedC12(raw)
-          .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
-        if (raw.schema.fieldNames.contains("batch_id"))
-          summed.withColumn("batch_id",
-            lit(graft.ops.LinearProbe.CompactedBatchId))
-        else summed
-      })
+    TaggedSidecar.compact(spark, sidecarDir, Seq("w1", "w2"),
+      sortCol = Some("w1"))(sumC12)
 
   /** Cross-entropy scoring FROM the sidecar — the corpus text is
     * never re-read to build the LM; only the docs being scored are

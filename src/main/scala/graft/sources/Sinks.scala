@@ -143,36 +143,9 @@ object Sinks {
     out.toSeq
   }
 
-  /** Guard for BATCH-TAGGED sidecars (round 16): a sidecar is tagged
-    * with a `batch_id` column from its FIRST append or never. Mixing
-    * tagged and untagged appends in one directory is the silent
-    * failure this check turns loud: parquet readers infer the schema
-    * from a sample of files, so a mixed dir can drop the `batch_id`
-    * column on read — and with it every replay-exclusion and
-    * duplicate-append defense the tag exists for. One footer read per
-    * append (the appenders already pay a listing for the dir lock),
-    * done DRIVER-SIDE with the parquet footer API (optimization round
-    * 18): `spark.read.parquet(dir).schema` spins up a parallel
-    * schema-inference job for the same one bit, and under this
-    * guard's own invariant every file in the dir agrees, so one
-    * footer is exact. */
-  private[graft] def assertBatchTagConsistent(spark: SparkSession,
-      dir: String, tagged: Boolean, op: String): Unit =
-    // dir missing or holding no data file (e.g. only a _SUCCESS
-    // marker) — the next append defines the schema
-    firstFooter(spark, dir).foreach { footer =>
-      val existingTagged = footer.getParquetMetadata.getFileMetaData
-        .getSchema.containsField("batch_id")
-      require(existingTagged == tagged,
-        s"$op: $dir is ${if (existingTagged) "batch-tagged" else "untagged"} " +
-          s"but this append is ${if (tagged) "tagged" else "untagged"} — " +
-          "a sidecar carries batch_id from its first append or never " +
-          "(mixed parquet schemas can silently drop the tag on read)")
-    }
-
   /** The footer of ONE data file of a parquet file or dir, read
     * driver-side; None when the path is missing or holds no data file. */
-  private def firstFooter(spark: SparkSession, dir: String)
+  private[sources] def firstFooter(spark: SparkSession, dir: String)
       : Option[org.apache.parquet.hadoop.Footer] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -231,9 +204,9 @@ object Sinks {
     * inference job computes with schema merging off (it also reads a
     * single footer, but as a Spark job: 30–100 ms of fixed cost per
     * read). For dirs whose files share one schema: the engine's own
-    * sidecars and tables, where [[assertBatchTagConsistent]] and the
-    * appenders keep it so. A dir with no data file falls through to
-    * the plain read (and its error). */
+    * sidecars and tables, where [[TaggedSidecar.assertConsistent]] and
+    * the appenders keep it so. A dir with no data file falls through
+    * to the plain read (and its error). */
   private[graft] def readParquet(spark: SparkSession, dir: String)
       : DataFrame =
     firstFooter(spark, dir).map { footer =>

@@ -101,6 +101,18 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("repetitionSignals: rows sharing a doc_id each give their own " +
+      "single-row result") {
+    val a = (7L, "a a a b")
+    val b = (7L, "a b c d")
+    def rows(in: Seq[(Long, String)]) =
+      Curation.repetitionSignals(in.toDF("doc_id", "text"))
+        .as[(Long, Long, Long, Double, Double, Double)].collect().toSeq
+    val single = rows(Seq(a)) ++ rows(Seq(b))
+    assert(single.length === 2 && single(0) != single(1))
+    assert(rows(Seq(a, b)).sortBy(_.toString) === single.sortBy(_.toString))
+  }
+
   test("vocabCoverage: ranks by count desc then word, cumulative share") {
     val docs = Seq((1L, "b b b a a c")).toDF("doc_id", "text")
     val got = Curation.vocabCoverage(docs, coverage = 0.85)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.TaggedSidecar
 import org.apache.spark.sql.functions._
 
 class LinearProbeSpec extends SparkSpec {
@@ -129,7 +130,7 @@ class LinearProbeSpec extends SparkSpec {
     LinearProbe.compactGramSidecar(spark, dir, 3)
     assert(spark.read.parquet(dir).select("batch_id").collect()
       .map(_.getString(0)).sorted.toSeq
-      === Seq(LinearProbe.CompactedBatchId, "__del__:b0"))
+      === Seq(TaggedSidecar.CompactedBatchId, "__del__:b0"))
     assert(LinearProbe.fitFromSidecar(spark, dir, 3, iters = 8).toSeq
       === afterDel.toSeq)
     // the takedown retried AFTER the cadenced compaction — the ADVICE

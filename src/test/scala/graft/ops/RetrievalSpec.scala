@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.TaggedSidecar
 import org.apache.spark.sql.functions._
 
 class RetrievalSpec extends SparkSpec {
@@ -141,7 +142,7 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.compactPostingsSidecar(spark, dir)
     assert(spark.read.parquet(s"$dir/postings").select($"batch_id")
       .distinct().as[String].collect().toSeq
-      === Seq(LinearProbe.CompactedBatchId))
+      === Seq(TaggedSidecar.CompactedBatchId))
     assert(rows(Retrieval.bm25TopKFromSidecar(spark, dir, query, k = 3))
       === oneShot)
     // mixed tagged/untagged appends fail loud, not silently drop tags

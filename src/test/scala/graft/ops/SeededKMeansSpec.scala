@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.TaggedSidecar
 import org.apache.spark.sql.functions._
 
 /** Contract tests for the deterministic md5-seeded KMeans
@@ -206,7 +207,7 @@ class SeededKMeansSpec extends SparkSpec {
     assert(compacted.count() ===
       emb.filter($"vec_id" % 2 === 0).count() + oddN)
     assert(compacted.select($"batch_id").distinct()
-      .as[String].collect().toSeq === Seq(LinearProbe.CompactedBatchId))
+      .as[String].collect().toSeq === Seq(TaggedSidecar.CompactedBatchId))
     assert(canon() === before)
     // a tagged append to an UNTAGGED index (and vice versa) fails loud
     val dirU = java.nio.file.Files

@@ -137,8 +137,9 @@ class SimilaritySpec extends SparkSpec {
     assert(stored.count() === emb.count())
     assert(stored.select("vec_id").distinct().count() === emb.count())
     // independent driver-side check: every appended row's cell is the
-    // exact squared-euclidean argmin over the stored centroids (ties
-    // to the lowest cell id — the KMeans.transform rule)
+    // build's rule over the stored centroids — argmin of the squared
+    // euclidean distance rounded to 6 decimals (Spark's HALF_UP
+    // `round`), ties to the lowest cell id
     val cents = spark.read.parquet(s"$dir/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     def sqdist(a: Array[Double], b: Array[Double]): Double = {
@@ -146,13 +147,16 @@ class SimilaritySpec extends SparkSpec {
       while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
       s
     }
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val appended = stored
       .join(newHalf.select($"vec_id"), "vec_id")
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
         r.getInt(2)))
     assert(appended.nonEmpty)
     appended.foreach { case (id, vec, cell) =>
-      val want = cents.minBy { case (c, cv) => (sqdist(vec, cv), c) }._1
+      val want =
+        cents.minBy { case (c, cv) => (round6(sqdist(vec, cv)), c) }._1
       assert(cell === want, s"vec $id in cell $cell, nearest centroid $want")
     }
     // the appended rows are immediately visible to the stored query
@@ -163,6 +167,26 @@ class SimilaritySpec extends SparkSpec {
     val neighbors = res.select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(res.count() > 0)
     assert(neighbors.exists(_ % 2 === 1), "no appended vector ever ranked")
+  }
+
+  test("appendToIvfIndex assigns by the build's rule: appended cells " +
+      "equal assignCells on the stored centroids") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_rule").toString
+    val emb = Tables.embeddings(spark, sf0001)
+    val seedHalf = emb.filter($"vec_id" % 2 === 0)
+    val newHalf = emb.filter($"vec_id" % 2 === 1)
+    val centroids =
+      Similarity.fitIvfCentroids(seedHalf, "vec_id", "embedding", nlist = 8)
+    Similarity.buildIvfIndex(seedHalf, "vec_id", "embedding", dir, centroids)
+    Similarity.appendToIvfIndex(spark, dir, newHalf, "vec_id", "embedding")
+    val stored = spark.read.parquet(s"$dir/vectors")
+      .join(newHalf.select($"vec_id"), "vec_id")
+      .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
+    val want = Similarity.assignCells(newHalf, "vec_id", "embedding",
+        centroids)
+      .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
+    assert(want.nonEmpty)
+    assert(stored === want)
   }
 
   test("appendToIvfIndex takes the indexDir lock: a held lock excludes " +

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.TaggedSidecar
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -175,7 +176,7 @@ class SketchesSpec extends SparkSpec {
     // the sentinel, and merged reads stay exact
     Sketches.compactSketchSidecar(spark, dir, Seq("source"))
     assert(spark.read.parquet(dir).select($"batch_id").distinct()
-      .as[String].collect().toSeq === Seq(LinearProbe.CompactedBatchId))
+      .as[String].collect().toSeq === Seq(TaggedSidecar.CompactedBatchId))
     assert(canon(Sketches.mergedDistinct(spark, dir, Seq("source")))
       === oneShot)
     // the UNTAGGED legacy contract demonstrably still double-counts —
