@@ -62,7 +62,10 @@ import org.apache.spark.sql.functions._
   * subtraction).
   *
   * Not part of the query registry: measurement harness, not an
-  * operator. Prints one JSON line for the round artifact. */
+  * operator. Prints one JSON line for the round artifact, carrying the
+  * run A, B and D output digests (`digest`, `forget_digest`,
+  * `unicode_forget_digest`), so two builds' lines can be compared
+  * directly. */
 object IncrementalDeepRun {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -262,6 +265,7 @@ object IncrementalDeepRun {
       f""""compact_sec":$compactJson,""" +
       f""""ingest_total_sec":${ingestWalls.sum}%.3f,""" +
       f""""finalize_sec":$finalizeSec%.3f,"identical":true,""" +
+      f""""digest":$dInc,"forget_digest":$dB,"unicode_forget_digest":$dD,""" +
       f""""deletions":1,"forget_shard":$forgetShard,""" +
       f""""forget_after":$forgetAfter,"retract_sec":$retractSec%.3f,""" +
       f""""retract_shards":${forgetAfter - forgetShard + 1},""" +

@@ -5,6 +5,7 @@ import graft.sources.Tables
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
 import org.apache.spark.ml.feature.{Imputer, StandardScaler, VectorAssembler}
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,10 +26,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale: every stage is a distributed MLlib estimator — Imputer is a
   * partial+final mean aggregate, StandardScaler/LogisticRegression fit
-  * via treeAggregate over executors, and the split sides that [[train]]
-  * persists stay on the executors (memory, spilling to disk). Nothing
-  * here collects the data to the driver, so the same code trains on 999
-  * rows or 10^9.
+  * via treeAggregate over executors, and the train side that [[train]]
+  * persists stays on the executors (memory, spilling to disk). The test
+  * side is read once, by a partial+final aggregate per distinct score,
+  * and one task folds that aggregate into the single summary row the
+  * driver receives ([[evaluate]]). Nothing here collects the data to
+  * the driver, so the same code trains on 999 rows or 10^9.
   */
 object LoanPipeline {
 
@@ -110,33 +113,97 @@ object LoanPipeline {
   }
 
   /** LR fit on `train` and evaluation on `test`, the two sides of one
-    * `randomSplit`. */
+    * `randomSplit`. Each side is read by the job that also yields its
+    * figures:
+    *  - train: narrowed after the split (so its per-partition sort and
+    *    row membership are unchanged) and persisted, since every action
+    *    on an unpersisted side re-runs randomSplit's sort over all
+    *    columns. One job builds the cache and counts it; LR's passes
+    *    then read the cache.
+    *  - test: not persisted. [[evaluate]]'s aggregate reads it once and
+    *    gives its count, accuracy and AUC. */
   private def fitAndEvaluate(prep: PipelineModel, train: DataFrame, test: DataFrame,
                              fitDf: DataFrame): LoanModelBundle = {
-    // Each split side is narrowed after the split (so its per-partition
-    // sort and row membership are unchanged) and persisted by the count
-    // that sizes it, since every action on an unpersisted side re-runs
-    // randomSplit's sort over all columns: the train side serves LR's
-    // passes, the scored test side the two evaluators.
     val needed = Seq(col("scaled_features"), col(Tables.loanLabelCol))
     val trainSet = train.select(needed: _*).persist()
+    // The RDD count is one job over the cached scan; `Dataset.count`
+    // would be three under AQE (cache stage, partial count, result).
     val (trainCount, lrModel) =
-      try (trainSet.count(), logisticRegression().fit(trainSet))
+      try (trainSet.queryExecution.toRdd.count(), logisticRegression().fit(trainSet))
       finally trainSet.unpersist()
-    val scored = lrModel.transform(test.select(needed: _*)).persist()
-    try {
-      val testCount = scored.count()
-      // The evaluators' sortByKey/aggregate stages inherit the partition
-      // count; one partition of the cached frame concatenates the cached
-      // partitions in split order.
-      val evalInput = scored.coalesce(1)
-      // Composing the fitted prep + LR into one PipelineModel: stages
-      // that are already Transformers are passed through by Pipeline.fit
-      // (no refit), so this is metadata-only.
-      val full = new Pipeline()
-        .setStages(Array[PipelineStage](prep, lrModel)).fit(fitDf.limit(1))
-      LoanModelBundle(full, auc(evalInput), accuracy(evalInput), trainCount, testCount)
-    } finally scored.unpersist()
+    val eval = evaluate(lrModel.transform(test.select(needed: _*)))
+    // Composing the fitted prep + LR into one PipelineModel: stages
+    // that are already Transformers are passed through by Pipeline.fit
+    // (no refit), so this is metadata-only.
+    val full = new Pipeline()
+      .setStages(Array[PipelineStage](prep, lrModel)).fit(fitDf.limit(1))
+    LoanModelBundle(full, eval.auc, eval.accuracy, trainCount, eval.testCount)
+  }
+
+  /** A scored side's row count, hits (prediction == label) and area
+    * under ROC, as [[evaluate]] returns them. */
+  final case class Evaluation(testCount: Long, hits: Long, auc: Double) {
+    def accuracy: Double = hits.toDouble / testCount.toDouble
+  }
+
+  /** `BinaryClassificationEvaluator`'s default `numBins`. */
+  private val AucBins = 1000
+
+  /** Count, accuracy ([[accuracy]]) and AUC ([[auc]]) of a scored frame
+    * (rawPrediction, prediction, label) in two jobs: a partial+final
+    * aggregate of rows, positives (label > 0.5) and hits per distinct
+    * score, and one task over that aggregate that returns one summary
+    * row to the driver. The task holds one entry per distinct score —
+    * the state MLlib's single-partition `BinaryClassificationMetrics`
+    * sort holds too.
+    *
+    * The AUC replicates `BinaryClassificationMetrics(numBins = 1000)
+    * .areaUnderROC` over one partition (a `coalesce(1)` input, as
+    * `LoanTrainEquivalenceSpec`'s reference formulation runs it): scores
+    * descending by
+    * `java.lang.Double.compare`; bins of `distinct / 1000` consecutive
+    * scores when that is ≥ 2, the remainder as the last bin; cumulative
+    * TPR/FPR with 0.0 for a zero denominator; (0,0) and (1,1) end
+    * points; trapezoids summed in order. Every count is an exact
+    * integer double, so the figures equal MLlib's bit for bit.
+    *
+    * Scores are keyed as MLlib keys them over one partition: its
+    * map-side combine compares (partition, score) tuples numerically,
+    * which merges 0.0 with -0.0, and its reduce side merges NaNs by
+    * `Double.equals` — the two normalizations SQL grouping applies. Over
+    * a multi-partition input MLlib can keep the zeros apart and sums
+    * per-partition areas in another order, so it may differ there. */
+  def evaluate(scored: DataFrame): Evaluation = {
+    val label = col(Tables.loanLabelCol)
+    val perScore = scored
+      .groupBy(vector_to_array(col("rawPrediction")).getItem(1).as("score"))
+      .agg(count(lit(1)), count_if(label > 0.5), count_if(col("prediction") === label))
+    perScore.coalesce(1).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(summarize(rows.map(r =>
+        (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3))))))
+      .collect().head
+  }
+
+  /** [[evaluate]]'s single-task fold over (score, rows, positives,
+    * hits), one entry per distinct score. */
+  private def summarize(perScore: Iterator[(Double, Long, Long, Long)]): Evaluation = {
+    val byScore = perScore.toArray
+      .sortWith((a, b) => java.lang.Double.compare(a._1, b._1) > 0)
+    val counts = byScore.map { case (_, rows, pos, _) => (pos, rows - pos) }
+    val grouping = counts.length / AucBins
+    val bins =
+      if (grouping < 2) counts
+      else counts.grouped(grouping).map(g => (g.map(_._1).sum, g.map(_._2).sum)).toArray
+    val (positives, negatives) = (counts.map(_._1).sum, counts.map(_._2).sum)
+    def rate(n: Long, total: Long) = if (total == 0) 0.0 else n.toDouble / total.toDouble
+    // (FPR, TPR) per cumulative bin; the scan's (0, 0) head is the
+    // curve's (0, 0) end point
+    val roc = bins.scanLeft((0L, 0L)) { case ((tp, fp), (pos, neg)) => (tp + pos, fp + neg) }
+      .map { case (tp, fp) => (rate(fp, negatives), rate(tp, positives)) } :+ ((1.0, 1.0))
+    val area = roc.iterator.zip(roc.iterator.drop(1)).foldLeft(0.0) {
+      case (sum, ((x0, y0), (x1, y1))) => sum + (x1 - x0) * (y1 + y0) / 2.0
+    }
+    Evaluation(byScore.map(_._2).sum, byScore.map(_._4).sum, area)
   }
 
   private val bundleCache =
@@ -153,7 +220,8 @@ object LoanPipeline {
     bundleCache.computeIfAbsent((path, seed, withMean, fitPrepOnTrainOnly),
       _ => train(spark, path, seed, withMean, fitPrepOnTrainOnly))
 
-  /** A4: area under ROC from (rawPrediction, label). */
+  /** A4: area under ROC from (rawPrediction, label), by MLlib's
+    * evaluator — the reference [[evaluate]]'s AUC is checked against. */
   def auc(scored: DataFrame): Double =
     new BinaryClassificationEvaluator()
       .setLabelCol(Tables.loanLabelCol)
@@ -161,8 +229,9 @@ object LoanPipeline {
       .setMetricName("areaUnderROC")
       .evaluate(scored)
 
-  /** A5: accuracy from (prediction, label). Cross-checked relationally
-    * in tests via avg(prediction == label). */
+  /** A5: accuracy from (prediction, label), by MLlib's evaluator — the
+    * reference [[evaluate]]'s accuracy is checked against. Cross-checked
+    * relationally in tests via avg(prediction == label). */
   def accuracy(scored: DataFrame): Double =
     new MulticlassClassificationEvaluator()
       .setLabelCol(Tables.loanLabelCol)

@@ -259,8 +259,9 @@ object Similarity {
     * embedding batch must not re-cluster the whole corpus): each new
     * vector is assigned to its nearest STORED centroid by the build's
     * own rule ([[assignCells]] at its default rounding: argmin of the
-    * distance rounded to 6 decimals, ties to the lowest cell id), so a
-    * vector lands in the cell a build over the same centroids would
+    * distance rounded to 6 decimals, ties to the lowest cell id). Neither
+    * [[buildIvfIndex]] nor this takes a rounding parameter, so a vector
+    * always lands in the cell a build over the same centroids would
     * give it, and [[annJoinIvfStored]] sees it on its next scan with
     * no other change.
     *
@@ -704,15 +705,19 @@ object Similarity {
     * touches ~nprobe/nlist of the stored bytes with zero
     * index-structure code, which is exactly how a stored ANN index
     * should behave on an object store. [[annJoinIvfStored]] and
-    * [[appendToIvfIndex]] both serve the layout. */
+    * [[appendToIvfIndex]] both serve the layout.
+    *
+    * Cells are assigned at [[assignCells]]' default rounding (6
+    * decimals), the one rule [[appendToIvfIndex]] also assigns by; the
+    * rounding is not a parameter, so no index can be built under a rule
+    * its appends would not follow. */
   def buildIvfIndex(df: DataFrame, idCol: String,
                     vecCol: String, indexDir: String,
-                    centroids: Seq[(Int, Seq[Double])],
-                    roundTo: Int = 6): Unit = {
+                    centroids: Seq[(Int, Seq[Double])]): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
     graft.sources.Sinks.withDirLock(spark, indexDir, "buildIvfIndex") {
-      assignCells(df, idCol, vecCol, centroids, roundTo)
+      assignCells(df, idCol, vecCol, centroids)
         .select(col(idCol).as("vec_id"), col("vec"), col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$indexDir/vectors")

@@ -3,13 +3,16 @@ package graft.ml
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import graft.SparkSpec
 import graft.sources.Tables
+import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
@@ -17,8 +20,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
 /** `LoanPipeline.train` against the formulation it replaced, on a
   * seeded loan CSV written here (so it needs no external dataset):
   * LR fit and both counts on the unpersisted split, the evaluators over
-  * `lrModel.transform(test).coalesce(1)`. Persisting the narrowed split
-  * sides must change no figure, and must not outlive the call. */
+  * `lrModel.transform(test).coalesce(1)`. Persisting the narrowed train
+  * side and evaluating the test side with `LoanPipeline.evaluate` must
+  * change no figure, and the persisted frame must not outlive the call. */
 class LoanTrainEquivalenceSpec extends SparkSpec {
   import LoanTrainEquivalenceSpec._
 
@@ -77,6 +81,36 @@ class LoanTrainEquivalenceSpec extends SparkSpec {
     val e = intercept[Exception](LoanPipeline.train(spark, unlabelled))
     assert(e.getMessage.contains("Labels MUST NOT be Null"), e.getMessage)
     assert(persisted() === before)
+  }
+
+  test("train runs no MLlib evaluator job, and one job reads the train side before LR") {
+    // (final-stage call site, every stage's name, persisted RDD ids) per job
+    val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, (String, Seq[String], Set[Int])]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.put(j.jobId, (j.stageInfos.maxBy(_.stageId).name, j.stageInfos.map(_.name),
+          j.stageInfos.flatMap(_.rddInfos.filter(_.storageLevel.isValid).map(_.id)).toSet))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      LoanPipeline.train(spark, csvDir)
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    val inOrder = jobs.values.asScala.toSeq
+    val evaluatorSites = inOrder.flatMap(_._2).filter(site =>
+      Seq("BinaryClassificationMetrics", "AreaUnderCurve", "MulticlassMetrics").exists(site.contains))
+    assert(evaluatorSites.isEmpty)
+    // LR's first treeAggregate reads the loan scan's cache, which the
+    // first (Imputer) job reads too, and the train side's
+    val firstLr = inOrder.indexWhere(_._1.startsWith("treeAggregate"))
+    assert(firstLr > 0, inOrder.map(_._1))
+    val trainSide = inOrder(firstLr)._3 -- inOrder.head._3
+    assert(trainSide.nonEmpty)
+    assert(inOrder.take(firstLr).count(_._3.exists(trainSide)) === 1, inOrder.map(_._1))
   }
 
   test("a repeat train on the same input compiles no generated class") {
