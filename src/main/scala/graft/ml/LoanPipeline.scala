@@ -7,8 +7,13 @@ import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, Multiclass
 import org.apache.spark.ml.feature.{Imputer, StandardScaler, VectorAssembler}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.expressions.{Ascending, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Sample, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's ML "query plan" (SURVEY.md §2.5 M1–M10) rebuilt as
   * one `org.apache.spark.ml.Pipeline`:
@@ -26,12 +31,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale: every stage is a distributed MLlib estimator — Imputer is a
   * partial+final mean aggregate, StandardScaler/LogisticRegression fit
-  * via treeAggregate over executors, and the train side that [[train]]
-  * persists stays on the executors (memory, spilling to disk). The test
-  * side is read once, by a partial+final aggregate per distinct score,
-  * and one task folds that aggregate into the single summary row the
-  * driver receives ([[evaluate]]). Nothing here collects the data to
-  * the driver, so the same code trains on 999 rows or 10^9.
+  * via treeAggregate over executors — and what [[train]] persists
+  * stays on the executors (memory, spilling to disk):
+  *  - the CSV scan, as plain rows (an RDD, not `Dataset.cache()`'s
+  *    compressed columns, whose encoding pass over all 34 columns cost
+  *    more than parsing the CSV), read by the preprocessing fits and by
+  *    the split, and released once the split is built;
+  *  - the split's one per-partition sort, narrowed to the columns the
+  *    rest of the fit reads, from which both sides are sampled; one job
+  *    builds it and counts the train side, and it is released when
+  *    [[train]] returns.
+  * The test side is read once, by a partial+final aggregate per
+  * distinct score, and one task folds that aggregate into the single
+  * summary row the driver receives ([[evaluate]]). Nothing here
+  * collects the data to the driver, so the same code trains on 999 rows
+  * or 10^9.
   */
 object LoanPipeline {
 
@@ -91,6 +105,14 @@ object LoanPipeline {
     * reference's train/test leakage (spark.py:55-59, SURVEY.md §4) —
     * then a seeded 80/20 Bernoulli split and an LR fit on train.
     *
+    * The scan is persisted once as rows and wrapped as a DataFrame; the
+    * first preprocessing job fills it. [[split]] sorts it once (after
+    * the preprocessing transform, or raw in the corrected mode) and
+    * persists the sorted rows narrowed; the job that counts the train
+    * side builds that cache, and the scan is released right after, so
+    * LR's iterations hold only the split. Both are released on return,
+    * also when a fit throws.
+    *
     * @param fitPrepOnTrainOnly corrected-mode option (no leakage):
     *   preprocessing statistics come from the train split only. */
   def train(spark: SparkSession,
@@ -98,39 +120,69 @@ object LoanPipeline {
             seed: Long = 42L,
             withMean: Boolean = false,
             fitPrepOnTrainOnly: Boolean = false): LoanModelBundle = {
-    val df = Tables.loan(spark, path).cache()
+    val scan = Tables.loan(spark, path)
+    // copied: the scan reuses one row buffer per task
+    val rows = scan.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      val df = ColumnBridge.rowsFrame(spark, rows, scan.schema)
+      def fitPrep(on: DataFrame) =
+        new Pipeline().setStages(preprocessingStages(withMean)).fit(on)
       if (!fitPrepOnTrainOnly) {
-        val prep = new Pipeline().setStages(preprocessingStages(withMean)).fit(df)
-        val Array(train, test) = prep.transform(df).randomSplit(Array(0.8, 0.2), seed)
-        fitAndEvaluate(prep, train, test, df)
-      } else {
-        val Array(trainRaw, testRaw) = df.randomSplit(Array(0.8, 0.2), seed)
-        val prep = new Pipeline().setStages(preprocessingStages(withMean)).fit(trainRaw)
-        fitAndEvaluate(prep, prep.transform(trainRaw), prep.transform(testRaw), df)
+        val prep = fitPrep(df)
+        split(prep.transform(df), LrInputs, seed, rows) { (train, test, trainCount) =>
+          fitAndEvaluate(prep, train, test, trainCount, df)
+        }
+      } else
+        split(df, Tables.loanFeatureCols :+ Tables.loanLabelCol, seed, rows) {
+          (trainRaw, testRaw, trainCount) =>
+            val prep = fitPrep(trainRaw)
+            fitAndEvaluate(prep, prep.transform(trainRaw), prep.transform(testRaw), trainCount, df)
+        }
+    } finally rows.unpersist()
+  }
+
+  /** The columns LR and [[evaluate]] read. */
+  private val LrInputs = Seq("scaled_features", Tables.loanLabelCol)
+
+  /** `frame.randomSplit(Array(0.8, 0.2), seed)`, as Spark 4.1's
+    * `Dataset.randomSplit` plans it — `Sort(<every orderable output
+    * column, ascending>, global = false)`, then per side `Sample(lb, ub,
+    * withReplacement = false, seed)` over the cumulative normalized
+    * weights, (0, 0.8) and (0.8, 1) — with the sort run once: the sorted rows, narrowed to
+    * `cols` after the sort, are persisted, and both sides sample that
+    * cache, so each side's rows and their order are `randomSplit`'s.
+    * One job builds the cache and counts the train side; `input` is
+    * then released, before `body` runs. The cache is released when
+    * `body` returns or throws. `body` gets (train, test, train count). */
+  private def split[A](frame: DataFrame, cols: Seq[String], seed: Long, input: RDD[_])
+                      (body: (DataFrame, DataFrame, Long) => A): A = {
+    val spark = frame.sparkSession
+    val plan = frame.queryExecution.analyzed
+    val order = plan.output.filter(a => RowOrdering.isOrderable(a.dataType)).map(SortOrder(_, Ascending))
+    val sorted = ColumnBridge.ofRows(spark, Sort(order, global = false, plan))
+      .select(cols.map(col): _*).persist()
+    try {
+      // the cumulative normalized weights of Array(0.8, 0.2)
+      val Seq(train, test) = Seq((0.0, 0.8), (0.8, 1.0)).map { case (lb, ub) =>
+        ColumnBridge.ofRows(spark, Sample(lb, ub, withReplacement = false, seed,
+          sorted.queryExecution.analyzed))
       }
-    } finally df.unpersist()
+      // One job over the sorted cache; `Dataset.count` would be three
+      // under AQE (cache stage, partial count, result).
+      val trainCount = train.queryExecution.toRdd.count()
+      input.unpersist()
+      body(train, test, trainCount)
+    } finally sorted.unpersist()
   }
 
   /** LR fit on `train` and evaluation on `test`, the two sides of one
-    * `randomSplit`. Each side is read by the job that also yields its
-    * figures:
-    *  - train: narrowed after the split (so its per-partition sort and
-    *    row membership are unchanged) and persisted, since every action
-    *    on an unpersisted side re-runs randomSplit's sort over all
-    *    columns. One job builds the cache and counts it; LR's passes
-    *    then read the cache.
-    *  - test: not persisted. [[evaluate]]'s aggregate reads it once and
-    *    gives its count, accuracy and AUC. */
+    * [[split]] (its cache is what both read): LR's passes read the
+    * train side, and [[evaluate]]'s aggregate reads the test side once
+    * and gives its count, accuracy and AUC. */
   private def fitAndEvaluate(prep: PipelineModel, train: DataFrame, test: DataFrame,
-                             fitDf: DataFrame): LoanModelBundle = {
-    val needed = Seq(col("scaled_features"), col(Tables.loanLabelCol))
-    val trainSet = train.select(needed: _*).persist()
-    // The RDD count is one job over the cached scan; `Dataset.count`
-    // would be three under AQE (cache stage, partial count, result).
-    val (trainCount, lrModel) =
-      try (trainSet.queryExecution.toRdd.count(), logisticRegression().fit(trainSet))
-      finally trainSet.unpersist()
+                             trainCount: Long, fitDf: DataFrame): LoanModelBundle = {
+    val needed = LrInputs.map(col)
+    val lrModel = logisticRegression().fit(train.select(needed: _*))
     val eval = evaluate(lrModel.transform(test.select(needed: _*)))
     // Composing the fitted prep + LR into one PipelineModel: stages
     // that are already Transformers are passed through by Pipeline.fit

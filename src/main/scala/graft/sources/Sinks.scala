@@ -118,28 +118,29 @@ object Sinks {
     * `_temporary/<attempt>/...` whose leaf names look like ordinary
     * parts, and a torn attempt file would make every footer/page read
     * throw (or, worse, an orphaned task-committed file would silently
-    * double-count) until an operator hand-cleaned the dir. */
+    * double-count) until an operator hand-cleaned the dir.
+    *
+    * Walks `listStatus` depth-first, in listing order (the order of
+    * `fs.listFiles(dir, true)`), without descending into hidden dirs,
+    * as Spark's own file index lists. `listFiles` returns
+    * `LocatedFileStatus`es, whose copy of a local file's permissions
+    * runs one `ls -ld` child process per entry; `listStatus` reads
+    * them only when asked. */
   private[graft] def listDataFiles(
       fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val base = fs.makeQualified(dir)
-    def hiddenUnderBase(p: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != base) {
-        if (hiddenName(cur.getName)) return true
-        cur = cur.getParent
+    val out = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
+    def walk(d: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(d).foreach { st =>
+        val shown = !hiddenName(st.getPath.getName)
+        if (st.isDirectory) { if (shown) walk(st.getPath) }
+        // a file `dir` lists as itself, whatever its name
+        else if (st.isFile && st.getLen > 0 &&
+            (shown || fs.makeQualified(st.getPath) == base)) out += st
       }
-      false
-    }
-    val out = scala.collection.mutable.ArrayBuffer[
-      org.apache.hadoop.fs.LocatedFileStatus]()
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getLen > 0 &&
-          !hiddenUnderBase(fs.makeQualified(f.getPath))) out += f
-    }
+    walk(base)
     out.toSeq
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
@@ -27,6 +27,9 @@ class LoanTrainEquivalenceSpec extends SparkSpec {
   import LoanTrainEquivalenceSpec._
 
   private lazy val csvDir: String = writeLoanCsv(labelled = true)
+  /** The same kind of rows with the IDs permuted across the files, so
+    * randomSplit's per-partition sort really reorders them. */
+  private lazy val shuffledCsvDir: String = writeLoanCsv(labelled = true, shuffledIds = true)
 
   private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
@@ -68,6 +71,20 @@ class LoanTrainEquivalenceSpec extends SparkSpec {
         s"fitPrepOnTrainOnly=$fitPrepOnTrainOnly)") {
       val got = LoanPipeline.train(spark, csvDir, 42L, withMean, fitPrepOnTrainOnly)
       val want = unpersistedSplitFigures(csvDir, 42L, withMean, fitPrepOnTrainOnly)
+      assert((got.auc, got.accuracy, got.trainCount, got.testCount) === want)
+    }
+
+  test("the shuffled-ID loan CSV scans out of ID order") {
+    val ids = Tables.loan(spark, shuffledCsvDir).select("ID").collect().map(_.getInt(0)).toSeq
+    assert(ids.sorted === (10000 until 10000 + FileCount * RowsPerFile))
+    assert(ids !== ids.sorted)
+  }
+
+  for ((withMean, fitPrepOnTrainOnly) <- Seq((false, false), (true, false), (false, true)))
+    test(s"train == the unpersisted-split formulation on rows in shuffled ID order " +
+        s"(withMean=$withMean, fitPrepOnTrainOnly=$fitPrepOnTrainOnly)") {
+      val got = LoanPipeline.train(spark, shuffledCsvDir, 42L, withMean, fitPrepOnTrainOnly)
+      val want = unpersistedSplitFigures(shuffledCsvDir, 42L, withMean, fitPrepOnTrainOnly)
       assert((got.auc, got.accuracy, got.trainCount, got.testCount) === want)
     }
 
@@ -113,6 +130,51 @@ class LoanTrainEquivalenceSpec extends SparkSpec {
     assert(inOrder.take(firstLr).count(_._3.exists(trainSide)) === 1, inOrder.map(_._1))
   }
 
+  test("train sorts once, caches no relation of the scan's columns, and holds no " +
+      "raw input through L-BFGS") {
+    // (final-stage call site, persisted RDD id -> name, stage ids) per job
+    val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, (String, Map[Int, String], Seq[Int])]()
+    val sortStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.put(j.jobId, (j.stageInfos.maxBy(_.stageId).name,
+          j.stageInfos.flatMap(_.rddInfos.filter(_.storageLevel.isValid).map(r => r.id -> r.name)).toMap,
+          j.stageIds))
+        ()
+      }
+      // SortExec's metric, reported by every task that ran a sort
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.accumulables.values.exists(_.name.contains("sort time"))) {
+          sortStages.add(s.stageInfo.stageId); ()
+        }
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      LoanPipeline.train(spark, csvDir)
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    val inOrder = jobs.values.asScala.toSeq
+    // An in-memory columnar relation's RDD is named after its plan, whose
+    // root node lists the relation's columns (the first 25 of them,
+    // `spark.sql.debug.maxToStringFields`).
+    val overScanColumns = inOrder.flatMap(_._2.values).distinct.filter { name =>
+      val root = name.linesIterator.nextOption().getOrElse("")
+      Tables.loanSchema.fieldNames.take(20).forall(f => root.contains(s"$f#"))
+    }
+    assert(overScanColumns.isEmpty, overScanColumns)
+    assert(inOrder.count(_._3.exists(sortStages.contains)) === 1, inOrder.map(_._1))
+    // the raw input is what the first (Imputer) job reads persisted
+    val rawInput = inOrder.head._2.keySet
+    assert(rawInput.nonEmpty)
+    val lossJobs = inOrder.filter(_._1.startsWith("treeAggregate at RDDLossFunction"))
+    assert(lossJobs.nonEmpty, inOrder.map(_._1))
+    assert(lossJobs.forall(j => (j._2.keySet & rawInput).isEmpty))
+    // the test side's collect is the last job: composing the model runs none
+    assert(inOrder.last._1.startsWith("collect at LoanPipeline"), inOrder.map(_._1))
+  }
+
   test("a repeat train on the same input compiles no generated class") {
     LoanPipeline.train(spark, csvDir)
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -128,10 +190,14 @@ object LoanTrainEquivalenceSpec {
   /** `FileCount` CSV files (header + `RowsPerFile` rows each) over
     * `Tables.loanSchema` with a unique leading ID, about 10% nulls in
     * the imputed columns and a label drawn from a logistic model of the
-    * features (left empty when `labelled` is false). Returns the
+    * features (left empty when `labelled` is false). The IDs ascend in
+    * file order, or, with `shuffledIds`, are the same IDs permuted
+    * across the files (every other value is the same). Returns the
     * directory. */
-  def writeLoanCsv(labelled: Boolean, seed: Long = 20L): String = {
+  def writeLoanCsv(labelled: Boolean, seed: Long = 20L, shuffledIds: Boolean = false): String = {
     val rnd = new Random(seed)
+    val ascending = (0 until FileCount * RowsPerFile).map(10000 + _)
+    val ids = if (shuffledIds) new Random(seed + 1).shuffle(ascending) else ascending
     val dir: Path = Files.createTempDirectory("loan-equivalence")
     def nullable(v: String) = if (rnd.nextDouble() < 0.1) "" else v
     def round3(x: Double) = (math.round(x * 1000) / 1000.0).toString
@@ -148,7 +214,7 @@ object LoanTrainEquivalenceSpec {
         val status = if (rnd.nextDouble() < 1.0 / (1.0 + math.exp(-logit))) "1" else "0"
         Tables.loanSchema.fields.map { field =>
           field.name match {
-            case "ID" => (10000 + f * RowsPerFile + i).toString
+            case "ID" => ids(f * RowsPerFile + i).toString
             case "Status" => if (labelled) status else ""
             case "loan_amount" => amount.toString
             case "rate_of_interest" => nullable(round3(rate))

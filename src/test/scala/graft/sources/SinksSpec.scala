@@ -100,6 +100,38 @@ class SinksSpec extends SparkSpec {
     assert(listed === Seq("_shard_id=a/part-0.parquet"))
   }
 
+  test("listDataFiles lists the paths, in the order, that the listFiles walk it " +
+      "replaced gives") {
+    val dir = Files.createTempDirectory("graft-list-order")
+    Seq("part-0.parquet", "_SUCCESS", ".part-0.parquet.crc",
+        "_temporary/0/_temporary/attempt_0/part-1.parquet", "_temporary/0/part-2.parquet",
+        ".hidden/part-3.parquet", "b=1/part-4.parquet", "b=1/c=x/part-5.parquet",
+        "b=1/_SUCCESS", "b=1/.part-4.parquet.crc", "b=2/part-6.parquet",
+        "a=0/part-7.parquet", "empty/part-8.parquet", "part-9.parquet").foreach { rel =>
+      val p = dir.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, if (rel.startsWith("empty/")) Array.emptyByteArray else Array[Byte](1))
+    }
+    val path = new org.apache.hadoop.fs.Path(dir.toString)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the former body: every file of `fs.listFiles(dir, true)` with no
+    // hidden component below `dir`
+    val base = fs.makeQualified(path)
+    def hiddenUnderBase(p: org.apache.hadoop.fs.Path): Boolean =
+      Iterator.iterate(p)(_.getParent).takeWhile(c => c != null && c != base)
+        .exists { c => val n = c.getName
+          (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_") }
+    val it = fs.listFiles(base, true)
+    val former = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(f => f.isFile && f.getLen > 0 && !hiddenUnderBase(fs.makeQualified(f.getPath)))
+      .map(_.getPath).toList
+    assert(former.size === 6)
+    assert(Sinks.listDataFiles(fs, path).map(_.getPath) === former)
+    // a data file given as the path lists as itself
+    val file = new org.apache.hadoop.fs.Path(path, "part-0.parquet")
+    assert(Sinks.listDataFiles(fs, file).map(_.getPath) === Seq(fs.makeQualified(file)))
+  }
+
   test("Tables.table reads a table rewritten with a new schema in the same " +
       "JVM with that schema, never the old one's nulls") {
     import spark.implicits._
