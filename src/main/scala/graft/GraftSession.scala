@@ -14,8 +14,11 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.buffer.pageSize` from the master's thread count
   *    ([[tungstenPageSize]]);
   *  - UTC session timezone (oracle/cross-engine parity);
-  *  - [[sessionConfs]]: the join strategy and a codegen cache sized to
-  *    the engine's working set;
+  *  - [[sessionConfs]]: the join strategy, a codegen cache sized to
+  *    the engine's working set, and the `file:` filesystem
+  *    ([[graft.sources.NioLocalFileSystem]]: Hadoop's checksummed local
+  *    filesystem, permissions set in-process instead of by a forked
+  *    `chmod` per created file and dir);
   *  - [[GraftExtensions]]: `cosine_sim` & co. resolve in SQL, plus the
   *    top-k planner strategy and its conf-gated rewrite rule.
   *
@@ -54,8 +57,8 @@ object GraftSession {
   }
 
   /** Configuration [[builder]] applies to every engine entry point:
-    * the join strategy (optimization round 19) and the codegen cache
-    * size.
+    * the join strategy (optimization round 19), the codegen cache
+    * size and the local filesystem's class.
     *
     * Sort-merge was the de-facto strategy for all non-broadcast joins;
     * the q188 final adaptive plan showed each PageRank iteration
@@ -92,12 +95,30 @@ object GraftSession {
     * of a 10–11 s iteration on 4 cores. 1000 entries (about 5× the
     * largest working set) make every repeat call a cache hit: 0
     * compiles per iteration after the first. The entry is static, so
-    * it sizes the cache only when set before the JVM's first codegen. */
+    * it sizes the cache only when set before the JVM's first codegen.
+    *
+    * Local filesystem. [[graft.sources.NioLocalFileSystem]] is Hadoop's
+    * checksummed `LocalFileSystem` with file permissions set through
+    * `java.nio`: without libhadoop (the Spark distribution ships none)
+    * Hadoop forks one `chmod` per file and dir it creates. JFR
+    * `jdk.ProcessStart` over one `curation_ingest` run (warm-up + 1
+    * iteration): 282 child processes, 277 of them `chmod` at 2–3 ms
+    * each, serial on the driver thread or in a one-task job; 6 and none
+    * with this entry. Hadoop caches filesystems by scheme, authority
+    * and user, not by conf, so the first `file:` filesystem a JVM
+    * creates fixes the class: build the session before any Hadoop
+    * local-filesystem use, as every main does. Without the entry the
+    * `file:` class is whichever service-loaded registration comes last
+    * on the classpath, Hadoop's `LocalFileSystem` or Hive's
+    * `ProxyLocalFileSystem` (hive-exec registers both). Only `file:`
+    * paths are affected. */
   val sessionConfs: Seq[(String, String)] = Seq(
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
       (64L << 20).toString,
-    "spark.sql.codegen.cache.maxEntries" -> "1000")
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.sources.NioLocalFileSystem].getName)
 
   /** Executor threads of the engine's entry points:
     * `SPARK_GRAFT_CPUS`, else every available processor. */
